@@ -90,6 +90,16 @@ def test_in_place_merge_cycle_and_date_pruning(spark, sf_dir, tmp_path):
     keys = ["game_id", "time_remaining", "quarter"]
     assert merged.count() == merged.select(*keys).distinct().count()
     assert merged.count() >= n1
+    # every row whose year/month/day parse to a date carries that date
+    # as its game_date — the second merge's delta rows too (the date is
+    # derived on the delta, before the merge; deriving it on the merged
+    # frame left delta rows NULL, since the archive side already has
+    # the column)
+    parsed = F.to_date(
+        F.concat_ws("-", F.col("year"), F.lpad("month", 2, "0"), F.lpad("day", 2, "0"))
+    )
+    wrong = merged.where(parsed.isNotNull() & ~F.col("game_date").eqNullSafe(parsed))
+    assert wrong.count() == 0
 
     # game_date layout: a date predicate lands in PartitionFilters
     # (synth rows with unparseable dates land in the null partition, so

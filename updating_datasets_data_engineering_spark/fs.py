@@ -63,6 +63,14 @@ def _fs_and_path(spark: SparkSession, path: str):
     return fs, hpath
 
 
+def qualified(spark: SparkSession, path: str) -> str:
+    """``path`` as the FileSystem spells the paths it lists (scheme and
+    authority made explicit), so listed names can be taken relative
+    to it."""
+    fs, p = _fs_and_path(spark, path)
+    return str(fs.makeQualified(p).toString())
+
+
 def exists(spark: SparkSession, path: str) -> bool:
     fs, p = _fs_and_path(spark, path)
     return bool(fs.exists(p))
@@ -103,6 +111,16 @@ def list_files(
         if suffix is None or name.endswith(suffix):
             out.append((name, int(st.getLen())))
     return out
+
+
+def glob(spark: SparkSession, pattern: str) -> list[str]:
+    """Qualified paths matching a Hadoop glob ``pattern`` (one listing
+    call per pattern level, not a walk of every file below)."""
+    fs, p = _fs_and_path(spark, pattern)
+    statuses = fs.globStatus(p)
+    if statuses is None:
+        return []
+    return [str(s.getPath().toString()) for s in statuses]
 
 
 def has_parquet(spark: SparkSession, path: str) -> bool:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs, sinks
+from . import store as ST
 from .operators import ingest as I
 from .operators import merge as M
 
@@ -63,29 +64,27 @@ def run_merge_job(
       archive on any filesystem is seen, then merged — not replaced).
     """
     delta = spark.read.parquet(delta_path)
+    # derive the typed date on the DELTA, before the merge: the archive
+    # already carries the column, so unionByName(allowMissingColumns)
+    # would otherwise hand delta rows a NULL game_date
+    if "game_date" in partition_by and "game_date" not in delta.columns:
+        delta = delta.withColumn(
+            "game_date",
+            F.to_date(
+                F.concat_ws("-", F.col("year"), F.lpad("month", 2, "0"), F.lpad("day", 2, "0"))
+            ),
+        )
     fs.recover_swap(spark, archive_path)
     if fs.has_parquet(spark, archive_path):
         archive = spark.read.parquet(archive_path)
         merged = M.merge_anti_join(archive, delta, key=list(key))
     else:
         merged = delta.dropDuplicates(list(key))
-    if "game_date" in partition_by and "game_date" not in merged.columns:
-        merged = merged.withColumn(
-            "game_date",
-            F.to_date(
-                F.concat_ws("-", F.col("year"), F.lpad("month", 2, "0"), F.lpad("day", 2, "0"))
-            ),
-        )
     missing = [c for c in partition_by if c not in merged.columns]
     if missing:
         raise ValueError(f"partition columns {missing} not in merged schema")
     if out_path == archive_path:
-        staging = fs.staging_path(out_path)
-        fs.delete(spark, staging)
-        sinks.write_partitioned_archive(merged, staging, partition_by=partition_by)
-        # the write action above already materialized the staging files —
-        # no read-back pass before the swap (the _swap_in discipline)
-        fs.swap_directory(spark, staging, out_path)
+        ST.swap(spark, merged, out_path, partition_by=partition_by)
     else:
         sinks.write_partitioned_archive(merged, out_path, partition_by=partition_by)
     if export_tgz:

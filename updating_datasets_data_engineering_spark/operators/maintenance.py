@@ -9,11 +9,12 @@ operator here is the engine-native equivalent for plain Parquet.)
 All filesystem access goes through the Hadoop FileSystem API (the
 ``fs`` module), so compaction works against file://, HDFS, or s3a://
 paths — the reference's archives live on S3
-(reference: scripts/spark_merge_dfs.py:108-121).  The swap uses the
-crash-safe rename-aside protocol (fs.swap_directory): the previous
-round's rmtree-then-move had a window where the only copy of the table
-sat in an unreferenced temp dir, and shutil.move across filesystems
-silently degraded to a non-atomic copy (round-1 ADVICE item 3).
+(reference: scripts/spark_merge_dfs.py:108-121).  Every rewrite is a
+``store.swap``: staging next to the target, then the crash-safe
+rename-aside (the previous round's rmtree-then-move had a window where
+the only copy of the table sat in an unreferenced temp dir, and
+shutil.move across filesystems silently degraded to a non-atomic copy
+— round-1 ADVICE item 3).
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import fs
+from .. import store as ST
 
 
 def parquet_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -47,13 +49,7 @@ def compact(
     fs.recover_swap(spark, path)
     files_before, total_bytes = parquet_file_stats(spark, path)
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(path)
-    staging = fs.staging_path(path)
-    fs.delete(spark, staging)
-    df.repartition(n_files).write.mode("overwrite").parquet(staging)
-    # the write action above already materialized the staging files —
-    # no read-back pass before the swap (the _swap_in discipline)
-    fs.swap_directory(spark, staging, path)
+    ST.swap(spark, spark.read.parquet(path).repartition(n_files), path)
     files_after, _ = parquet_file_stats(spark, path)
     return files_before, files_after
 
@@ -95,19 +91,8 @@ def compact_batch_index(
     fs.recover_swap(spark, path)
     files_before, total_bytes = parquet_file_stats(spark, path)
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.parquet(path)
-    compacted = df.withColumn("_batch_id", F.lit(-1).cast("long"))
-    staging = fs.staging_path(path)
-    fs.delete(spark, staging)
-    (
-        compacted.repartition(n_files)
-        .write.mode("overwrite")
-        .partitionBy("_batch_id")
-        .parquet(staging)
-    )
-    # the write action above already materialized the staging files —
-    # no read-back pass before the swap (the _swap_in discipline)
-    fs.swap_directory(spark, staging, path)
+    compacted = spark.read.parquet(path).drop(ST.BATCH_COL).repartition(n_files)
+    ST.swap_tier(spark, compacted, path, ST.COMPACTED)
     files_after, _ = parquet_file_stats(spark, path)
     return files_before, files_after
 
@@ -156,18 +141,7 @@ def compact_additive_partials(
     df = spark.read.parquet(path)
     aggs = [F.sum(c).alias(c) for c in sums]
     folded = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-    compacted = folded.withColumn("_batch_id", F.lit(-1).cast("long"))
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    staging = fs.staging_path(path)
-    fs.delete(spark, staging)
-    (
-        compacted.repartition(n_files)
-        .write.mode("overwrite")
-        .partitionBy("_batch_id")
-        .parquet(staging)
-    )
-    # the write action above already materialized the staging files —
-    # no read-back pass before the swap (the _swap_in discipline)
-    fs.swap_directory(spark, staging, path)
+    ST.swap_tier(spark, folded.repartition(n_files), path, ST.COMPACTED)
     files_after, _ = parquet_file_stats(spark, path)
     return files_before, files_after

@@ -927,12 +927,17 @@ def _aqe_cached_builds(fn: Callable[[SparkSession, str], DataFrame]):
     protocol measured it harmful) keep Spark's default."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        prev = spark.conf.get(_AQE_CACHE_CONF, "false")
+        # restore exactly what was there: an unset conf is unset again,
+        # not pinned to its default
+        prev = spark.conf.get(_AQE_CACHE_CONF, None)
         spark.conf.set(_AQE_CACHE_CONF, "true")
         try:
             return fn(spark, sf_dir)
         finally:
-            spark.conf.set(_AQE_CACHE_CONF, prev)
+            if prev is None:
+                spark.conf.unset(_AQE_CACHE_CONF)
+            else:
+                spark.conf.set(_AQE_CACHE_CONF, prev)
 
     return wrapped
 

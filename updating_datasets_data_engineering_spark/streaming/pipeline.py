@@ -31,50 +31,61 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import caching, fs
+from .. import store as ST
 from ..operators import ingest as I
 from ..operators import merge as M
 
 
-def _parallel_store_writes(*thunks) -> None:
-    """Run a batch's independent store writes as CONCURRENT Spark jobs
-    (optimization guide §2.6 — overlap independent jobs so one write's
-    straggler tail back-fills with the next write's tasks).
+def _split_tombstones(batch: DataFrame, op_col, delete_op, id_col: str, value_col: str):
+    """(tombstone ids or None, insert rows) of a CDC micro-batch: rows
+    whose ``op_col`` equals ``delete_op`` retract their id, every other
+    row inserts.  Without an op column the whole batch inserts."""
+    from pyspark.sql import functions as F
 
-    Every caller's writes target DISJOINT paths and hang off lineage
-    whose shared parents are ``tracked_persist``-ed: concurrent jobs
-    that need the same cached partition share one computation
-    (BlockManager's per-block load lock), so parallelism never
-    duplicates the maintenance compute — it only collapses per-job
-    scheduling latency and tail idle time, which dominate these
-    small-store writes (r13 phase probe: 3–5 sequential store writes of
-    0.3–2.8 s each per micro-batch across the streaming maintainers).
+    if op_col is None or op_col not in batch.columns:
+        return None, batch.select(id_col, value_col)
+    tomb = batch.where(F.col(op_col) == delete_op).select(id_col).distinct()
+    return tomb, batch.where(F.col(op_col) != delete_op).select(id_col, value_col)
 
-    Crash semantics are unchanged: each write was already individually
-    idempotent (``_batch_id``-partitioned dynamic overwrite or
-    stage-and-swap) and every reader gates each store separately, so a
-    crash leaving an arbitrary SUBSET of the batch's stores written
-    replays exactly like the sequential prefix did.  Exceptions
-    propagate after all submitted writes settle — the batch fails and
-    availableNow replays it.  ``SPARK_GRAFT_SERIAL_WRITES=1`` restores
-    sequential writes (the A/B arm and a debugging aid)."""
-    import os
 
-    if len(thunks) == 1 or os.environ.get("SPARK_GRAFT_SERIAL_WRITES") == "1":
-        for t in thunks:
-            t()
-        return
-    from concurrent.futures import ThreadPoolExecutor
+def _retract_rows(spark, path: str, tomb: DataFrame, id_col: str) -> None:
+    """Drop the tombstoned ids from a tiered store (a deletion touches
+    every tier, so it is a whole-store swap that keeps the tiers)."""
+    from ..operators import dedup as D
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        errs = []
-        for f in futures:
-            try:
-                f.result()
-            except Exception as exc:  # settle all writes, then re-raise
-                errs.append(exc)
-        if errs:
-            raise errs[0]
+    ST.swap(
+        spark,
+        D.retract_index_rows(spark.read.parquet(path), tomb, id_col),
+        path,
+        partition_by=(ST.BATCH_COL,),
+    )
+
+
+def _upsert_view(spark, path: str, rows: DataFrame, replaced: DataFrame) -> DataFrame:
+    """The stored view with the keys in ``replaced`` (its columns are
+    the key) swapped for ``rows`` — just ``rows`` before the view's
+    first swap."""
+    if not fs.has_parquet(spark, path):
+        return rows
+    prev = spark.read.parquet(path)
+    return prev.join(replaced, replaced.columns, "left_anti").unionByName(rows)
+
+
+def _frozen_centroids(spark, delta: DataFrame, path: str, n_cells: int, id_col: str, vec_col: str):
+    """The coarse quantizer, frozen from the first batch's ``n_cells``
+    smallest ids (deterministic under crash replay): cell assignment
+    must run against a fixed centroid set, or a replayed batch would
+    land vectors in different cells.  Written once, read thereafter."""
+    from pyspark.sql import functions as F
+
+    if not fs.has_parquet(spark, path):
+        cents = (
+            delta.orderBy(id_col)
+            .limit(n_cells)
+            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        )
+        ST.swap(spark, cents, path)
+    return spark.read.parquet(path)
 
 
 def read_json_record_stream(
@@ -166,9 +177,9 @@ def upsert_each_batch(
                 )
             else:
                 merged = M.merge_anti_join(archive, delta, key=list(key))
-            # shared empty-safe swap: a CDC batch that tombstones the
-            # whole archive must leave a readable empty store
-            _swap_in(spark, merged, archive_path)
+            # empty-safe swap: a CDC batch that tombstones the whole
+            # archive must leave a readable empty store
+            ST.swap(spark, merged, archive_path)
 
     return _apply
 
@@ -191,35 +202,16 @@ def append_finalized_each_batch(served_path: str):
     exactly-once per key (a duplicate key would have been a no-op merge
     there and would fail the batch-recompute oracle here).
 
-    Bootstrap/empty edges: the first write goes through ``_swap_in`` so
-    an all-empty prefix still leaves a schema-bearing (flat, empty)
-    store; the first non-empty batch over that flat store re-swaps it
-    into the partitioned layout (it holds zero rows by construction —
-    only the empty edge writes flat).  No per-batch ``isEmpty`` probe:
-    a dynamic-overwrite write of an empty frame touches no partitions,
-    so the batch plan executes exactly once either way."""
-
-    from pyspark.sql import functions as F
+    Bootstrap/empty edges are the store's (``store.append``): an
+    all-empty prefix still leaves a schema-bearing store, and the first
+    non-empty batch moves it to the tiered layout.  No per-batch
+    ``isEmpty`` probe: a dynamic-overwrite write of an empty frame
+    touches no partitions, so the batch plan executes exactly once
+    either way."""
 
     def _apply(delta: DataFrame, batch_id: int) -> None:
-        spark = delta.sparkSession
-        delta = delta.drop("event_time")
-        fs.recover_swap(spark, served_path)
-        tagged = delta.withColumn(
-            "_batch_id", F.lit(batch_id).cast("long")
-        )
-        if fs.has_parquet(spark, served_path) and any(
-            "_batch_id=" in p
-            for p, _ in fs.list_files(spark, served_path, ".parquet")
-        ):
-            (
-                tagged.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(served_path)
-            )
-        else:
-            _swap_in(spark, tagged, served_path, partition_by="_batch_id")
+        fs.recover_swap(delta.sparkSession, served_path)
+        ST.append(delta.drop("event_time"), served_path, batch_id)
 
     return _apply
 
@@ -484,53 +476,28 @@ def maintain_minhash_index_each_batch(
 
     from ..operators import dedup as D
 
-    def _swap_overwrite(df: DataFrame, path: str, partition_col: str | None) -> None:
-        """Rewrite persisted state through the crash-safe swap (a
-        deletion rewrite touches every partition, so the partition-
-        scoped idempotent overwrite doesn't apply; at real scale this
-        becomes a rewrite of only the partitions holding the deleted
-        ids).  Delegates to the shared empty-safe swap: a delete that
-        drains the store must not leave an unreadable data-file-less
-        directory."""
-        keep = partition_col if (partition_col and partition_col in df.columns) else None
-        _swap_in(df.sparkSession, df, path, partition_by=keep)
-
     def _apply(batch_docs: DataFrame, batch_id: int) -> None:
         spark = batch_docs.sparkSession
         for p in (docs_path, index_path, pairs_path, labels_path):
             if p is not None:
                 fs.recover_swap(spark, p)
-        if op_col is not None and op_col in batch_docs.columns:
-            tomb = batch_docs.where(F.col(op_col) == delete_op).select(id_col).distinct()
-            delta = batch_docs.where(F.col(op_col) != delete_op).select(id_col, text_col)
-        else:
-            tomb = None
-            delta = batch_docs.select(id_col, text_col)
+        tomb, delta = _split_tombstones(batch_docs, op_col, delete_op, id_col, text_col)
         # scoped release (ADVICE r4): drop only this batch's tracked
         # persists, even on failure — see upsert_each_batch
         with caching.scope():
             if tomb is not None and fs.has_parquet(spark, docs_path) and not tomb.isEmpty():
                 # labels retract FIRST — it replays the touched
                 # components' original pairs, so it needs the pair log
-                # before the tombstones prune it
+                # before the tombstones prune it.  Deletion rewrites
+                # touch every tier, so they are whole-store swaps (at
+                # real scale, a rewrite of only the tiers holding the
+                # deleted ids).
                 if labels_path is not None and fs.has_parquet(spark, labels_path):
                     labels = spark.read.parquet(labels_path)
                     plog = spark.read.parquet(pairs_path).select("id_a", "id_b")
-                    _swap_overwrite(
-                        D.retract_from_components(labels, plog, tomb),
-                        labels_path,
-                        None,
-                    )
-                _swap_overwrite(
-                    D.retract_index_rows(spark.read.parquet(docs_path), tomb, id_col),
-                    docs_path,
-                    "_batch_id",
-                )
-                _swap_overwrite(
-                    D.retract_index_rows(spark.read.parquet(index_path), tomb, "id"),
-                    index_path,
-                    "_batch_id",
-                )
+                    ST.swap(spark, D.retract_from_components(labels, plog, tomb), labels_path)
+                _retract_rows(spark, docs_path, tomb, id_col)
+                _retract_rows(spark, index_path, tomb, "id")
                 plog = spark.read.parquet(pairs_path)
                 pruned = plog.join(
                     F.broadcast(tomb.select(F.col(id_col).alias("id_a"))),
@@ -541,28 +508,16 @@ def maintain_minhash_index_each_batch(
                     "id_b",
                     "left_anti",
                 )
-                _swap_overwrite(pruned, pairs_path, "_batch_id")
+                ST.swap(spark, pruned, pairs_path, partition_by=(ST.BATCH_COL,))
             if delta.isEmpty():
                 return
-            if fs.has_parquet(spark, docs_path):
-                archive = (
-                    spark.read.parquet(docs_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select(id_col, text_col)
-                )
-                index = (
-                    spark.read.parquet(index_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select("id", "band_no", "band_key")
-                )
-            else:
-                archive = spark.createDataFrame([], delta.schema)
-                # id type derived from the batch schema (same id-type
-                # divergence guard as the containment maintainer)
-                id_t = delta.schema[id_col].dataType.simpleString()
-                index = spark.createDataFrame(
-                    [], f"id {id_t}, band_no int, band_key string"
-                )
+            # id type derived from the batch schema (same id-type
+            # divergence guard as the containment maintainer)
+            id_t = delta.schema[id_col].dataType.simpleString()
+            archive = ST.committed(spark, docs_path, batch_id, delta.schema)
+            index = ST.committed(
+                spark, index_path, batch_id, f"id {id_t}, band_no int, band_key string"
+            )
             pairs = D.incremental_minhash_pairs(
                 archive,
                 delta,
@@ -574,56 +529,33 @@ def maintain_minhash_index_each_batch(
                 ngram=ngram,
                 archive_index=index,
             )
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
-
-            def _append(df: DataFrame, path: str) -> None:
-                # per-write dynamic overwrite (ADVICE r4): scoping the
-                # mode to the DataFrameWriter leaves the session conf
-                # alone, so unrelated overwrite+partitionBy writes in
-                # the same application keep static semantics
-                (
-                    df.withColumn("_batch_id", batch_lit)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(path)
-                )
-
             band_index = D.minhash_band_index(
                 D.minhash_features(delta, id_col, text_col, ngram),
                 num_hashes,
                 band_size,
             )
-            # three independent appends on disjoint paths (the pairs
-            # plan's state reads were listed/pruned at plan time) —
-            # run concurrently; the labels fold below reads the pairs
-            # partition BACK and so stays after the barrier
-            _parallel_store_writes(
-                lambda: _append(pairs, pairs_path),
-                lambda: _append(band_index, index_path),
-                lambda: _append(delta, docs_path),
+            # three independent appends on disjoint paths; the labels
+            # fold below reads the pairs tier BACK and so stays after
+            # the barrier
+            ST.write_concurrently(
+                lambda: ST.append(pairs, pairs_path, batch_id),
+                lambda: ST.append(band_index, index_path, batch_id),
+                lambda: ST.append(delta, docs_path, batch_id),
             )
             if labels_path is not None:
-                # the day's pairs are read BACK from the written
-                # partition — re-executing the lazy plan after the index
-                # append would probe the delta against its own bands
-                # (the ordering hazard pinned in test_maintenance_ops)
-                day_pairs = (
-                    spark.read.parquet(pairs_path)
-                    .where(F.col("_batch_id") == batch_id)
-                    .select("id_a", "id_b")
-                )
-                id_t = delta.schema[id_col].dataType.simpleString()
+                # the day's pairs are read BACK from the written tier —
+                # re-executing the lazy plan after the index append
+                # would probe the delta against its own bands (the
+                # ordering hazard pinned in test_maintenance_ops)
+                day_pairs = ST.read_tier(spark, pairs_path, batch_id).select("id_a", "id_b")
                 prev = (
                     spark.read.parquet(labels_path)
                     if fs.has_parquet(spark, labels_path)
-                    else spark.createDataFrame(
-                        [], f"id {id_t}, cluster_id {id_t}"
-                    )
+                    else spark.createDataFrame([], f"id {id_t}, cluster_id {id_t}")
                 )
                 updated = D.incremental_components(prev, day_pairs)
                 new_store = prev.join(updated, "id", "left_anti").unionByName(updated)
-                _swap_overwrite(new_store, labels_path, None)
+                ST.swap(spark, new_store, labels_path)
 
     return _apply
 
@@ -669,73 +601,29 @@ def maintain_ann_index_each_batch(
     over the stored index equals the full-index recompute on the
     streamed prefix — asserted in tests/test_streaming.py.
     """
-    from pyspark.sql import functions as F
-
-    from ..operators import dedup as D
     from ..operators import similarity as SIM
-
-    def _swap_overwrite(df: DataFrame, path: str, partition_col: str | None) -> None:
-        keep = partition_col if (partition_col and partition_col in df.columns) else None
-        _swap_in(df.sparkSession, df, path, partition_by=keep)
 
     def _apply(batch_vecs: DataFrame, batch_id: int) -> None:
         spark = batch_vecs.sparkSession
         for p in (vectors_path, cells_path, centroids_path):
             fs.recover_swap(spark, p)
-        if op_col is not None and op_col in batch_vecs.columns:
-            tomb = batch_vecs.where(F.col(op_col) == delete_op).select(id_col).distinct()
-            delta = batch_vecs.where(F.col(op_col) != delete_op).select(id_col, vec_col)
-        else:
-            tomb = None
-            delta = batch_vecs.select(id_col, vec_col)
+        tomb, delta = _split_tombstones(batch_vecs, op_col, delete_op, id_col, vec_col)
         with caching.scope():
             if tomb is not None and fs.has_parquet(spark, vectors_path) and not tomb.isEmpty():
-                _swap_overwrite(
-                    D.retract_index_rows(
-                        spark.read.parquet(vectors_path), tomb, id_col
-                    ),
-                    vectors_path,
-                    "_batch_id",
-                )
-                _swap_overwrite(
-                    D.retract_index_rows(spark.read.parquet(cells_path), tomb, id_col),
-                    cells_path,
-                    "_batch_id",
-                )
+                _retract_rows(spark, vectors_path, tomb, id_col)
+                _retract_rows(spark, cells_path, tomb, id_col)
             if delta.isEmpty():
                 return
-            if not fs.has_parquet(spark, centroids_path):
-                # freeze the quantizer from the first batch's n_cells
-                # smallest ids — deterministic under crash replay
-                cents = (
-                    delta.orderBy(id_col)
-                    .limit(n_cells)
-                    .select(
-                        F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-                    )
-                )
-                _swap_overwrite(cents, centroids_path, None)
-            cents = spark.read.parquet(centroids_path)
+            cents = _frozen_centroids(spark, delta, centroids_path, n_cells, id_col, vec_col)
             assigned = SIM.ivf_assign_cells(
                 delta, n_cells, id_col=id_col, vec_col=vec_col, centroids=cents
             )
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
-
-            def _append(df: DataFrame, path: str) -> None:
-                (
-                    df.withColumn("_batch_id", batch_lit)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(path)
-                )
-
             # two independent appends on disjoint paths — run
             # concurrently (assignment and raw-vector stores share only
             # the batch input)
-            _parallel_store_writes(
-                lambda: _append(assigned, cells_path),
-                lambda: _append(delta, vectors_path),
+            ST.write_concurrently(
+                lambda: ST.append(assigned, cells_path, batch_id),
+                lambda: ST.append(delta, vectors_path, batch_id),
             )
 
     return _apply
@@ -802,34 +690,19 @@ def maintain_semantic_index_each_batch(
     ANY prefix the flags view equals the batch recompute on the
     surviving streamed prefix — asserted in tests/test_streaming.py.
     """
-    from pyspark.sql import functions as F
-
-    from ..operators import dedup as D
     from ..operators import similarity as SIM
 
     def _apply(batch_vecs: DataFrame, batch_id: int) -> None:
         spark = batch_vecs.sparkSession
         for p in (cells_path, flags_path, centroids_path):
             fs.recover_swap(spark, p)
-        if op_col is not None and op_col in batch_vecs.columns:
-            tomb = batch_vecs.where(F.col(op_col) == delete_op).select(id_col).distinct()
-            delta = batch_vecs.where(F.col(op_col) != delete_op).select(id_col, vec_col)
-        else:
-            tomb = None
-            delta = batch_vecs.select(id_col, vec_col)
+        tomb, delta = _split_tombstones(batch_vecs, op_col, delete_op, id_col, vec_col)
         with caching.scope():
             id_t = batch_vecs.schema[id_col].dataType.simpleString()
-            if fs.has_parquet(spark, cells_path):
-                cells_state = (
-                    spark.read.parquet(cells_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select(id_col, vec_col, "cell")
-                )
-            else:
-                vec_t = batch_vecs.schema[vec_col].dataType.simpleString()
-                cells_state = spark.createDataFrame(
-                    [], f"{id_col} {id_t}, {vec_col} {vec_t}, cell {id_t}"
-                )
+            vec_t = batch_vecs.schema[vec_col].dataType.simpleString()
+            cells_state = ST.committed(
+                spark, cells_path, batch_id, f"{id_col} {id_t}, {vec_col} {vec_t}, cell {id_t}"
+            )
             has_tomb = tomb is not None and not tomb.isEmpty()
             if has_tomb:
                 tomb = caching.tracked_persist(tomb)
@@ -842,8 +715,8 @@ def maintain_semantic_index_each_batch(
                 )
                 # replay guard (ADVICE r9 item 1): a crashed attempt of
                 # THIS batch may already have swapped its output in —
-                # restrict the retract state to ids the COMMITTED
-                # (_batch_id < batch_id) cell archive actually holds
+                # restrict the retract state to ids the COMMITTED cell
+                # archive actually holds
                 flags_state = flags_state.join(
                     cells_state.select(id_col), id_col, "left_semi"
                 )
@@ -862,43 +735,16 @@ def maintain_semantic_index_each_batch(
                 # files has materialized by then — swapping first left
                 # the lazy flags plan reading replaced paths
                 if has_tomb and fs.has_parquet(spark, cells_path):
-                    _swap_in(
-                        spark,
-                        D.retract_index_rows(
-                            spark.read.parquet(cells_path), tomb, id_col
-                        ),
-                        cells_path,
-                        partition_by="_batch_id",
-                    )
-
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
-
-            def _swap_flags(view: DataFrame) -> None:
-                # tombstone batches rewrite the view; keep it
-                # _batch_id-partitioned so later insert-only batches
-                # can still append their delta partition on top
-                _swap_in(
-                    spark,
-                    view.withColumn("_batch_id", batch_lit),
-                    flags_path,
-                    partition_by="_batch_id",
-                )
+                    _retract_rows(spark, cells_path, tomb, id_col)
 
             if delta.isEmpty():
                 if has_tomb:
-                    _swap_flags(flags_state)
+                    # tombstone batches rewrite the view as this batch's
+                    # tier; later insert-only batches append on top
+                    ST.swap_tier(spark, flags_state, flags_path, batch_id)
                     _retire_tombstones()
                 return
-            if not fs.has_parquet(spark, centroids_path):
-                # freeze the quantizer from the first batch's n_cells
-                # smallest ids — deterministic under crash replay
-                cents = (
-                    delta.orderBy(id_col)
-                    .limit(n_cells)
-                    .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-                )
-                _swap_in(spark, cents, centroids_path)
-            cents = spark.read.parquet(centroids_path)
+            cents = _frozen_centroids(spark, delta, centroids_path, n_cells, id_col, vec_col)
             d_cells = SIM.ivf_assign_cells(
                 delta, n_cells, id_col=id_col, vec_col=vec_col, centroids=cents
             )
@@ -927,55 +773,24 @@ def maintain_semantic_index_each_batch(
                     id_col=id_col,
                     vec_col=vec_col,
                 )
-            def _write_cells() -> None:
-                (
-                    d_cells.withColumn("_batch_id", batch_lit)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(cells_path)
-                )
-
             if has_tomb:
                 # ORDERED on purpose: the tombstone path's three writes
                 # share cells_path (the flags swap reads the OLD cell
                 # files, the retire swap and the append both rewrite
                 # them) — the documented consume-before-swap sequencing
                 # is a real dependency, not a missed parallelism
-                _swap_flags(flags_state.unionByName(d_flags))
+                ST.swap_tier(spark, flags_state.unionByName(d_flags), flags_path, batch_id)
                 _retire_tombstones()
-                _write_cells()
+                ST.append(d_cells, cells_path, batch_id)
             else:
                 # insert-only: archive flags are immutable (monotone
-                # ids), so the served view grows by exactly this
-                # partition — a delta-sized, replay-idempotent write.
-                # Guard: an emptied-out store (_swap_in writes empties
-                # UNpartitioned to stay schema-readable) can't take a
-                # partition-dir append — mixing layouts breaks
-                # partition discovery — so that edge re-swaps; its
-                # archive flags are empty, so the swap is still
-                # delta-sized.
-                flat_store = fs.has_parquet(spark, flags_path) and not any(
-                    "_batch_id=" in p
-                    for p, _ in fs.list_files(spark, flags_path, ".parquet")
+                # ids), so the served view grows by exactly this tier —
+                # a delta-sized, replay-idempotent write.  Flags + cells
+                # target disjoint paths over the shared d_cells cache.
+                ST.write_concurrently(
+                    lambda: ST.append(d_flags, flags_path, batch_id),
+                    lambda: ST.append(d_cells, cells_path, batch_id),
                 )
-                if flat_store:
-                    flags_write = lambda: _swap_flags(  # noqa: E731
-                        spark.read.parquet(flags_path)
-                        .select(id_col, "cell", "is_dup")
-                        .unionByName(d_flags)
-                    )
-                else:
-                    flags_write = lambda: (  # noqa: E731
-                        d_flags.withColumn("_batch_id", batch_lit)
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("_batch_id")
-                        .parquet(flags_path)
-                    )
-                # flags + cells target disjoint paths over the shared
-                # d_cells cache — run concurrently
-                _parallel_store_writes(flags_write, _write_cells)
 
     return _apply
 
@@ -1071,28 +886,14 @@ def maintain_k_anonymity_each_batch(
             b_counts = b_keyed.groupBy("qh", "qd", "qm").agg(
                 F.count(F.lit(1)).cast("long").alias("n")
             )
-            if fs.has_parquet(spark, cpath):
-                prev_counts = (
-                    spark.read.parquet(cpath)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select("qh", "qd", "qm", "n")
-                )
-            else:
-                prev_counts = spark.createDataFrame([], b_counts.schema)
+            prev_counts = ST.committed(spark, cpath, batch_id, b_counts.schema)
             # sketch ⊕ batch: class sizes WITHOUT re-counting history
             counts = caching.tracked_persist(
                 prev_counts.unionByName(b_counts)
                 .groupBy("qh", "qd", "qm")
                 .agg(F.sum("n").cast("long").alias("n"))
             )
-            if fs.has_parquet(spark, events_path):
-                archive = (
-                    spark.read.parquet(events_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select("event_id", "qh", "qd", "qm")
-                )
-            else:
-                archive = spark.createDataFrame([], b_keyed.schema)
+            archive = ST.committed(spark, events_path, batch_id, b_keyed.schema)
             # affected archive rows: any event sharing a MONTH class with
             # the batch (month ⊇ day ⊇ hour by the ladder property, so
             # the month key over-approximates every class whose count —
@@ -1100,33 +901,13 @@ def maintain_k_anonymity_each_batch(
             touched_m = b_keyed.select("qm").distinct()
             affected = archive.join(F.broadcast(touched_m), "qm", "left_semi")
             out = _classify(affected.unionByName(b_keyed), counts)
-            # upsert into the view
-            if fs.has_parquet(spark, view_path):
-                prev = spark.read.parquet(view_path)
-                merged = prev.join(out, "event_id", "left_anti").unionByName(out)
-            else:
-                merged = out
+            merged = _upsert_view(spark, view_path, out, out.select("event_id"))
             # view swap + two state appends: independent jobs on
             # disjoint paths — run concurrently
-            _parallel_store_writes(
-                lambda: _swap_in(spark, merged, view_path),
-                *(
-                    (
-                        lambda state_df=state_df, state_path=state_path: (
-                            state_df.withColumn(
-                                "_batch_id", F.lit(batch_id).cast("long")
-                            )
-                            .write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("_batch_id")
-                            .parquet(state_path)
-                        )
-                    )
-                    for state_df, state_path in (
-                        (b_keyed, events_path),
-                        (b_counts, cpath),
-                    )
-                )
+            ST.write_concurrently(
+                lambda: ST.swap(spark, merged, view_path),
+                lambda: ST.append(b_keyed, events_path, batch_id),
+                lambda: ST.append(b_counts, cpath, batch_id),
             )
 
     return _apply
@@ -1163,12 +944,7 @@ def maintain_zonemap_each_batch(
     the full contract; a re-layout resets both boxes and the deleted
     counter.
     """
-    from pyspark.sql import functions as F
-
     from ..operators import layout as L
-
-    def _swap_overwrite(df: DataFrame, path: str) -> None:
-        _swap_in(df.sparkSession, df, path)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1178,21 +954,13 @@ def maintain_zonemap_each_batch(
             return
         with caching.scope():
             if not fs.has_parquet(spark, bounds_path):
-                _swap_overwrite(
-                    L.zorder_bounds(batch_df, x_col, y_col), bounds_path
-                )
+                ST.swap(spark, L.zorder_bounds(batch_df, x_col, y_col), bounds_path)
             bounds = spark.read.parquet(bounds_path)
             zm = L.zorder_shards(
                 batch_df, x_col, y_col, bits=bits, shard_bits=shard_bits,
                 bounds=bounds,
             )
-            (
-                zm.withColumn("_batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(zonemap_path)
-            )
+            ST.append(zm, zonemap_path, batch_id)
 
     return _apply
 
@@ -1256,24 +1024,14 @@ def maintain_boilerplate_each_batch(
             delta_chunks = caching.tracked_persist(
                 CUR.chunk_frame(delta, id_col, text_col)
             )
-            if fs.has_parquet(spark, span_index_path):
-                index = (
-                    spark.read.parquet(span_index_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select("doc_id", "i", "span")
-                )
-                archive = (
-                    spark.read.parquet(docs_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select(id_col, text_col)
-                )
-            else:
-                # chunk_frame aliases id_col -> "doc_id" but keeps the
-                # source TYPE, so the empty state derives it too (same
-                # id-type divergence guard as the containment maintainer)
-                id_t = delta.schema[id_col].dataType.simpleString()
-                index = spark.createDataFrame([], f"doc_id {id_t}, i int, span string")
-                archive = spark.createDataFrame([], delta.schema)
+            # chunk_frame aliases id_col -> "doc_id" but keeps the
+            # source TYPE, so the empty state derives it too (same
+            # id-type divergence guard as the containment maintainer)
+            id_t = delta.schema[id_col].dataType.simpleString()
+            index = ST.committed(
+                spark, span_index_path, batch_id, f"doc_id {id_t}, i int, span string"
+            )
+            archive = ST.committed(spark, docs_path, batch_id, delta.schema)
             arch_counts = index.groupBy("span").agg(
                 F.countDistinct("doc_id").alias("_na")
             )
@@ -1302,31 +1060,13 @@ def maintain_boilerplate_each_batch(
                 )
             )
             restripped = CUR.strip_against(touched, boiler, id_col, text_col)
-            if fs.has_parquet(spark, clean_path):
-                prev = spark.read.parquet(clean_path)
-                store = prev.join(
-                    restripped.select("doc_id"), "doc_id", "left_anti"
-                ).unionByName(restripped)
-            else:
-                store = restripped
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
-            # swap + two appends: independent jobs on disjoint paths
-            # (the view's state reads were planned before the appends
-            # start) — run concurrently
-            _parallel_store_writes(
-                lambda: _swap_in(spark, store, clean_path),
-                *(
-                    (
-                        lambda df=df, path=path: (
-                            df.withColumn("_batch_id", batch_lit)
-                            .write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("_batch_id")
-                            .parquet(path)
-                        )
-                    )
-                    for df, path in ((delta_chunks, span_index_path), (delta, docs_path))
-                )
+            store = _upsert_view(spark, clean_path, restripped, restripped.select("doc_id"))
+            # swap + two appends: independent jobs on disjoint paths —
+            # run concurrently
+            ST.write_concurrently(
+                lambda: ST.swap(spark, store, clean_path),
+                lambda: ST.append(delta_chunks, span_index_path, batch_id),
+                lambda: ST.append(delta, docs_path, batch_id),
             )
 
     return _apply
@@ -1418,36 +1158,13 @@ def maintain_bm25_index_each_batch(
             # wedge on a missing later path.  id type derived from the
             # batch schema (the containment maintainer's id-type
             # divergence guard).
-            prior = F.col("_batch_id") < batch_id
             id_t = delta.schema[id_col].dataType.simpleString()
-            if fs.has_parquet(spark, postings_path):
-                post_state = (
-                    spark.read.parquet(postings_path)
-                    .where(prior)
-                    .select("doc_id", "term", "tf")
-                )
-            else:
-                post_state = spark.createDataFrame(
-                    [], f"doc_id {id_t}, term string, tf long"
-                )
-            if fs.has_parquet(spark, doclen_path):
-                dl_state = (
-                    spark.read.parquet(doclen_path).where(prior).select("doc_id", "dl")
-                )
-            else:
-                dl_state = spark.createDataFrame([], f"doc_id {id_t}, dl long")
-            if fs.has_parquet(spark, df_path):
-                df_state = (
-                    spark.read.parquet(df_path).where(prior).select("term", "df")
-                )
-            else:
-                df_state = spark.createDataFrame([], "term string, df long")
-            if fs.has_parquet(spark, stats_path):
-                stats_state = (
-                    spark.read.parquet(stats_path).where(prior).select("n", "sumdl")
-                )
-            else:
-                stats_state = spark.createDataFrame([], "n long, sumdl long")
+            post_state = ST.committed(
+                spark, postings_path, batch_id, f"doc_id {id_t}, term string, tf long"
+            )
+            dl_state = ST.committed(spark, doclen_path, batch_id, f"doc_id {id_t}, dl long")
+            df_state = ST.committed(spark, df_path, batch_id, "term string, df long")
+            stats_state = ST.committed(spark, stats_path, batch_id, "n long, sumdl long")
             merged_df = (
                 df_state.unionByName(ddf)
                 .groupBy("term")
@@ -1465,31 +1182,15 @@ def maintain_bm25_index_each_batch(
             cand = post_state.unionByName(dtf).join(F.broadcast(qterms), "term")
             dl_all = dl_state.unionByName(ddl)
             ranking = _bm25_rank(cand, dl_all, stats)
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
             # the ranking swap and the four state appends are five
-            # independent jobs over the dtf/ddl caches and DISJOINT
-            # target paths (the ranking's state reads were planned —
-            # file listing snapshotted, `< batch_id` pruned — before
-            # the appends start); run them concurrently
-            _parallel_store_writes(
-                lambda: _swap_in(spark, ranking, ranking_path),
-                *(
-                    (
-                        lambda df=df, path=path: (
-                            df.withColumn("_batch_id", batch_lit)
-                            .write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("_batch_id")
-                            .parquet(path)
-                        )
-                    )
-                    for df, path in (
-                        (dtf, postings_path),
-                        (ddl, doclen_path),
-                        (ddf, df_path),
-                        (dstats, stats_path),
-                    )
-                )
+            # independent jobs over the dtf/ddl caches and disjoint
+            # target paths — run them concurrently
+            ST.write_concurrently(
+                lambda: ST.swap(spark, ranking, ranking_path),
+                lambda: ST.append(dtf, postings_path, batch_id),
+                lambda: ST.append(ddl, doclen_path, batch_id),
+                lambda: ST.append(ddf, df_path, batch_id),
+                lambda: ST.append(dstats, stats_path, batch_id),
             )
 
     return _apply
@@ -1560,17 +1261,8 @@ def maintain_tfidf_keywords_each_batch(
             # gate EACH store separately: a first-batch crash between
             # the df and stats appends must replay cleanly, not wedge
             # on the missing second path
-            prior = F.col("_batch_id") < batch_id
-            if fs.has_parquet(spark, df_path):
-                df_state = (
-                    spark.read.parquet(df_path).where(prior).select("term", "df")
-                )
-            else:
-                df_state = spark.createDataFrame([], "term string, df long")
-            if fs.has_parquet(spark, stats_path):
-                n_state = spark.read.parquet(stats_path).where(prior).select("n")
-            else:
-                n_state = spark.createDataFrame([], "n long")
+            df_state = ST.committed(spark, df_path, batch_id, "term string, df long")
+            n_state = ST.committed(spark, stats_path, batch_id, "n long")
             # state slice: only the batch's own terms can affect its
             # docs' scores — the incremental leg's semi-join prune
             state_slice = df_state.join(ddf.select("term"), "term", "left_semi")
@@ -1601,23 +1293,12 @@ def maintain_tfidf_keywords_each_batch(
                 .withColumn("rank", F.row_number().over(w).cast("long"))
                 .where(F.col("rank") <= topk)
             )
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
             # keyword swap + two partial appends: independent jobs over
             # the dtf/ddf caches, disjoint paths — run concurrently
-            _parallel_store_writes(
-                lambda: _swap_in(spark, keywords, keywords_path),
-                *(
-                    (
-                        lambda df=df, path=path: (
-                            df.withColumn("_batch_id", batch_lit)
-                            .write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("_batch_id")
-                            .parquet(path)
-                        )
-                    )
-                    for df, path in ((ddf, df_path), (dn, stats_path))
-                )
+            ST.write_concurrently(
+                lambda: ST.swap(spark, keywords, keywords_path),
+                lambda: ST.append(ddf, df_path, batch_id),
+                lambda: ST.append(dn, stats_path, batch_id),
             )
 
     return _apply
@@ -1678,57 +1359,30 @@ def maintain_span_index_each_batch(
             d_post = caching.tracked_persist(
                 D.span_posting_index(delta, k, id_col, text_col)
             )
-            if fs.has_parquet(spark, posting_path):
-                posting_state = (
-                    spark.read.parquet(posting_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select("doc_id", "pos", "gh")
-                )
-                gram_state = (
-                    spark.read.parquet(sketch_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .groupBy("gh")
-                    .agg(F.sum("n_docs").cast("long").alias("n_docs"))
-                )
-            else:
-                # span_posting_index aliases id_col -> "doc_id" but
-                # keeps the source TYPE; derive it for the empty state
-                id_t = delta.schema[id_col].dataType.simpleString()
-                posting_state = spark.createDataFrame(
-                    [], f"doc_id {id_t}, pos int, gh string"
-                )
-                gram_state = spark.createDataFrame([], "gh string, n_docs long")
+            # span_posting_index aliases id_col -> "doc_id" but keeps
+            # the source TYPE; derive it for the empty state
+            id_t = delta.schema[id_col].dataType.simpleString()
+            posting_state = ST.committed(
+                spark, posting_path, batch_id, f"doc_id {id_t}, pos int, gh string"
+            )
+            gram_state = (
+                ST.committed(spark, sketch_path, batch_id, "gh string, n_docs long")
+                .groupBy("gh")
+                .agg(F.sum("n_docs").cast("long").alias("n_docs"))
+            )
             intervals = caching.tracked_persist(
                 D.incremental_repeated_spans(
                     delta, posting_state, gram_state, k, id_col, text_col
                 )
             )
             touched_ids = intervals.select("doc_id").distinct()
-            if fs.has_parquet(spark, spans_path):
-                prev = spark.read.parquet(spans_path)
-                store = prev.join(touched_ids, "doc_id", "left_anti").unionByName(
-                    intervals
-                )
-            else:
-                store = intervals
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
-            batch_sketch = D.span_gram_df(d_post)
+            store = _upsert_view(spark, spans_path, intervals, touched_ids)
             # swap + two appends: independent jobs on disjoint paths —
             # run concurrently
-            _parallel_store_writes(
-                lambda: _swap_in(spark, store, spans_path),
-                *(
-                    (
-                        lambda df=df, path=path: (
-                            df.withColumn("_batch_id", batch_lit)
-                            .write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("_batch_id")
-                            .parquet(path)
-                        )
-                    )
-                    for df, path in ((d_post, posting_path), (batch_sketch, sketch_path))
-                )
+            ST.write_concurrently(
+                lambda: ST.swap(spark, store, spans_path),
+                lambda: ST.append(d_post, posting_path, batch_id),
+                lambda: ST.append(D.span_gram_df(d_post), sketch_path, batch_id),
             )
 
     return _apply
@@ -1800,32 +1454,18 @@ def maintain_containment_index_each_batch(
                 D.containment_posting(delta, id_col, text_col, ngram)
             )
             d_df = caching.tracked_persist(D.containment_df(d_shex))
-            if fs.has_parquet(spark, posting_path):
-                posting_state = (
-                    spark.read.parquet(posting_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select("sh", "id")
-                )
-                df_state = (
-                    spark.read.parquet(df_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .groupBy("sh")
-                    .agg(F.sum("df").cast("long").alias("df"))
-                )
-                sizes_state = (
-                    spark.read.parquet(sizes_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select("id", "sz")
-                )
-            else:
-                # id type derived from the batch schema (ADVICE r8: a
-                # hardcoded `id long` fails or silently casts a
-                # string-id corpus on the first micro-batch — the same
-                # id-type divergence class fixed in banded_srp_index)
-                id_t = batch_docs.schema[id_col].dataType.simpleString()
-                posting_state = spark.createDataFrame([], f"sh string, id {id_t}")
-                df_state = spark.createDataFrame([], "sh string, df long")
-                sizes_state = spark.createDataFrame([], f"id {id_t}, sz long")
+            # id type derived from the batch schema (ADVICE r8: a
+            # hardcoded `id long` fails or silently casts a string-id
+            # corpus on the first micro-batch — the same id-type
+            # divergence class fixed in banded_srp_index)
+            id_t = batch_docs.schema[id_col].dataType.simpleString()
+            posting_state = ST.committed(spark, posting_path, batch_id, f"sh string, id {id_t}")
+            df_state = (
+                ST.committed(spark, df_path, batch_id, "sh string, df long")
+                .groupBy("sh")
+                .agg(F.sum("df").cast("long").alias("df"))
+            )
+            sizes_state = ST.committed(spark, sizes_path, batch_id, f"id {id_t}, sz long")
             new_pairs = caching.tracked_persist(
                 D.incremental_containment_pairs(
                     delta, posting_state, df_state, sizes_state,
@@ -1918,27 +1558,13 @@ def maintain_containment_index_each_batch(
                 ).unionByName(new_pairs)
             else:
                 store = new_pairs
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
             # swap + three appends: independent jobs on disjoint paths —
             # run concurrently
-            _parallel_store_writes(
-                lambda: _swap_in(spark, store, pairs_path),
-                *(
-                    (
-                        lambda df=df, path=path: (
-                            df.withColumn("_batch_id", batch_lit)
-                            .write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("_batch_id")
-                            .parquet(path)
-                        )
-                    )
-                    for df, path in (
-                        (d_shex, posting_path),
-                        (d_df, df_path),
-                        (D.containment_sizes(d_shex), sizes_path),
-                    )
-                )
+            ST.write_concurrently(
+                lambda: ST.swap(spark, store, pairs_path),
+                lambda: ST.append(d_shex, posting_path, batch_id),
+                lambda: ST.append(d_df, df_path, batch_id),
+                lambda: ST.append(D.containment_sizes(d_shex), sizes_path, batch_id),
             )
 
     return _apply
@@ -2018,7 +1644,7 @@ def retract_span_state(
                 .join(touched, "doc_id", "left_anti")
                 .unionByName(intervals)
             )
-            _swap_in(spark, view, spans_path)
+            ST.swap(spark, view, spans_path)
         posting_new = caching.tracked_persist(
             posting.join(tomb_ids, "doc_id", "left_anti")
         )
@@ -2034,19 +1660,14 @@ def retract_span_state(
             for p in (posting_path, sketch_path):
                 fs.delete(spark, p)
             return
-        _swap_in(
-            spark,
-            posting_new.withColumn("_batch_id", F.lit(watermark).cast("long")),
-            posting_path,
-            partition_by="_batch_id",
-        )
+        ST.swap_tier(spark, posting_new, posting_path, watermark)
         # sketch LAST, re-derived from the on-disk post-swap posting —
         # a pure function of the clean posting, so a crash-replay at
         # any point recomputes the identical sketch (ADVICE r7)
         sketch_new = D.span_gram_df(
             spark.read.parquet(posting_path).select("doc_id", "pos", "gh")
-        ).withColumn("_batch_id", F.lit(watermark).cast("long"))
-        _swap_in(spark, sketch_new, sketch_path, partition_by="_batch_id")
+        )
+        ST.swap_tier(spark, sketch_new, sketch_path, watermark)
 
 
 def _batch_is_empty(batch_df: DataFrame) -> bool:
@@ -2068,38 +1689,6 @@ def _batch_is_empty(batch_df: DataFrame) -> bool:
         except AttributeError:  # pragma: no cover - slotted frame
             pass
     return cached
-
-
-def _swap_in(spark, df: DataFrame, path: str, partition_by: str | None = None) -> None:
-    """Write ``df`` to a staging dir and promote it over ``path`` with
-    the crash-safe rename the maintainers share.
-
-    The view plan executes exactly ONCE — the staging write.  Emptiness
-    is detected AFTER the write from the staging dir's file listing (an
-    empty multi-partition or partitioned write leaves only _SUCCESS),
-    not with a pre-write ``isEmpty()``: on the aggregated/joined view
-    plans the maintainers swap, ``isEmpty`` must execute the whole
-    upstream plan to learn there is ≥1 row, so the old
-    isEmpty-then-write shape paid every swapped view TWICE (measured
-    7.4 s of docs_tfidf_streaming's 17 s first-batch keyword swap at
-    sf0.1; the r13 phase probe attributed ~9 s/query to this across the
-    streaming rows).  The follow-up count of the staging dir is dropped
-    for the same reason — the write action already materialized the
-    files."""
-    staging = fs.staging_path(path)
-    fs.delete(spark, staging)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(staging)
-    if not fs.has_parquet(spark, staging):
-        # empty view: rewrite as ONE schema-bearing empty file so an
-        # emptied-out store stays READABLE for unguarded consumers.
-        # limit(0) folds to an empty local relation — a metadata-only
-        # job, never a recompute of the upstream plan.
-        fs.delete(spark, staging)
-        df.limit(0).coalesce(1).write.mode("overwrite").parquet(staging)
-    fs.swap_directory(spark, staging, path)
 
 
 def run_index_maintenance_available_now(
@@ -2168,30 +1757,18 @@ def maintain_value_histogram_each_batch(
             batch_hist = caching.tracked_persist(
                 INC.histogram_state(batch_df, value_col, width, keys=keys)
             )
-            if fs.has_parquet(spark, hist_path):
-                state = (
-                    spark.read.parquet(hist_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .groupBy(*keys, "bin")
-                    .agg(F.sum("cnt").cast("long").alias("cnt"))
-                )
-                merged = INC.combine_histograms(state, batch_hist, keys=keys)
-            else:
-                merged = batch_hist
+            state = (
+                ST.committed(spark, hist_path, batch_id, batch_hist.schema)
+                .groupBy(*keys, "bin")
+                .agg(F.sum("cnt").cast("long").alias("cnt"))
+            )
+            merged = INC.combine_histograms(state, batch_hist, keys=keys)
             view = INC.quantiles_from_histogram(merged, width, qs, keys=keys)
             # view swap + state append: independent jobs on disjoint
             # paths over the persisted batch_hist — run concurrently
-            _parallel_store_writes(
-                lambda: _swap_in(spark, view, quantiles_path),
-                lambda: (
-                    batch_hist.withColumn(
-                        "_batch_id", F.lit(batch_id).cast("long")
-                    )
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(hist_path)
-                ),
+            ST.write_concurrently(
+                lambda: ST.swap(spark, view, quantiles_path),
+                lambda: ST.append(batch_hist, hist_path, batch_id),
             )
 
     return _apply
@@ -2280,23 +1857,15 @@ def maintain_sig_edges_each_batch(
             b_months = b_active.select(
                 F.substring("hour", 1, 7).alias("month")
             ).distinct()
-            if fs.has_parquet(spark, active_path):
+            state_m = ST.committed(spark, active_path, batch_id, b_active.schema)
+            if ST.latest(spark, active_path, below=batch_id) is not None:
                 # month-scoped state read: only same-month actives can
                 # collide with this batch (hour ⇒ month), so the join
                 # sides never carry other epochs' state
-                state_m = (
-                    spark.read.parquet(active_path)
-                    .where(F.col("_batch_id") < batch_id)
-                    .select("hour", "user_id")
-                    .join(
-                        F.broadcast(b_months),
-                        F.substring("hour", 1, 7) == F.col("month"),
-                        "left_semi",
-                    )
-                )
-            else:
-                state_m = spark.createDataFrame(
-                    [], b_active.select("hour", "user_id").schema
+                state_m = state_m.join(
+                    F.broadcast(b_months),
+                    F.substring("hour", 1, 7) == F.col("month"),
+                    "left_semi",
                 )
             # Pin the SELF-JOIN input's cache to full-parallelism HOUR
             # partitioning (explicit repartition — AQE cannot coalesce
@@ -2370,29 +1939,15 @@ def maintain_sig_edges_each_batch(
                     "wm_d",
                 )
             )
-            batch_lit = F.lit(batch_id).cast("long").alias("_batch_id")
             # the three appends are independent jobs over the shared
             # persisted parents (new_active / state_m caches) — run
-            # them concurrently; see _parallel_store_writes for why
+            # them concurrently; see store.write_concurrently for why
             # this never duplicates the pair-counting compute and why
             # crash replay is unchanged
-            _parallel_store_writes(
-                *(
-                    (
-                        lambda df=df, path=path: (
-                            df.withColumn("_batch_id", batch_lit)
-                            .write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("_batch_id")
-                            .parquet(path)
-                        )
-                    )
-                    for df, path in (
-                        (new_active, active_path),
-                        (contrib, pairs_path),
-                        (occ, occ_path),
-                    )
-                )
+            ST.write_concurrently(
+                lambda: ST.append(new_active, active_path, batch_id),
+                lambda: ST.append(contrib, pairs_path, batch_id),
+                lambda: ST.append(occ, occ_path, batch_id),
             )
 
     return _apply
@@ -2417,30 +1972,13 @@ def serve_sig_edges(
     O(|pair state|) — the compact aggregated counts, never the raw
     actives — and equals the batch recompute after any prefix."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from ..operators import graph as G
 
+    # both stores are readable once the first batch has appended, even
+    # when no pair has shared a window yet (store.append)
     occ = spark.read.parquet(occ_path)
-    utype = occ.schema["user_id"].dataType
-    if fs.has_parquet(spark, pairs_path):
-        pairs = spark.read.parquet(pairs_path)
-    else:
-        # occupancy exists but no pair has ever shared a window (tiny
-        # prefixes): an empty count store with the canonical schema —
-        # a partitioned write of an empty frame leaves no data files
-        pairs = spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("month", T.StringType()),
-                    T.StructField("user_a", utype),
-                    T.StructField("user_b", utype),
-                    T.StructField("sh", T.LongType()),
-                    T.StructField("_batch_id", T.LongType()),
-                ]
-            ),
-        )
+    pairs = spark.read.parquet(pairs_path)
     shared = (
         pairs.groupBy("user_a", "user_b")
         .agg(F.sum("sh").cast("long").alias("shared_windows"))
@@ -2562,86 +2100,45 @@ def _maintain_triangles_epoch(
     em_path = os.path.join(edges_snap_path, "em")
     snap_path = os.path.join(edges_snap_path, "snap")
 
-    def _write_tier(df, path: str, batch_id: int, extra_part=()) -> None:
-        (
-            df.withColumn("_batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*extra_part, "_batch_id")
-            .parquet(path)
-        )
-
-    def _prune_tiers(spark, path: str, keep: set[int]) -> None:
-        tiers = set()
-        for name, _sz in fs.list_files(spark, path, suffix=".parquet"):
-            for comp in name.split("/"):
-                if comp.startswith("_batch_id="):
-                    tiers.add(int(comp.split("=", 1)[1]))
-        for tier in tiers - keep:
-            fs.delete(spark, f"{path.rstrip('/')}/_batch_id={tier}")
-
-    def _prune_em_tiers(spark, path: str) -> None:
-        # per-MONTH top-2 retention: an untouched month's latest tier
-        # may be arbitrarily old and is live state; a touched month
-        # keeps its new tier plus the one the next replay would read
-        by_month: dict[str, set[int]] = {}
-        dirs: dict[tuple[str, int], str] = {}
-        for name, _sz in fs.list_files(spark, path, suffix=".parquet"):
-            month = tier = None
-            for comp in name.split("/"):
-                if comp.startswith("month="):
-                    month = comp.split("=", 1)[1]
-                elif comp.startswith("_batch_id="):
-                    tier = int(comp.split("=", 1)[1])
-            if month is None or tier is None:
-                continue
-            by_month.setdefault(month, set()).add(tier)
-            dirs[(month, tier)] = name[: name.rindex("/")]
-        for month, tiers in by_month.items():
-            for tier in sorted(tiers)[:-2]:
-                fs.delete(spark, dirs[(month, tier)])
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if _batch_is_empty(batch_df):
             return
         inner(batch_df, batch_id)
+        u_t = dict(batch_df.dtypes)["user_id"]
+        pair_cols = f"month string, user_a {u_t}, user_b {u_t}"
         with caching.scope():
             # bootstrap detection must be replay-stable: a crashed
-            # first epoch batch leaves em rows with _batch_id ==
-            # batch_id only, and the < filter excludes them, so the
-            # replay re-enters the bootstrap path and recomputes
+            # first epoch batch leaves em rows of this batch only,
+            # which the committed read excludes, so the replay
+            # re-enters the bootstrap path and recomputes
             # byte-identical frames
-            em_prev = None
-            if fs.has_parquet(spark, em_path):
-                em_prev = spark.read.parquet(em_path).where(
-                    F.col("_batch_id") < batch_id
-                )
-            bootstrap = em_prev is None or em_prev.isEmpty()
-            if bootstrap:
-                # FIRST epoch batch — either genuine batch 0, or a
-                # mid-stream upgrade from mode="global": prior history
-                # lives in the SHARED pair store, not in em tiers, so
-                # fold the full store into month deltas.  When the
-                # store holds only this batch's layer this reduces
-                # exactly to the plain batch-0 path.
-                month_delta = (
-                    spark.read.parquet(pairs_path)
-                    .where(F.col("_batch_id") <= batch_id)
-                    .groupBy("month", "user_a", "user_b")
-                    .agg(F.sum("sh").cast("long").alias("sh_d"))
-                )
-            else:
-                # this batch's own pair-count layer (the inner
-                # maintainer just wrote it; == filter keeps replay
+            em_prev = ST.committed(
+                spark, em_path, batch_id, f"{pair_cols}, sh_m long, {ST.BATCH_COL} long"
+            )
+            bootstrap = (
+                ST.latest(spark, em_path, below=batch_id) is None or em_prev.isEmpty()
+            )
+            # pair-count layers up to and including this batch (the
+            # inner maintainer just wrote its own)
+            layers = ST.committed(
+                spark, pairs_path, batch_id + 1, f"{pair_cols}, sh long, {ST.BATCH_COL} long"
+            )
+            if not bootstrap:
+                # this batch's own layer (the == filter keeps replay
                 # byte-identical)
-                month_delta = (
-                    spark.read.parquet(pairs_path)
-                    .where(F.col("_batch_id") == batch_id)
-                    .groupBy("month", "user_a", "user_b")
-                    .agg(F.sum("sh").cast("long").alias("sh_d"))
+                layers = layers.where(F.col(ST.BATCH_COL) == batch_id)
+            # FIRST epoch batch — either genuine batch 0, or a
+            # mid-stream upgrade from mode="global": prior history
+            # lives in the SHARED pair store, not in em tiers, so fold
+            # the full store into month deltas.  When the store holds
+            # only this batch's layer this reduces exactly to the plain
+            # batch-0 path.
+            month_delta = caching.tracked_persist(
+                layers.groupBy("month", "user_a", "user_b").agg(
+                    F.sum("sh").cast("long").alias("sh_d")
                 )
-            month_delta = caching.tracked_persist(month_delta)
+            )
             # touched months = months whose COUNTS changed (a batch
             # whose events open no new shared window in a month leaves
             # its tier untouched; occupancy-only changes flow through
@@ -2658,7 +2155,7 @@ def _maintain_triangles_epoch(
                     em_prev.join(F.broadcast(t_months), "month", "left_semi")
                     .groupBy("month", "user_a", "user_b")
                     .agg(
-                        F.max_by(F.col("sh_m"), F.col("_batch_id")).alias(
+                        F.max_by(F.col("sh_m"), F.col(ST.BATCH_COL)).alias(
                             "sh_old"
                         )
                     )
@@ -2677,35 +2174,14 @@ def _maintain_triangles_epoch(
                     ).cast("long").alias("sh_m"),
                 )
             )
-            _write_tier(tier_t, em_path, batch_id, extra_part=("month",))
+            ST.append(tier_t, em_path, batch_id, by=("month",))
             # ---- serve: min-shared-first over the month tiers ----
-            if fs.has_parquet(spark, em_path):
-                em_now = spark.read.parquet(em_path).where(
-                    F.col("_batch_id") <= batch_id
-                )
-                shared = _month_totals(em_now).where(
-                    F.col("shared_windows") >= min_shared
-                )
-            else:
-                # no pair has ever shared a window (tiny prefixes): a
-                # partitioned write of an empty frame leaves no data
-                # files, so serve an empty count frame with the
-                # canonical schema
-                from pyspark.sql import types as T
-
-                utype = month_delta.schema["user_a"].dataType
-                shared = spark.createDataFrame(
-                    [],
-                    T.StructType(
-                        [
-                            T.StructField("user_a", utype),
-                            T.StructField("user_b", utype),
-                            T.StructField("shared_windows", T.LongType()),
-                        ]
-                    ),
-                )
-            occ = spark.read.parquet(occ_path).where(
-                F.col("_batch_id") <= batch_id
+            em_now = ST.committed(
+                spark, em_path, batch_id + 1, f"{pair_cols}, sh_m long, {ST.BATCH_COL} long"
+            )
+            shared = _month_totals(em_now).where(F.col("shared_windows") >= min_shared)
+            occ = ST.committed(
+                spark, occ_path, batch_id + 1, f"month string, user_id {u_t}, nu_d long, wm_d long"
             )
             users = (
                 occ.where(F.col("user_id").isNotNull())
@@ -2723,29 +2199,16 @@ def _maintain_triangles_epoch(
             # broadcast-ceiling gate + cache materializer, exactly the
             # global maintainer's discipline (VERDICT r13 item 3)
             n_edges = e_new.count()
-            prev_tier = None
-            if fs.has_parquet(spark, snap_path):
-                snap = spark.read.parquet(snap_path).where(
-                    F.col("_batch_id") < batch_id
-                )
-                wm_tier = snap.agg(F.max("_batch_id")).collect()[0][0]
-                if wm_tier is not None:
-                    prev_tier = wm_tier
+            prev_tier = ST.latest(spark, snap_path, below=batch_id)
             if prev_tier is None:
                 tri_new = G.triangle_stats(
                     e_new, "user_a", "user_b", edge_count=n_edges
                 )
             else:
                 e_old = caching.tracked_persist(
-                    spark.read.parquet(snap_path)
-                    .where(F.col("_batch_id") == prev_tier)
-                    .select("user_a", "user_b")
+                    ST.read_tier(spark, snap_path, prev_tier).select("user_a", "user_b")
                 )
-                tri_old = (
-                    spark.read.parquet(tri_path)
-                    .where(F.col("_batch_id") == prev_tier)
-                    .drop("_batch_id")
-                )
+                tri_old = ST.read_tier(spark, tri_path, prev_tier)
                 tri_new = G.apply_triangle_delta(
                     tri_old, e_old, e_new, edge_count=n_edges
                 )
@@ -2756,20 +2219,22 @@ def _maintain_triangles_epoch(
             # wedge build 1.8 s -> 7.2 s at sf0.1 on identical input.
             # Concurrent tier writes — same discipline as the global
             # maintainer (tri_new consumes the PERSISTED e_new)
-            _parallel_store_writes(
-                lambda: _write_tier(tri_new, tri_path, batch_id),
-                lambda: _write_tier(e_new, snap_path, batch_id),
+            ST.write_concurrently(
+                lambda: ST.append(tri_new, tri_path, batch_id),
+                lambda: ST.append(e_new, snap_path, batch_id),
             )
             # prune superseded tiers (keep the just-written tier plus
-            # the one it read from; a crash before the prune leaves
-            # extra tiers, which readers ignore).  em tiers of touched
-            # months older than this batch are superseded too — the
-            # rollup's max_by ignores them, pruning just reclaims
-            # storage (measured in compaction_probe_graph.py).
+            # the one it read from).  em tiers of touched months older
+            # than this batch are superseded too — the rollup's max_by
+            # ignores them, pruning just reclaims storage (measured in
+            # compaction_probe_graph.py).  Per-MONTH top-2 retention:
+            # an untouched month's latest tier may be arbitrarily old
+            # and is live state; a touched month keeps its new tier
+            # plus the one the next replay would read.
             keep = {batch_id} | ({prev_tier} if prev_tier is not None else set())
             for path in (tri_path, snap_path):
-                _prune_tiers(spark, path, keep)
-            _prune_em_tiers(spark, em_path)
+                ST.prune(spark, path, keep)
+            ST.prune(spark, em_path, 2)
 
     return _apply
 
@@ -2811,27 +2276,9 @@ def _maintain_triangles_global(
     tiers are pruned after the new tier commits; the prune is
     best-effort (a crash before it leaves extra tiers, which readers
     ignore)."""
-    from pyspark.sql import functions as F
-
     from ..operators import graph as G
 
     inner = maintain_sig_edges_each_batch(active_path, pairs_path, occ_path)
-
-    def _latest_tier(df, below: int):
-        prev = df.where(F.col("_batch_id") < below)
-        wm = prev.agg(F.max("_batch_id")).collect()[0][0]
-        if wm is None:
-            return None
-        return prev.where(F.col("_batch_id") == wm), wm
-
-    def _write_tier(df, path: str, batch_id: int) -> None:
-        (
-            df.withColumn("_batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(path)
-        )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -2851,23 +2298,16 @@ def _maintain_triangles_global(
             # BlockManager load lock to build this cache — now both
             # read it.
             n_edges = e_new.count()
-            prev = None
-            if fs.has_parquet(spark, edges_snap_path):
-                prev = _latest_tier(
-                    spark.read.parquet(edges_snap_path), batch_id
-                )
+            prev = ST.latest(spark, edges_snap_path, below=batch_id)
             if prev is None:
                 tri_new = G.triangle_stats(
                     e_new, "user_a", "user_b", edge_count=n_edges
                 )
             else:
-                e_old, wm = prev
-                e_old = caching.tracked_persist(e_old.select("user_a", "user_b"))
-                tri_old = (
-                    spark.read.parquet(tri_path)
-                    .where(F.col("_batch_id") == wm)
-                    .drop("_batch_id")
+                e_old = caching.tracked_persist(
+                    ST.read_tier(spark, edges_snap_path, prev).select("user_a", "user_b")
                 )
+                tri_old = ST.read_tier(spark, tri_path, prev)
                 # e_old is the previous batch's served view — within
                 # churn of n_edges, far under the 10M ceiling's headroom
                 tri_new = G.apply_triangle_delta(
@@ -2881,27 +2321,18 @@ def _maintain_triangles_global(
             # The two tier writes run concurrently: tri_new's lineage
             # consumes the PERSISTED e_new, so the snapshot write and
             # the correction share (never duplicate) the serve compute
-            _parallel_store_writes(
-                lambda: _write_tier(tri_new, tri_path, batch_id),
-                lambda: _write_tier(e_new, edges_snap_path, batch_id),
+            ST.write_concurrently(
+                lambda: ST.append(tri_new, tri_path, batch_id),
+                lambda: ST.append(e_new, edges_snap_path, batch_id),
             )
             # prune superseded tiers (replay of THIS batch only needs
             # tiers < batch_id — keep the just-written tier plus the
-            # one it read from; a crash before the prune just leaves
-            # extra tiers, which readers ignore)
-            keep = {batch_id} | ({prev[1]} if prev is not None else set())
+            # one it read from)
+            keep = {batch_id} | ({prev} if prev is not None else set())
             for path in (tri_path, edges_snap_path):
-                tiers = set()
-                for name, _sz in fs.list_files(spark, path, suffix=".parquet"):
-                    for comp in name.split("/"):
-                        if comp.startswith("_batch_id="):
-                            tiers.add(int(comp.split("=", 1)[1]))
-                for tier in tiers - keep:
-                    fs.delete(spark, f"{path.rstrip('/')}/_batch_id={tier}")
+                ST.prune(spark, path, keep)
 
     return _apply
-
-
 
 
 def maintain_triangles_each_batch(
@@ -3027,32 +2458,15 @@ def maintain_triangles_each_batch(
             .collect()
         ]
 
-    def _root_tiers(spark) -> set[int]:
-        # global-mode snapshot tiers live DIRECTLY under the root as
-        # _batch_id=N dirs; the epoch layout uses named subdirs, so the
-        # first path component distinguishes them
-        tiers: set[int] = set()
-        for name, _sz in fs.list_files(spark, root, suffix=".parquet"):
-            rel = name.split(root + "/", 1)[-1]
-            first = rel.split("/", 1)[0]
-            if first.startswith("_batch_id="):
-                tiers.add(int(first.split("=", 1)[1]))
-        return tiers
-
     def _migrate(spark) -> None:
-        tiers = _root_tiers(spark)
+        # global-mode snapshot tiers live directly under the root; the
+        # epoch layout's named subdirs are other stores, which the tier
+        # listing does not count
+        tiers = ST.tiers(spark, root)
         if tiers:
             wm = max(tiers)
-            e_prev = spark.read.parquet(f"{root}/_batch_id={wm}")
-            (
-                e_prev.withColumn("_batch_id", F.lit(wm).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(snap_path)
-            )
-            for t in tiers:
-                fs.delete(spark, f"{root}/_batch_id={t}")
+            ST.append(ST.read_tier(spark, root, wm), snap_path, wm)
+            ST.prune(spark, root, keep=set())
         fs.mkdirs(spark, marker)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -3090,7 +2504,6 @@ def maintain_triangles_each_batch(
     return _apply
 
 
-
 def serve_triangles(
     spark,
     tri_path: str,
@@ -3100,19 +2513,15 @@ def serve_triangles(
     min_lift: float = 1.5,
 ):
     """Serve the per-node triangle/degree table maintained by
-    :func:`maintain_triangles_each_batch`: the latest snapshot tier
-    (single-row watermark read — the sanctioned maintainer pattern).
-    When no tier exists yet (no batch has produced a significant edge —
-    an empty partitioned write leaves no data files), fall back to the
-    full build over the served edge view, which is empty-consistent."""
-    from pyspark.sql import functions as F
-
+    :func:`maintain_triangles_each_batch`: the newest snapshot tier,
+    found from the store's listing.  When no tier exists yet (no batch
+    has produced a significant edge), fall back to the full build over
+    the served edge view, which is empty-consistent."""
     from ..operators import graph as G
 
-    if fs.has_parquet(spark, tri_path):
-        tri = spark.read.parquet(tri_path)
-        wm = tri.agg(F.max("_batch_id")).collect()[0][0]
-        return tri.where(F.col("_batch_id") == wm).drop("_batch_id")
+    tiers = ST.tiers(spark, tri_path)
+    if tiers:
+        return ST.read_tier(spark, tri_path, max(tiers))
     edges = serve_sig_edges(
         spark, pairs_path, occ_path, min_shared, min_lift
     ).select("user_a", "user_b")

@@ -12,8 +12,6 @@ declarative.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -63,19 +61,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
         elif dtype == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if os.environ.get("SPARK_GRAFT_PARALLELIZE_SCAN") and name not in (
-        "region",
-        "nation",
-        "supplier",
-    ):
-        # The fixture files are single-row-group parquet, so the scan is
-        # ONE task no matter how many cores exist; a real table at scale
-        # is many files/row-groups and splits natively.  This opt-in
-        # (bench sets it) restores that parallelism for CPU-heavy chains
-        # at the cost of a tiny shuffle of the 2 MB source.
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
     return df
 
 
