@@ -171,13 +171,8 @@ def main() -> None:
     n_tri = max(6, n_batches // 5)
     base = tempfile.mkdtemp(prefix="compaction_probe_tri_")
     paths = {k: os.path.join(base, k) for k in ("active", "pairs", "occ", "es", "tri")}
-    # mode pinned: this probe measures the GLOBAL maintainer's replace
-    # tiers (the single-month fixture regime); the r13 auto default
-    # would resolve the same way here, but the probe should not depend
-    # on the dispatcher's threshold
     fn = SP.maintain_triangles_each_batch(
         paths["active"], paths["pairs"], paths["occ"], paths["es"], paths["tri"],
-        mode="global",
     )
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"

@@ -29,10 +29,12 @@ ORACLE_SPECS = [s for s in SPECS if s.oracle is not None]
 
 
 @pytest.mark.parametrize("spec", ORACLE_SPECS, ids=[s.name for s in ORACLE_SPECS])
-def test_oracle_runs_under_memory_budget(spec):
+def test_oracle_runs_under_memory_budget(spec, tmp_path):
     con = duckdb.connect()
     con.sql(f"SET memory_limit='{BUDGET}'")
-    con.sql("SET temp_directory='/tmp/duckdb_oracle_spill'")
+    # a spill directory of its own, not a fixed path shared with other
+    # tests and other runs on the host
+    con.sql(f"SET temp_directory='{tmp_path / 'spill'}'")
     for t in TABLE_NAMES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     try:

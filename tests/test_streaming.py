@@ -752,10 +752,9 @@ def test_streaming_triangles_maintenance(spark, tmp_path):
         )
 
 
-def test_streaming_triangles_epoch_mode_multimonth(spark, tmp_path):
-    """mode="epoch" month-tier maintainer on a genuinely MULTI-MONTH
-    stream (the regime the epoch discipline exists for — the graded
-    fixture is single-month, where measurement picked mode="global"):
+def test_streaming_triangles_multimonth(spark, tmp_path):
+    """The triangle maintainer on a genuinely MULTI-MONTH stream (the
+    graded fixture is single-month):
 
     * prefix equivalence — after every month's wave the served
       triangle table equals the from-scratch recompute on everything
@@ -766,16 +765,15 @@ def test_streaming_triangles_epoch_mode_multimonth(spark, tmp_path):
       January term their lift ≈ 0.9 < 1.5 (edge excluded); a
       maintainer that served only touched-month terms would compute
       lift ≈ 336 and wrongly include the edge, so equality here
-      proves the untouched-epoch expectation terms are served (the r13
-      redesign gets them from the occupancy store's per-month n_u/W
-      partials inside ``lift_from_counts`` — every month a pair is
-      both-active in contributes, co-occurrence or not);
-    * write scoping — after the February and March waves the January
-      month tier still carries its original ``_batch_id`` (untouched
-      epochs are read, never rewritten)."""
+      proves the untouched-month expectation terms are served (they
+      come from the occupancy store's per-month n_u/W partials inside
+      ``lift_from_counts`` — every month a pair is both-active in
+      contributes, co-occurrence or not);
+    * crash replay — re-applying the last batch directly (the exact
+      call a checkpointed foreachBatch replay makes after a crash)
+      leaves the served table byte-identical."""
     import unittest.mock as mock
 
-    from updating_datasets_data_engineering_spark import fs
     from updating_datasets_data_engineering_spark import registry as R
     from updating_datasets_data_engineering_spark.operators import graph as G
 
@@ -815,16 +813,17 @@ def test_streaming_triangles_epoch_mode_multimonth(spark, tmp_path):
         mar,
     ]
 
+    def maintainer():
+        return SP.maintain_triangles_each_batch(
+            paths["active"], paths["pairs"], paths["occ"],
+            paths["edges_snap"], paths["tri"],
+        )
+
     def run_increment(batch_df):
         batch_df.write.mode("append").parquet(src)
         stream = spark.readStream.schema(batch_df.schema).parquet(src)
         q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_triangles_each_batch(
-                    paths["active"], paths["pairs"], paths["occ"],
-                    paths["edges_snap"], paths["tri"], mode="epoch",
-                )
-            )
+            stream.writeStream.foreachBatch(maintainer())
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .outputMode("update")
@@ -832,152 +831,33 @@ def test_streaming_triangles_epoch_mode_multimonth(spark, tmp_path):
         )
         q.awaitTermination()
 
-    def _jan_tiers():
-        tiers = set()
-        em = os.path.join(paths["edges_snap"], "em")
-        for name, _sz in fs.list_files(spark, em, suffix=".parquet"):
-            if "month=2024-01" in name:
-                for comp in name.split("/"):
-                    if comp.startswith("_batch_id="):
-                        tiers.add(int(comp.split("=", 1)[1]))
-        return tiers
+    def served():
+        return SP.serve_triangles(
+            spark, paths["tri"], paths["pairs"], paths["occ"]
+        )
 
     streamed = None
     cols = ["node", "degree", "triangles", "clustering"]
-    for i, b in enumerate(waves):
+    for b in waves:
         run_increment(b)
         streamed = b if streamed is None else streamed.unionByName(b)
-        got = SP.serve_triangles(
-            spark, paths["tri"], paths["pairs"], paths["occ"]
-        )
         with mock.patch.object(QB, "load_table", lambda s, d, name: streamed):
             edges = R._significant_edges(spark, "")
         want = G.triangle_stats(edges, "user_a", "user_b")
-        assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
+        assert _sorted_rows(served().select(*cols), cols) == _sorted_rows(
             want.select(*cols), cols
         )
-        # untouched-epoch write scoping: January's tier is written by
-        # wave 0 and never again
-        assert _jan_tiers() == {0}, _jan_tiers()
-    # the backfilled pair must be kept OUT of the graph (lift ~0.9)
-    snap = spark.read.parquet(os.path.join(paths["edges_snap"], "snap"))
+    # the cross-month pair must be kept OUT of the graph (lift ~0.9)
+    snap = spark.read.parquet(paths["edges_snap"])
     assert (
         snap.where((F.col("user_a") == 9001) & (F.col("user_b") == 9002)).count()
         == 0
     )
-
-
-def test_streaming_triangles_auto_mode_upgrade(spark, tmp_path):
-    """mode="auto" (the r13 default — VERDICT r12 item 1: mode
-    selection keys off the corpus's epoch count, not a caller flag)
-    must start global, upgrade to epoch EXACTLY when the observed
-    month count reaches ``epoch_min_months``, migrate the global
-    snapshot lineage into the epoch layout, and stay prefix-equivalent
-    to the from-scratch recompute across the switch."""
-    import unittest.mock as mock
-
-    from updating_datasets_data_engineering_spark import fs
-    from updating_datasets_data_engineering_spark import registry as R
-    from updating_datasets_data_engineering_spark.operators import graph as G
-
-    src = str(tmp_path / "ta_src")
-    paths = {
-        k: str(tmp_path / f"ta_{k}")
-        for k in ("active", "pairs", "occ", "edges_snap", "tri")
-    }
-    ckpt = str(tmp_path / "ta_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    m0 = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    m1 = m0.select(
-        (F.col("ts") + F.expr("INTERVAL 31 DAYS")).alias("ts"),
-        ((F.col("user_id") * 7 + 3) % 50).alias("user_id"),
-    )
-    m2 = m0.select(
-        (F.col("ts") + F.expr("INTERVAL 60 DAYS")).alias("ts"),
-        ((F.col("user_id") * 11 + 5) % 50).alias("user_id"),
-    )
-    waves = [m0, m1, m2]
-    marker = paths["edges_snap"].rstrip("/") + "_epoch_marker"
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_triangles_each_batch(
-                    paths["active"], paths["pairs"], paths["occ"],
-                    paths["edges_snap"], paths["tri"],
-                    mode="auto", epoch_min_months=2,
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    streamed = None
-    cols = ["node", "degree", "triangles", "clustering"]
-    for i, b in enumerate(waves):
-        run_increment(b)
-        streamed = b if streamed is None else streamed.unionByName(b)
-        if i == 0:
-            # one month seen: still global — marker absent, the
-            # snapshot tier lives directly under the root
-            assert not fs.exists(spark, marker)
-            assert fs.has_parquet(spark, paths["edges_snap"])
-            assert not fs.exists(
-                spark, os.path.join(paths["edges_snap"], "snap")
-            )
-        else:
-            # second month crossed the threshold: upgraded, migrated
-            # (root tiers handed to the epoch snap store and deleted)
-            assert fs.exists(spark, marker)
-            assert fs.has_parquet(
-                spark, os.path.join(paths["edges_snap"], "snap")
-            )
-            root_tiers = [
-                name
-                for name, _sz in fs.list_files(
-                    spark, paths["edges_snap"], suffix=".parquet"
-                )
-                if name.split(paths["edges_snap"].rstrip("/") + "/", 1)[-1]
-                .split("/", 1)[0]
-                .startswith("_batch_id=")
-            ]
-            assert root_tiers == [], root_tiers
-        got = SP.serve_triangles(
-            spark, paths["tri"], paths["pairs"], paths["occ"]
-        )
-        with mock.patch.object(QB, "load_table", lambda s, d, name: streamed):
-            edges = R._significant_edges(spark, "")
-        want = G.triangle_stats(edges, "user_a", "user_b")
-        assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
-            want.select(*cols), cols
-        )
-    # crash-replay idempotency ACROSS the upgrade: re-applying the
-    # final batch directly (the exact call a checkpointed foreachBatch
-    # replay makes after a crash) must leave the served table
-    # byte-identical — the epoch maintainer's < batch_id reads, the
-    # dynamic-overwrite tier writes, and the marker check all replay
-    # to the same state
-    before = _sorted_rows(
-        SP.serve_triangles(spark, paths["tri"], paths["pairs"], paths["occ"]),
-        cols,
-    )
-    fn = SP.maintain_triangles_each_batch(
-        paths["active"], paths["pairs"], paths["occ"],
-        paths["edges_snap"], paths["tri"], mode="auto", epoch_min_months=2,
-    )
-    fn(waves[-1], len(waves) - 1)
-    after = _sorted_rows(
-        SP.serve_triangles(spark, paths["tri"], paths["pairs"], paths["occ"]),
-        cols,
-    )
-    assert before == after
+    # crash replay of the last batch: the < batch_id reads and the
+    # per-tier writes replay to the same state
+    before = _sorted_rows(served(), cols)
+    maintainer()(waves[-1], len(waves) - 1)
+    assert _sorted_rows(served(), cols) == before
 
 
 def test_hourly_streaming_watermark_drop(spark, tmp_path):
@@ -1140,6 +1020,65 @@ def test_sig_edges_state_compaction(spark, tmp_path):
     streamed = batches[0].unionByName(batches[1]).unionByName(batches[2])
     with mock.patch.object(QB, "load_table", lambda s, d, name: streamed):
         want = R._significant_edges(spark, "")
+    assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
+        want.select(*cols), cols
+    )
+
+
+def test_sig_edges_resume_after_crashed_compaction_swap(spark, tmp_path):
+    """A compaction pass swaps a store by rename-aside; a crash right
+    after ``pairs -> pairs.old`` leaves the only copy of the pair
+    history in ``.old``.  The next batch must restore it before its
+    committed reads: without that it reads an empty pair state, and
+    its first append (a swap into the now tierless store) deletes
+    ``.old`` for good."""
+    import unittest.mock as mock
+
+    from updating_datasets_data_engineering_spark import fs
+    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.operators import maintenance as MNT
+
+    src = str(tmp_path / "scs_src")
+    active_path = str(tmp_path / "scs_active")
+    pairs_path = str(tmp_path / "scs_pairs")
+    occ_path = str(tmp_path / "scs_occ")
+    ckpt = str(tmp_path / "scs_ckpt")
+    os.makedirs(src, exist_ok=True)
+
+    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+    events = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
+    batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
+
+    def run_increment(batch_df):
+        batch_df.write.mode("append").parquet(src)
+        stream = spark.readStream.schema(batch_df.schema).parquet(src)
+        q = (
+            stream.writeStream.foreachBatch(
+                SP.maintain_sig_edges_each_batch(active_path, pairs_path, occ_path)
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .outputMode("update")
+            .start()
+        )
+        q.awaitTermination()
+
+    run_increment(batches[0])
+    run_increment(batches[1])
+    MNT.compact_additive_partials(
+        spark, pairs_path, keys=["month", "user_a", "user_b"], sums=["sh"]
+    )
+    # the crash: the committed store is renamed aside, the staged fold
+    # never moved in
+    assert fs.rename(spark, pairs_path, fs.old_path(pairs_path))
+    run_increment(batches[2])
+    assert not fs.exists(spark, fs.old_path(pairs_path))
+    cols = ["user_a", "user_b", "shared_windows", "lift"]
+    got = SP.serve_sig_edges(spark, pairs_path, occ_path)
+    streamed = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    with mock.patch.object(QB, "load_table", lambda s, d, name: streamed):
+        want = R._significant_edges(spark, "")
+    assert want.count() > 0
     assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
         want.select(*cols), cols
     )

@@ -1502,14 +1502,12 @@ def users_triangles_streaming(spark, sf_dir):
     this split; the hour-straddling interleave stress is exactly what
     ``users_sig_edges_streaming`` grades, and the triangle maintainer
     under an ``event_id % 3`` interleave stays pinned in
-    tests/test_streaming.py).  The maintainer runs its r13 ``auto``
-    default: mode selection keys off the corpus's observed epoch count
-    (VERDICT r12 item 1) — on this single-month fixture it resolves to
-    the measured-faster global serve; a multi-month corpus upgrades
-    itself to the month-tier epoch discipline mid-stream
-    (tests/test_streaming.py pins the switch, triangle_mode_probe.py
-    benches both modes on the multi-month shape).  The triangle table after the final
-    batch must equal the full ``users_triangles`` recompute on the
+    tests/test_streaming.py).  There is one maintainer for every
+    corpus shape: it serves the edge view from the additive pair and
+    occupancy partials each batch, on this single-month fixture and on
+    a multi-month stream alike (tests/test_streaming.py pins the
+    multi-month prefixes).  The triangle table after the final batch
+    must equal the full ``users_triangles`` recompute on the
     whole corpus — the SAME oracle — so the snapshot-tier crash
     protocol, the served-edge diff, and both correction legs are
     driver-hash-checked end to end."""

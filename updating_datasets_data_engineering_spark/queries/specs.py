@@ -879,8 +879,8 @@ def _released(fn: Callable[[SparkSession, str], DataFrame]):
 
 # Specs whose builder RUNS a structured stream (foreachBatch
 # maintainers execute inside the build call).  These stay on Spark's
-# default cached-plan compilation: the r13 isolated A/Bs
-# (ab_probe_aqecache.py, COVERAGE.md) measured
+# default cached-plan compilation: the r13 isolated A/Bs (COVERAGE.md,
+# "the AQE-cache config, isolated and reverted (round 13)") measured
 # canChangeCachedPlanOutputPartitioning=true neutral-to-harmful on this
 # tier (+1–3 s at sf0.1, up to +3.0 s on users_triangles_streaming —
 # AQE-coalesced cache builds fight the maintainers' explicit
@@ -904,9 +904,12 @@ _STREAMING_SPECS = frozenset(
 # cache is REGISTERED, choosing then whether to keep AQE), and every
 # operator-internal persist in this repo happens inside the query
 # builder — so scoping the conf around the BUILD is sufficient and
-# leaks nothing into the caller's session (verified by
-# ab_probe_aqecache.py: the scoped build reproduces the conf-on
-# shuffle bytes exactly; see OPTIMIZATION_r14.md).
+# leaks nothing into the caller's session.  Evidence: the round-start
+# table in OPTIMIZATION_r14.md records the conf-off shuffle bytes of
+# the persisted-state rows (BENCH_R14_BASE.json) next to their r12
+# bytes, and the scoped builds' full-registry run (BENCH_FULL.json)
+# brought them back: users_pagerank 2.14→0.14 MB, docs_hybrid_search
+# 5.19→3.10, dedup_containment 26.29→18.53.
 _AQE_CACHE_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
@@ -919,9 +922,9 @@ def _aqe_cached_builds(fn: Callable[[SparkSession, str], DataFrame]):
     broadcast/coalesce conversions and the downstream joins fell back
     to shuffles — plan-real regressions the load-independent shuffle
     counters pinned (users_pagerank 0.16→2.14 MB, docs_hybrid_search
-    3.44→5.19, dedup_containment 20.3→26.3; full r14 interleaved A/B
-    table in COVERAGE.md: conf-on restores every row to its r12 bytes
-    and wall, −0.9 to −2.7 s each at sf0.1).  The conf is
+    3.44→5.19, dedup_containment 20.3→26.3: the round-start table in
+    OPTIMIZATION_r14.md; the module comment above cites the bytes
+    after this wrapper).  The conf is
     runtime-settable, so it is scoped per query build: batch specs get
     AQE cache compilation, the streaming specs (where the same A/B
     protocol measured it harmful) keep Spark's default."""

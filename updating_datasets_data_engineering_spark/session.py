@@ -42,19 +42,18 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # canChangeCachedPlanOutputPartitioning stays at Spark's
-        # default (false) since r13: the r12 session-wide adoption was
-        # confounded with the simultaneous broadcast pins and
-        # single-consumer persist drops, and the isolated interleaved
-        # A/Bs (ab_probe_aqecache.py, COVERAGE.md) measured the
-        # config's MARGINAL effect as ±0.25 s at sf1 on the five
-        # BENCH_SF1 drift rows (the drifts were ambient load) and
-        # neutral-to-harmful at sf0.1 on its own former evidence rows
-        # — up to +3.0 s on users_triangles_streaming, where
-        # AQE-coalesced cache builds fight the explicit hour
-        # repartition pins.  The 1.8-vs-7.2 s wedge-build quirk the
-        # config once addressed is fixed in code (no single-consumer
-        # persists on that path), not config.
+        # canChangeCachedPlanOutputPartitioning is not set on the
+        # session: queries.specs._aqe_cached_builds sets it to true
+        # around each batch spec's build and restores it afterwards;
+        # the streaming specs build without it.  The r13 isolated
+        # interleaved A/Bs (COVERAGE.md, "the AQE-cache config,
+        # isolated and reverted (round 13)") measured it
+        # neutral-to-harmful on the streaming tier — up to +3.0 s on
+        # users_triangles_streaming, where AQE-coalesced cache builds
+        # fight the explicit hour repartition pins — while the
+        # persisted-state batch rows need it (OPTIMIZATION_r14.md).
+        # The 1.8-vs-7.2 s wedge-build quirk the config once addressed
+        # is fixed in code (no single-consumer persists on that path).
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

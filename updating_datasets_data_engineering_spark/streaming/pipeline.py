@@ -1673,11 +1673,11 @@ def retract_span_state(
 def _batch_is_empty(batch_df: DataFrame) -> bool:
     """Empty-batch guard, memoized on the DataFrame object.
 
-    Composed maintainers (the auto triangle dispatcher → the global
-    maintainer → its inner sig-edges maintainer) each guard the SAME
-    ``batch_df`` object, so the naive per-closure ``isEmpty()`` ran up
-    to three limit-1 jobs per micro-batch (~0.15 s each on a file-source
-    batch — pure scheduling, r13 phase probe).  A batch's contents are
+    Composed maintainers (the triangle maintainer → its inner
+    sig-edges maintainer) each guard the SAME ``batch_df`` object, so
+    the naive per-closure ``isEmpty()`` ran one limit-1 job per guard
+    per micro-batch (~0.15 s each on a file-source batch — pure
+    scheduling, r13 phase probe).  A batch's contents are
     fixed for the lifetime of the object (a checkpointed replay builds
     a NEW DataFrame), so the first answer is cached on the instance and
     every nested guard reuses it."""
@@ -1843,6 +1843,12 @@ def maintain_sig_edges_each_batch(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # compaction swaps these stores too (compact_batch_index,
+        # compact_additive_partials): repair a crashed swap before the
+        # committed reads, or the next append's swap deletes the only
+        # copy left in `.old`
+        for p in (active_path, pairs_path, occ_path):
+            fs.recover_swap(spark, p)
         if _batch_is_empty(batch_df):
             return
         with caching.scope():
@@ -1993,253 +1999,7 @@ def serve_sig_edges(
     return G.lift_from_counts(shared, users, wm, min_lift)
 
 
-def _month_totals(em: DataFrame) -> DataFrame:
-    """Per-pair shared-window totals from the month-tier store of
-    :func:`_maintain_triangles_epoch` — (1) per (month, pair) take the
-    row of the LATEST ``_batch_id`` (``max_by`` — replacement
-    semantics: a month tier is the month's full count state), (2) per
-    pair, Σ over months.  Two hash aggregations over the compact,
-    calendar-bounded tier store — the month-keyed equivalent of the
-    additive-layer fold ``serve_sig_edges`` pays, with state growth
-    bounded by MONTHS instead of micro-batch count."""
-    from pyspark.sql import functions as F
-
-    month_tot = em.groupBy("month", "user_a", "user_b").agg(
-        F.max_by(F.col("sh_m"), F.col("_batch_id")).alias("sh_m")
-    )
-    return month_tot.groupBy("user_a", "user_b").agg(
-        F.sum("sh_m").cast("long").alias("shared_windows")
-    )
-
-
-def _maintain_triangles_epoch(
-    active_path: str,
-    pairs_path: str,
-    occ_path: str,
-    edges_snap_path: str,
-    tri_path: str,
-    min_shared: int = 2,
-    min_lift: float = 1.5,
-):
-    """EPOCH-SCOPED triangle maintainer — the ``mode="epoch"`` leg of
-    :func:`maintain_triangles_each_batch` (VERDICT r11 item 1's
-    month-scoped serving; r13 REDESIGN after the multi-month bench —
-    see the dispatcher's docstring and COVERAGE.md for the measured
-    history).
-
-    What month scoping can and cannot buy here, from measurement: the
-    lift join over min_shared-passing pairs, the delta-anchored
-    triangle correction, and the edge-sized snapshot write are all
-    irreducibly GLOBAL for a globally-served triangle artifact — no
-    epoch discipline removes them.  The one real lever is the shape of
-    the persisted pair-count state the serve must fold: the shared
-    additive store grows ONE LAYER PER MICRO-BATCH (compact-on-read
-    cost ∝ batch count until an out-of-band
-    ``compact_additive_partials`` pass), whereas a month-keyed
-    replace-tier store is bounded by the CALENDAR — at daily cadence
-    over a year, 365 layers vs 12 month tiers.  So this maintainer
-    keeps exactly that: per batch it rewrites the (month, pair) count
-    tiers of the months the batch's pairs touched — under time-ordered
-    arrival, ~1/N of an N-month corpus — and serves the edge view with
-    the SAME min-shared-first discipline as :func:`serve_sig_edges`
-    (totals → threshold → ``lift_from_counts`` over the occupancy
-    store, which carries every month's n_u/W terms, so cross-epoch
-    expectation terms — including months a pair co-occurred in
-    nowhere — are exact by construction).
-
-    The r12 design this replaces materialized the CANDIDATE universe
-    instead: month tiers held (sh_m, ex_m) for every known pair
-    both-active in the month, plus a first-seen key store and a
-    backfill store for new pairs' untouched-month ex terms.  The r13
-    multi-month bench (triangle_mode_probe.py, 6 months at
-    sf0.1-equivalent volume) measured its per-batch cost GROWING ~2×
-    faster than global mode (9.8→19.2 s vs 7.9→12.7 s): the ex
-    materialization pays keys_all × months-both-active rows per
-    serve, where the global serve computes lift only for pairs already
-    past ``min_shared`` — the candidate set is ~10× the surviving set
-    on the graded fixture.  Min-shared-first is the stronger
-    discipline at every measured epoch count, so the redesign keeps it
-    and scopes ONLY the count-state layout.
-
-    Layout under ``edges_snap_path`` (all idempotent per-``_batch_id``
-    dynamic-overwrite writes; maintenance reads filter ``< batch_id``
-    so crash replay recomputes byte-identical frames):
-
-      * ``em/``   — month tiers, partitioned (month, _batch_id): one
-        row per pair that has co-occurred in the month, carrying the
-        month's FULL count (sh_m).  Latest tier per month wins
-        (:func:`_month_totals`); superseded tiers of touched months
-        are pruned after the new tier commits (per-month top-2
-        retention — an untouched month's latest tier is live state).
-      * ``snap/`` — the lift-passing edge list per batch, a snapshot
-        tier: e_old for the next batch's correction.
-
-    The first epoch batch (genuine batch 0, or a mid-stream upgrade
-    from mode="global" — the auto dispatcher's migration) finds no
-    prior em tiers and BOOTSTRAPS them from the shared pair store both
-    modes maintain identically: the full-store fold reduces to the
-    plain batch-0 path when the store holds only this batch's layer,
-    and the ``< batch_id`` detection re-enters the same path on crash
-    replay.
-
-    The per-node triangle/degree table is corrected by
-    ``operators.graph.apply_triangle_delta`` — the identical
-    delta-anchored wedge probes the incremental leg
-    (``users_triangles_incremental``) is graded on; batch 1 pays the
-    one-time degree-ordered wedge build.  The triangle table stays
-    graph-global (a lift flip anywhere can open or close wedges two
-    hops away), so its tier remains a full per-node write —
-    node-sized, not edge-sized."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..operators import graph as G
-
-    inner = maintain_sig_edges_each_batch(active_path, pairs_path, occ_path)
-    em_path = os.path.join(edges_snap_path, "em")
-    snap_path = os.path.join(edges_snap_path, "snap")
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if _batch_is_empty(batch_df):
-            return
-        inner(batch_df, batch_id)
-        u_t = dict(batch_df.dtypes)["user_id"]
-        pair_cols = f"month string, user_a {u_t}, user_b {u_t}"
-        with caching.scope():
-            # bootstrap detection must be replay-stable: a crashed
-            # first epoch batch leaves em rows of this batch only,
-            # which the committed read excludes, so the replay
-            # re-enters the bootstrap path and recomputes
-            # byte-identical frames
-            em_prev = ST.committed(
-                spark, em_path, batch_id, f"{pair_cols}, sh_m long, {ST.BATCH_COL} long"
-            )
-            bootstrap = (
-                ST.latest(spark, em_path, below=batch_id) is None or em_prev.isEmpty()
-            )
-            # pair-count layers up to and including this batch (the
-            # inner maintainer just wrote its own)
-            layers = ST.committed(
-                spark, pairs_path, batch_id + 1, f"{pair_cols}, sh long, {ST.BATCH_COL} long"
-            )
-            if not bootstrap:
-                # this batch's own layer (the == filter keeps replay
-                # byte-identical)
-                layers = layers.where(F.col(ST.BATCH_COL) == batch_id)
-            # FIRST epoch batch — either genuine batch 0, or a
-            # mid-stream upgrade from mode="global": prior history
-            # lives in the SHARED pair store, not in em tiers, so fold
-            # the full store into month deltas.  When the store holds
-            # only this batch's layer this reduces exactly to the plain
-            # batch-0 path.
-            month_delta = caching.tracked_persist(
-                layers.groupBy("month", "user_a", "user_b").agg(
-                    F.sum("sh").cast("long").alias("sh_d")
-                )
-            )
-            # touched months = months whose COUNTS changed (a batch
-            # whose events open no new shared window in a month leaves
-            # its tier untouched; occupancy-only changes flow through
-            # the serve's occ read, not the tiers)
-            t_months = caching.tracked_persist(
-                month_delta.select("month").distinct()
-            )
-            if bootstrap:
-                sh_old = month_delta.select(
-                    "month", "user_a", "user_b"
-                ).limit(0).withColumn("sh_old", F.lit(0).cast("long"))
-            else:
-                sh_old = (
-                    em_prev.join(F.broadcast(t_months), "month", "left_semi")
-                    .groupBy("month", "user_a", "user_b")
-                    .agg(
-                        F.max_by(F.col("sh_m"), F.col(ST.BATCH_COL)).alias(
-                            "sh_old"
-                        )
-                    )
-                )
-            tier_t = (
-                sh_old.join(
-                    month_delta, ["month", "user_a", "user_b"], "full_outer"
-                )
-                .select(
-                    "month",
-                    "user_a",
-                    "user_b",
-                    (
-                        F.coalesce("sh_old", F.lit(0))
-                        + F.coalesce("sh_d", F.lit(0))
-                    ).cast("long").alias("sh_m"),
-                )
-            )
-            ST.append(tier_t, em_path, batch_id, by=("month",))
-            # ---- serve: min-shared-first over the month tiers ----
-            em_now = ST.committed(
-                spark, em_path, batch_id + 1, f"{pair_cols}, sh_m long, {ST.BATCH_COL} long"
-            )
-            shared = _month_totals(em_now).where(F.col("shared_windows") >= min_shared)
-            occ = ST.committed(
-                spark, occ_path, batch_id + 1, f"month string, user_id {u_t}, nu_d long, wm_d long"
-            )
-            users = (
-                occ.where(F.col("user_id").isNotNull())
-                .groupBy("user_id", "month")
-                .agg(F.sum("nu_d").cast("long").alias("nu"))
-            )
-            wm = occ.groupBy("month").agg(
-                F.sum("wm_d").cast("long").alias("wm")
-            )
-            e_new = caching.tracked_persist(
-                G.lift_from_counts(shared, users, wm, min_lift).select(
-                    "user_a", "user_b"
-                )
-            )
-            # broadcast-ceiling gate + cache materializer, exactly the
-            # global maintainer's discipline (VERDICT r13 item 3)
-            n_edges = e_new.count()
-            prev_tier = ST.latest(spark, snap_path, below=batch_id)
-            if prev_tier is None:
-                tri_new = G.triangle_stats(
-                    e_new, "user_a", "user_b", edge_count=n_edges
-                )
-            else:
-                e_old = caching.tracked_persist(
-                    ST.read_tier(spark, snap_path, prev_tier).select("user_a", "user_b")
-                )
-                tri_old = ST.read_tier(spark, tri_path, prev_tier)
-                tri_new = G.apply_triangle_delta(
-                    tri_old, e_old, e_new, edge_count=n_edges
-                )
-            # tri_new is NOT persisted: its single consumer is the tier
-            # write, and a .persist() here compiles the wedge/correction
-            # plan as a cache build WITHOUT AQE (Spark keeps cached-plan
-            # partitioning stable), which was measured to cost the full
-            # wedge build 1.8 s -> 7.2 s at sf0.1 on identical input.
-            # Concurrent tier writes — same discipline as the global
-            # maintainer (tri_new consumes the PERSISTED e_new)
-            ST.write_concurrently(
-                lambda: ST.append(tri_new, tri_path, batch_id),
-                lambda: ST.append(e_new, snap_path, batch_id),
-            )
-            # prune superseded tiers (keep the just-written tier plus
-            # the one it read from).  em tiers of touched months older
-            # than this batch are superseded too — the rollup's max_by
-            # ignores them, pruning just reclaims storage (measured in
-            # compaction_probe_graph.py).  Per-MONTH top-2 retention:
-            # an untouched month's latest tier may be arbitrarily old
-            # and is live state; a touched month keeps its new tier
-            # plus the one the next replay would read.
-            keep = {batch_id} | ({prev_tier} if prev_tier is not None else set())
-            for path in (tri_path, snap_path):
-                ST.prune(spark, path, keep)
-            ST.prune(spark, em_path, 2)
-
-    return _apply
-
-
-def _maintain_triangles_global(
+def maintain_triangles_each_batch(
     active_path: str,
     pairs_path: str,
     occ_path: str,
@@ -2275,7 +2035,16 @@ def _maintain_triangles_global(
     ordering hazard a shared-directory swap would have).  Superseded
     tiers are pruned after the new tier commits; the prune is
     best-effort (a crash before it leaves extra tiers, which readers
-    ignore)."""
+    ignore).
+
+    One maintainer serves every corpus shape.  On a multi-month stream
+    the lift still carries every month's expectation terms (the
+    occupancy partials hold each month's n_u and W, so a month in which
+    a pair never co-occurred still counts), and the pair-count store
+    grows one additive layer per micro-batch, which
+    ``maintenance.compact_additive_partials`` folds between runs
+    (COVERAGE.md, "epoch-mode triangle maintainer", records why there
+    is no month-keyed count store)."""
     from ..operators import graph as G
 
     inner = maintain_sig_edges_each_batch(active_path, pairs_path, occ_path)
@@ -2331,175 +2100,6 @@ def _maintain_triangles_global(
             keep = {batch_id} | ({prev} if prev is not None else set())
             for path in (tri_path, edges_snap_path):
                 ST.prune(spark, path, keep)
-
-    return _apply
-
-
-def maintain_triangles_each_batch(
-    active_path: str,
-    pairs_path: str,
-    occ_path: str,
-    edges_snap_path: str,
-    tri_path: str,
-    min_shared: int = 2,
-    min_lift: float = 1.5,
-    mode: str = "auto",
-    epoch_min_months: int = 2,
-):
-    """foreachBatch function: STREAMING maintenance of per-node
-    triangle counts over the evolving significant-edge graph (VERDICT
-    r10 item 5), in one of two measured edge-state disciplines —
-    VERDICT r11 item 1 asked for month-scoped serving; BOTH scopes are
-    implemented, and since r13 the default picks between them FROM THE
-    CORPUS (VERDICT r12 item 1 — no manual caller flag):
-
-    * ``mode="global"`` (:func:`_maintain_triangles_global`) — serve
-      the full edge view from the pair/occ count partials each batch
-      and snapshot it as a ``_batch_id`` tier.  O(pair state) per
-      batch, which on a SINGLE-EPOCH corpus is also the lower bound:
-      when a batch grows W(m) of the only month, every pair's
-      independence expectation — hence every lift — genuinely
-      changes, so "only touched months" IS the whole corpus.
-    * ``mode="epoch"`` (:func:`_maintain_triangles_epoch`) — the
-      month-tier store: per batch, recompute and
-      dynamic-partition-overwrite ONLY the touched months' (pair,
-      month) state; untouched epochs' terms rest in their tiers and
-      are never rewritten.  The per-batch write is ~1/N of an N-month
-      corpus under time-ordered arrival — the df-partial scoping
-      discipline of the r9 semantic-flags and r10 sig-edges fixes.
-    * ``mode="auto"`` (default) — start global and UPGRADE to epoch,
-      once, when the number of distinct calendar months observed (the
-      occupancy store's months plus the current batch's) reaches
-      ``epoch_min_months``.  The one-way switch is recorded in a
-      sibling marker directory (``<edges_snap_path>_epoch_marker``) so
-      it survives restarts; the upgrade batch migrates state by
-      copying the latest global edge-snapshot tier into the epoch
-      layout's ``snap/`` store (so the first epoch batch still runs
-      the delta-anchored ``apply_triangle_delta`` correction, not a
-      full wedge rebuild) and the epoch maintainer's bootstrap path
-      rebuilds the month tiers from the SHARED pair/occ stores both
-      modes maintain identically.  Every step of the migration is
-      idempotent (dynamic-overwrite by ``_batch_id``; marker creation
-      last), so a crash anywhere inside the upgrade batch replays to
-      the same state.
-
-    Why the threshold and not epoch-always: on a SINGLE-month corpus
-    the month tier IS the corpus — every batch would rewrite the whole
-    pair-count state where the global discipline appends a delta-sized
-    layer (the r12 single-month A/B measured the then-current epoch
-    design +35% on the graded stream; the r13 redesign removes that
-    design's candidate-universe overhead but cannot remove the
-    full-tier rewrite, which only the calendar bounds).  From two
-    months on, time-ordered arrival rewrites ~1/N of the corpus per
-    batch and the serve folds a calendar-bounded store instead of one
-    layer per micro-batch — measured on the r13 multi-month fixture
-    (6 months at sf0.1-equivalent volume, triangle_mode_probe.py,
-    COVERAGE.md): epoch totals beat global at monthly cadence (80.9
-    vs 89.6 s) and at 3 batches/month (204.0 vs 229.8 s, where global
-    folds 18 layers against epoch's 6 month tiers), with per-batch
-    cost in BOTH modes growing with the pair universe — the lift
-    join, delta correction, and edge snapshot are irreducibly global
-    for a globally-served triangle artifact.  Hence
-    ``epoch_min_months = 2``: upgrade as soon as the calendar bound
-    means anything.  Both modes serve through :func:`serve_triangles`
-    and are prefix-equivalent to the batch recompute by
-    construction."""
-    if mode == "epoch":
-        return _maintain_triangles_epoch(
-            active_path, pairs_path, occ_path, edges_snap_path, tri_path,
-            min_shared, min_lift,
-        )
-    if mode == "global":
-        return _maintain_triangles_global(
-            active_path, pairs_path, occ_path, edges_snap_path, tri_path,
-            min_shared, min_lift,
-        )
-    if mode != "auto":
-        raise ValueError(f"unknown triangle maintainer mode: {mode!r}")
-
-    import os
-
-    from pyspark.sql import functions as F
-
-    g_fn = _maintain_triangles_global(
-        active_path, pairs_path, occ_path, edges_snap_path, tri_path,
-        min_shared, min_lift,
-    )
-    e_fn = _maintain_triangles_epoch(
-        active_path, pairs_path, occ_path, edges_snap_path, tri_path,
-        min_shared, min_lift,
-    )
-    root = edges_snap_path.rstrip("/")
-    marker = root + "_epoch_marker"
-    snap_path = os.path.join(edges_snap_path, "snap")
-
-    # Months observed so far, cached per closure (r13 "not yet
-    # optimized" item 2): the pre-upgrade dispatch needs |months seen|,
-    # which the r13 shape recomputed per batch as ONE distinct-count
-    # job unioning the batch with a rescan of the whole occ store
-    # (~0.5 s/batch on the graded stream).  The set is monotone —
-    # committed history lives in the occ store's `month` column and the
-    # rest arrived through THIS closure — so the store is read once per
-    # closure lifetime (a fresh post-crash closure re-reads it, which
-    # is exactly the replay fallback) and each batch contributes its
-    # own distinct months from the SAME collect that doubles as the
-    # empty-batch guard below.
-    months_seen: set | None = None
-
-    def _batch_months(batch_df) -> list:
-        return [
-            r["month"]
-            for r in batch_df.select(
-                F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM").alias(
-                    "month"
-                )
-            )
-            .distinct()
-            .collect()
-        ]
-
-    def _migrate(spark) -> None:
-        # global-mode snapshot tiers live directly under the root; the
-        # epoch layout's named subdirs are other stores, which the tier
-        # listing does not count
-        tiers = ST.tiers(spark, root)
-        if tiers:
-            wm = max(tiers)
-            ST.append(ST.read_tier(spark, root, wm), snap_path, wm)
-            ST.prune(spark, root, keep=set())
-        fs.mkdirs(spark, marker)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if fs.exists(spark, marker):
-            # already upgraded: no month accounting needed ever again —
-            # dispatch straight to the epoch maintainer (whose own
-            # guard handles an empty batch)
-            return e_fn(batch_df, batch_id)
-        # ONE job replaces the r13 shape's two (isEmpty + months count):
-        # the batch's distinct months double as the empty-batch guard —
-        # no months, no rows
-        months = _batch_months(batch_df)
-        if not months:
-            batch_df._graft_is_empty = True
-            return
-        batch_df._graft_is_empty = False
-        nonlocal months_seen
-        if months_seen is None:
-            months_seen = set()
-            if fs.has_parquet(spark, occ_path):
-                months_seen = {
-                    r["month"]
-                    for r in spark.read.parquet(occ_path)
-                    .select("month")
-                    .distinct()
-                    .collect()
-                }
-        months_seen.update(months)
-        if len(months_seen) >= epoch_min_months:
-            _migrate(spark)
-            return e_fn(batch_df, batch_id)
-        return g_fn(batch_df, batch_id)
 
     return _apply
 
