@@ -68,15 +68,20 @@ def test_latest_and_prune_from_the_listing(spark, store_path):
     assert _rows(spark.read.parquet(store_path)) == [(2, "x2"), (3, "x3")]
 
 
-def test_prune_keeps_newest_tiers_per_partition(spark, tmp_path):
-    path = str(tmp_path / "months")
-    for batch_id, months in ((0, ["a", "b"]), (1, ["a"]), (2, ["a"])):
-        df = spark.createDataFrame([(m, batch_id) for m in months], "month string, n long")
-        ST.append(df, path, batch_id, by=("month",))
-    ST.prune(spark, path, 2)
-    # month a keeps its two newest tiers; month b's only tier is live
-    got = sorted(tuple(r) for r in spark.read.parquet(path).select("month", ST.BATCH_COL).collect())
-    assert got == [("a", 1), ("a", 2), ("b", 0)]
+def test_empty_append_commits_an_empty_tier(spark, store_path):
+    ST.append(_frame(spark, [1, 2]), store_path, 0)
+    ST.append(_frame(spark, []), store_path, 1)
+    # the empty batch is the newest tier, not the one before it
+    assert ST.tiers(spark, store_path) == {0, 1}
+    assert ST.latest(spark, store_path, below=2) == 1
+    tier = ST.read_tier(spark, store_path, 1)
+    assert tier.columns == ["k", "v"] and tier.count() == 0
+    assert _rows(spark.read.parquet(store_path)) == [(1, "x1"), (2, "x2")]
+    # a replay of the batch with rows replaces the empty tier, and back
+    ST.append(_frame(spark, [3]), store_path, 1)
+    assert _rows(ST.read_tier(spark, store_path, 1)) == [(3, "x3")]
+    ST.append(_frame(spark, []), store_path, 1)
+    assert ST.read_tier(spark, store_path, 1).count() == 0
 
 
 def test_tiers_ignore_nested_stores(spark, tmp_path):

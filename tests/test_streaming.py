@@ -9,6 +9,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from updating_datasets_data_engineering_spark import fs
+from updating_datasets_data_engineering_spark import store as ST
 from updating_datasets_data_engineering_spark.queries import _base as QB
 from updating_datasets_data_engineering_spark.operators import ingest as I
 from updating_datasets_data_engineering_spark.operators import merge as M
@@ -292,207 +294,6 @@ def test_streaming_cdc_tombstones_match_batch(spark, tmp_path):
     assert got.where("k = 5").collect()[0]["v"] == "v5-new"
 
 
-def test_streaming_minhash_index_maintenance(spark, tmp_path):
-    """Streaming twin of incremental_minhash_pairs: two document
-    micro-batches maintain the persisted band index, pair log, and doc
-    archive; the accumulated pair log must equal the full-corpus
-    recompute over everything streamed so far."""
-    from updating_datasets_data_engineering_spark.operators import dedup as D
-    from updating_datasets_data_engineering_spark.tables import load_table
-
-    src = str(tmp_path / "docs_src")
-    docs_path = str(tmp_path / "docs_archive")
-    index_path = str(tmp_path / "band_index")
-    pairs_path = str(tmp_path / "pair_log")
-    ckpt = str(tmp_path / "idx_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    all_docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    day1 = all_docs.where(F.col("doc_id") % 10 != 0)
-    day2 = all_docs.where(F.col("doc_id") % 10 == 0)
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        SP.run_index_maintenance_available_now(
-            stream, docs_path, index_path, pairs_path, ckpt, ngram=3
-        )
-
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    conf_before = spark.conf.get(conf_key)
-    run_increment(day1)
-    # ADVICE r4: dynamic overwrite must be scoped per-write, not leaked
-    # into the shared session conf
-    assert spark.conf.get(conf_key) == conf_before
-    log1 = spark.read.parquet(pairs_path)
-    full1 = D.minhash_lsh_pairs(day1, ngram=3)
-    key = ["id_a", "id_b", "jaccard"]
-    assert _sorted_rows(log1.select(*key), key) == _sorted_rows(full1, key)
-
-    run_increment(day2)
-    log2 = spark.read.parquet(pairs_path)
-    full2 = D.minhash_lsh_pairs(all_docs, ngram=3)
-    assert _sorted_rows(log2.select(*key), key) == _sorted_rows(full2, key)
-    # the index accumulated exactly one band set per streamed doc
-    idx = spark.read.parquet(index_path)
-    assert idx.count() == idx.select("id", "band_no").distinct().count()
-    assert idx.select("id").distinct().count() == D.minhash_features(
-        all_docs, ngram=3
-    ).where(F.size("toks") > 0).count()
-
-
-def test_streaming_index_compaction(spark, tmp_path):
-    """VERDICT r4 item 6: the _batch_id-partitioned index grows one
-    partition per micro-batch forever; compact_batch_index collapses
-    the committed partitions into ONE watermark partition through the
-    crash-safe swap, and the stream keeps appending afterwards with
-    identical probe results."""
-    import glob
-
-    from updating_datasets_data_engineering_spark.operators import dedup as D
-    from updating_datasets_data_engineering_spark.operators import maintenance as MNT
-    from updating_datasets_data_engineering_spark.tables import load_table
-
-    src = str(tmp_path / "docs_src")
-    docs_path = str(tmp_path / "docs_archive")
-    index_path = str(tmp_path / "band_index")
-    pairs_path = str(tmp_path / "pair_log")
-    ckpt = str(tmp_path / "idx_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    all_docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def run(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        SP.run_index_maintenance_available_now(
-            stream, docs_path, index_path, pairs_path, ckpt, ngram=3
-        )
-
-    def partition_dirs(path):
-        return sorted(
-            os.path.basename(p) for p in glob.glob(path + "/_batch_id=*")
-        )
-
-    run(all_docs.where(F.col("doc_id") % 3 == 0))
-    run(all_docs.where(F.col("doc_id") % 3 == 1))
-    assert len(partition_dirs(index_path)) == 2
-
-    for path in (index_path, pairs_path, docs_path):
-        before, after = MNT.compact_batch_index(spark, path)
-        assert after <= before
-        # one RESERVED compaction tier — no replayable batch id can
-        # dynamic-overwrite it (ADVICE r9 item 3)
-        assert partition_dirs(path) == ["_batch_id=-1"]
-        # crash-safe swap left no staging/old residue
-        assert not os.path.exists(path + ".staging")
-        assert not os.path.exists(path + ".old")
-
-    # the stream continues over the compacted state: batch 2 appends its
-    # own partition and the accumulated pair log still equals the
-    # full-corpus recompute
-    run(all_docs.where(F.col("doc_id") % 3 == 2))
-    key = ["id_a", "id_b", "jaccard"]
-    log = spark.read.parquet(pairs_path)
-    full = D.minhash_lsh_pairs(all_docs, ngram=3)
-    assert _sorted_rows(log.select(*key), key) == _sorted_rows(full, key)
-    assert sorted(partition_dirs(index_path)) == ["_batch_id=-1", "_batch_id=2"]
-
-
-def test_streaming_index_delete_lifecycle(spark, tmp_path):
-    """VERDICT r4 item 4: a CDC tombstone must remove the doc from ALL
-    persisted dedup state — doc archive, band index, pair log — and
-    re-close its cluster, so the index never diverges from the corpus
-    under GDPR-style deletes.  Post-delete, every piece of state must
-    equal a full recompute on the post-delete corpus."""
-    from updating_datasets_data_engineering_spark.operators import dedup as D
-    from updating_datasets_data_engineering_spark.tables import load_table
-
-    src = str(tmp_path / "docs_src")
-    docs_path = str(tmp_path / "docs_archive")
-    index_path = str(tmp_path / "band_index")
-    pairs_path = str(tmp_path / "pair_log")
-    labels_path = str(tmp_path / "labels")
-    ckpt = str(tmp_path / "idx_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    all_docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def run(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        SP.run_index_maintenance_available_now(
-            stream, docs_path, index_path, pairs_path, ckpt,
-            ngram=3, op_col="op", labels_path=labels_path,
-        )
-
-    # batch 1: insert the corpus; label store must equal the closure
-    run(all_docs.withColumn("op", F.lit("upsert")))
-    full = D.minhash_lsh_pairs(all_docs, ngram=3)
-    full_labels = D.connected_components(full)
-    lcols = ["id", "cluster_id"]
-    assert _sorted_rows(spark.read.parquet(labels_path), lcols) == _sorted_rows(
-        full_labels, lcols
-    )
-
-    # batch 2: tombstone the HUB (min id) of a multi-member cluster —
-    # the surviving members must be relabelled to their new min
-    victim = (
-        full_labels.groupBy("cluster_id")
-        .count()
-        .where(F.col("count") >= 2)
-        .agg(F.min("cluster_id"))
-        .collect()[0][0]
-    )
-    run(
-        spark.createDataFrame(
-            [(int(victim), "", "delete")], "doc_id long, text string, op string"
-        )
-    )
-
-    assert spark.read.parquet(docs_path).where(F.col("doc_id") == victim).count() == 0
-    assert spark.read.parquet(index_path).where(F.col("id") == victim).count() == 0
-    plog = spark.read.parquet(pairs_path)
-    assert plog.where(
-        (F.col("id_a") == victim) | (F.col("id_b") == victim)
-    ).count() == 0
-
-    remaining = all_docs.where(F.col("doc_id") != victim)
-    key = ["id_a", "id_b", "jaccard"]
-    expect_pairs = D.minhash_lsh_pairs(remaining, ngram=3)
-    assert _sorted_rows(plog.select(*key), key) == _sorted_rows(expect_pairs, key)
-    expect_labels = D.connected_components(expect_pairs)
-    assert _sorted_rows(spark.read.parquet(labels_path), lcols) == _sorted_rows(
-        expect_labels, lcols
-    )
-
-    # batch 3: re-insert the deleted doc's text under a NEW id — the
-    # pruned index must still serve probes, the new doc must rejoin its
-    # old cluster, and end state must equal a full recompute on the
-    # final corpus (insert ⊖ delete ⊕ insert, the complete CDC cycle)
-    reborn_id = 10_000_000
-    victim_text = all_docs.where(F.col("doc_id") == victim).collect()[0]["text"]
-    run(
-        spark.createDataFrame(
-            [(reborn_id, victim_text, "upsert")],
-            "doc_id long, text string, op string",
-        )
-    )
-    final_docs = remaining.unionByName(
-        spark.createDataFrame([(reborn_id, victim_text)], "doc_id long, text string")
-    )
-    final_pairs = D.minhash_lsh_pairs(final_docs, ngram=3)
-    assert _sorted_rows(
-        spark.read.parquet(pairs_path).select(*key), key
-    ) == _sorted_rows(final_pairs, key)
-    assert _sorted_rows(spark.read.parquet(labels_path), lcols) == _sorted_rows(
-        D.connected_components(final_pairs), lcols
-    )
-
-
 def test_streaming_progress_recorder(spark, record_files, tmp_path):
     """The StreamingQueryListener-based recorder captures per-batch
     progress: total input rows equal the source, batch durations are
@@ -542,106 +343,6 @@ def test_streaming_sliding_active_users_equals_batch(spark, sf_dir, tmp_path):
     assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
         expected.select(*cols), cols
     )
-
-
-def test_streaming_boilerplate_maintenance(spark, tmp_path):
-    """Streaming twin of docs_boilerplate_incremental: three document
-    micro-batches maintain the span-chunk index and the stripped-corpus
-    materialized view; after each prefix the clean store must equal the
-    full batch strip recomputed over everything streamed so far
-    (including archive docs RE-stripped when a later batch pushes one
-    of their spans across the boilerplate threshold)."""
-    from updating_datasets_data_engineering_spark.operators import curation as CUR
-    from updating_datasets_data_engineering_spark.tables import load_table
-
-    src = str(tmp_path / "bp_src")
-    docs_path = str(tmp_path / "bp_archive")
-    index_path = str(tmp_path / "bp_span_index")
-    clean_path = str(tmp_path / "bp_clean")
-    ckpt = str(tmp_path / "bp_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    all_docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    batches = [
-        all_docs.where(F.col("doc_id") % 3 == i) for i in range(3)
-    ]
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_boilerplate_each_batch(docs_path, index_path, clean_path)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    streamed = None
-    cols = ["doc_id", "n_blocks", "n_removed", "clean_text"]
-    for b in batches:
-        run_increment(b)
-        streamed = b if streamed is None else streamed.unionByName(b)
-        got = spark.read.parquet(clean_path)
-        chunks = CUR.chunk_frame(streamed)
-        want = CUR.strip_against(streamed, CUR.boilerplate_spans(chunks))
-        assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
-            want.select(*cols), cols
-        )
-    # every streamed doc is in the view exactly once
-    assert spark.read.parquet(clean_path).count() == all_docs.count()
-
-
-def test_streaming_value_histogram_maintenance(spark, tmp_path):
-    """Streaming twin of incremental_value_quantiles: three event
-    micro-batches maintain the per-batch histogram state and the
-    quantile dashboard view; after every prefix the view must equal
-    quantiles computed from scratch on everything streamed so far
-    (sketch merge ≡ full histogram, exactly)."""
-    from updating_datasets_data_engineering_spark.operators import incremental as INC
-
-    src = str(tmp_path / "vh_src")
-    hist_path = str(tmp_path / "vh_hist")
-    q_path = str(tmp_path / "vh_quantiles")
-    ckpt = str(tmp_path / "vh_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    events = load_table(spark, sf_dir, "events").select("event_id", "value")
-    batches = [events.where(F.col("event_id") % 3 == i) for i in range(3)]
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_value_histogram_each_batch(hist_path, q_path, "value", 1.0)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    streamed = None
-    cols = ["q", "n_events", "estimate"]
-    for b in batches:
-        run_increment(b)
-        streamed = b if streamed is None else streamed.unionByName(b)
-        got = spark.read.parquet(q_path)
-        want = INC.quantiles_from_histogram(
-            INC.histogram_state(streamed, "value", 1.0), 1.0
-        )
-        assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
-            want.select(*cols), cols
-        )
-    n = spark.read.parquet(q_path).select("n_events").distinct().collect()
-    assert n[0][0] == events.count()
 
 
 def test_streaming_sig_edges_maintenance(spark, tmp_path):
@@ -750,6 +451,57 @@ def test_streaming_triangles_maintenance(spark, tmp_path):
         assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
             want.select(*cols), cols
         )
+
+
+def test_streaming_triangles_when_every_edge_drops_out(spark, tmp_path):
+    """A batch whose served edge view is empty must still commit its
+    (empty) triangle tier, or the previous tier stays the newest and
+    the stream serves a triangle table for edges that no longer pass
+    the lift.  Batch 0 makes (1, 2) significant (shared
+    2 of 6 hours, lift 3); batch 1 adds solo hours for both users, so
+    the lift falls to 0.78 and no edge is left."""
+    import datetime as dt
+    import unittest.mock as mock
+
+    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.operators import graph as G
+
+    paths = {k: str(tmp_path / k) for k in ("active", "pairs", "occ", "edges_snap", "tri")}
+    fn = SP.maintain_triangles_each_batch(
+        paths["active"], paths["pairs"], paths["occ"], paths["edges_snap"], paths["tri"]
+    )
+
+    def events(rows, first_id):
+        return spark.createDataFrame(
+            [
+                (first_id + i, dt.datetime(2024, 1, 15, hour, 10), user)
+                for i, (hour, user) in enumerate(rows)
+            ],
+            "event_id long, ts timestamp, user_id long",
+        )
+
+    batches = [
+        # users 1 and 2 share hours 0-1; user 3 is alone in hours 2-5
+        events([(0, 1), (0, 2), (1, 1), (1, 2)] + [(h, 3) for h in range(2, 6)], 0),
+        # user 1 alone in hours 6-9, user 2 alone in hours 10-13
+        events([(h, 1) for h in range(6, 10)] + [(h, 2) for h in range(10, 14)], 100),
+    ]
+    cols = ["node", "degree", "triangles", "clustering"]
+    streamed = None
+    sizes = []
+    for batch_id, b in enumerate(batches):
+        fn(b, batch_id)
+        streamed = b if streamed is None else streamed.unionByName(b)
+        got = SP.serve_triangles(spark, paths["tri"], paths["pairs"], paths["occ"])
+        with mock.patch.object(QB, "load_table", lambda s, d, name: streamed):
+            edges = R._significant_edges(spark, "")
+        want = G.triangle_stats(edges, "user_a", "user_b")
+        assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
+            want.select(*cols), cols
+        ), f"prefix {batch_id}"
+        sizes.append(got.count())
+    assert sizes == [2, 0]
+    assert ST.latest(spark, paths["tri"], below=2) == 1
 
 
 def test_streaming_triangles_multimonth(spark, tmp_path):
@@ -903,54 +655,6 @@ def test_hourly_streaming_watermark_drop(spark, tmp_path):
     assert dropped == n_late, (dropped, n_late)
 
 
-def test_streaming_grouped_histogram_maintenance(spark, tmp_path):
-    """Grouped variant of the histogram maintainer: per-event-type
-    quantile dashboards maintained from a stream equal the from-scratch
-    grouped recompute after every prefix."""
-    from updating_datasets_data_engineering_spark.operators import incremental as INC
-
-    src = str(tmp_path / "gh_src")
-    hist_path = str(tmp_path / "gh_hist")
-    q_path = str(tmp_path / "gh_quantiles")
-    ckpt = str(tmp_path / "gh_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    events = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    batches = [events.where(F.col("event_id") % 2 == i) for i in range(2)]
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_value_histogram_each_batch(
-                    hist_path, q_path, "value", 1.0, keys=("event_type",)
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    streamed = None
-    cols = ["event_type", "q", "n_events", "estimate"]
-    for b in batches:
-        run_increment(b)
-        streamed = b if streamed is None else streamed.unionByName(b)
-        got = spark.read.parquet(q_path)
-        want = INC.quantiles_from_histogram(
-            INC.histogram_state(streamed, "value", 1.0, keys=("event_type",)),
-            1.0,
-            keys=("event_type",),
-        )
-        assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
-            want.select(*cols), cols
-        )
-
-
 def test_sig_edges_state_compaction(spark, tmp_path):
     """The edge-maintenance states grow one partition per micro-batch;
     compaction must collapse them without changing the SERVED edge
@@ -1034,7 +738,6 @@ def test_sig_edges_resume_after_crashed_compaction_swap(spark, tmp_path):
     ``.old`` for good."""
     import unittest.mock as mock
 
-    from updating_datasets_data_engineering_spark import fs
     from updating_datasets_data_engineering_spark import registry as R
     from updating_datasets_data_engineering_spark.operators import maintenance as MNT
 
@@ -1141,10 +844,15 @@ def test_streaming_ann_index_maintenance(spark, tmp_path):
             centroids=cents, cells=cells,
         )
 
+    # store writes use per-write options only; the session conf is
+    # never changed under the caller
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(conf_key)
     streamed = None
     for b in batches:
         run_increment(b)
         streamed = b if streamed is None else streamed.unionByName(b)
+        assert spark.conf.get(conf_key) == conf_before
         cents = spark.read.parquet(cents_path)
         want = SIM.ivf_ann_topk(
             streamed, queries, k=5, n_cells=16, n_probe=4, centroids=cents
@@ -1188,460 +896,15 @@ def test_streaming_ann_index_maintenance(spark, tmp_path):
     )
     assert post_delete == _sorted_rows(want.select(*topk_cols), topk_cols)
 
-    # compaction folds the per-batch partitions, result unchanged
+    # compaction folds the per-batch partitions into the one reserved
+    # tier, through the swap (no staging or rename-aside residue);
+    # result unchanged
     before, after = MNT.compact_batch_index(spark, cells_path)
     assert after <= before
+    assert ST.tiers(spark, cells_path) == {ST.COMPACTED}
+    assert not fs.exists(spark, fs.staging_path(cells_path))
+    assert not fs.exists(spark, fs.old_path(cells_path))
     assert _sorted_rows(stored_topk(), topk_cols) == post_delete
-
-
-def test_streaming_zonemap_maintenance(spark, tmp_path):
-    """Streaming twin of events_zorder_incremental: three event
-    micro-batches maintain the frozen-bounds zonemap; after every
-    prefix the merged live zonemap equals the frozen-bounds full
-    recompute on everything streamed so far."""
-    from updating_datasets_data_engineering_spark.operators import layout as L
-
-    src = str(tmp_path / "zm_src")
-    zm_path = str(tmp_path / "zm_state")
-    bounds_path = str(tmp_path / "zm_bounds")
-    ckpt = str(tmp_path / "zm_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    ev = load_table(spark, sf_dir, "events").select(
-        F.unix_millis("ts").alias("x"), F.col("value").alias("y"),
-        (F.col("event_id") % 3).alias("b"),
-    )
-    batches = [ev.where(F.col("b") == i).drop("b") for i in range(3)]
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_zonemap_each_batch(zm_path, bounds_path)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    streamed = None
-    for b in batches:
-        run_increment(b)
-        streamed = b if streamed is None else streamed.unionByName(b)
-        bounds = spark.read.parquet(bounds_path)
-        live = SP.read_live_zonemap(spark, zm_path)
-        want = L.zorder_shards(streamed, "x", "y", bounds=bounds)
-        assert sorted(map(tuple, live.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-    # bounds froze at batch 0 and never moved
-    b0 = L.zorder_bounds(batches[0], "x", "y").first()
-    assert spark.read.parquet(bounds_path).first() == b0
-
-
-def test_streaming_k_anonymity_maintenance(spark, tmp_path):
-    """Streaming twin of events_k_anonymity: three event micro-batches
-    maintain the anonymity view; after every prefix the view equals the
-    batch query recomputed on everything streamed so far — including
-    ARCHIVED events whose released granularity refines when a later
-    batch pushes their class over k (the monotone-refinement property
-    the maintainer exploits)."""
-    from updating_datasets_data_engineering_spark import registry as R
-
-    src = str(tmp_path / "ka_src")
-    events_path = str(tmp_path / "ka_archive")
-    view_path = str(tmp_path / "ka_view")
-    ckpt = str(tmp_path / "ka_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    batches = [ev.where(F.col("event_id") % 3 == i) for i in range(3)]
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_k_anonymity_each_batch(events_path, view_path)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    import unittest.mock as mock
-
-    streamed = None
-    cols = ["event_id", "anon_level", "class_size"]
-    refined_seen = False
-    prev_levels = {}
-    for b in batches:
-        run_increment(b)
-        streamed = b if streamed is None else streamed.unionByName(b)
-        with mock.patch.object(QB, "load_table", lambda s, d, t: streamed):
-            want = R.events_k_anonymity(spark, "ignored")
-        got = spark.read.parquet(view_path)
-        assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
-            want.select(*cols), cols
-        )
-        levels = {r.event_id: r.anon_level for r in got.collect()}
-        order = {None: 0, "month": 1, "day": 2, "hour": 3}
-        for eid, lvl in prev_levels.items():
-            assert order[levels[eid]] >= order[lvl], "level coarsened"
-            if order[levels[eid]] > order[lvl]:
-                refined_seen = True
-        prev_levels = levels
-    assert refined_seen, "fixture batches should refine some archived event"
-
-
-def test_streaming_span_index_maintenance(spark, tmp_path):
-    """Streaming twin of docs_repeated_spans_incremental: three document
-    micro-batches maintain the posting state, the additive per-gram df
-    sketch, and the materialized span view.  After EVERY prefix the
-    view must equal the full batch recompute on everything streamed so
-    far (the hard case being batch N creating duplication that fuses
-    with intervals batch N-1 already stored), and the merged sketch
-    must equal the from-scratch per-gram distinct-doc counts."""
-    from updating_datasets_data_engineering_spark.operators import dedup as D
-
-    src = str(tmp_path / "sp_src")
-    posting_path = str(tmp_path / "sp_posting")
-    sketch_path = str(tmp_path / "sp_sketch")
-    spans_path = str(tmp_path / "sp_spans")
-    ckpt = str(tmp_path / "sp_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    batches = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_span_index_each_batch(
-                    posting_path, sketch_path, spans_path, k=10
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    streamed = None
-    cols = ["doc_id", "span_start", "span_end", "span_tokens"]
-    for b in batches:
-        run_increment(b)
-        streamed = b if streamed is None else streamed.unionByName(b)
-        got = spark.read.parquet(spans_path).select(*cols)
-        want = D.repeated_span_intervals(streamed, k=10)
-        assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
-        merged_sketch = (
-            spark.read.parquet(sketch_path)
-            .groupBy("gh")
-            .agg(F.sum("n_docs").cast("long").alias("n_docs"))
-        )
-        want_sketch = D.span_gram_df(D.span_posting_index(streamed, k=10))
-        assert _sorted_rows(merged_sketch, ["gh", "n_docs"]) == _sorted_rows(
-            want_sketch, ["gh", "n_docs"]
-        )
-
-
-def test_streaming_span_state_retraction_and_resume(spark, tmp_path):
-    """Between-runs delete maintenance for the streaming span state:
-    after two streamed batches, retract a doc subset — the view must
-    equal the batch recompute on the SURVIVORS (tombstoned rows gone,
-    touched survivors re-merged, including clears) and the sketch must
-    equal the from-scratch survivor df counts.  Then stream a THIRD
-    batch: the maintainer probes the corrected state, so a gram whose
-    df the deletion dropped to 1 and the new batch re-duplicates must
-    flip back in — prefix equivalence on survivors ∪ batch 3."""
-    from updating_datasets_data_engineering_spark.operators import dedup as D
-
-    src = str(tmp_path / "rt_src")
-    posting_path = str(tmp_path / "rt_posting")
-    sketch_path = str(tmp_path / "rt_sketch")
-    spans_path = str(tmp_path / "rt_spans")
-    ckpt = str(tmp_path / "rt_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    batches = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_span_index_each_batch(
-                    posting_path, sketch_path, spans_path, k=10
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    run_increment(batches[0])
-    run_increment(batches[1])
-    streamed = batches[0].unionByName(batches[1])
-    tombs = streamed.where(F.col("doc_id") % 5 == 2).select("doc_id")
-    survivors = streamed.join(tombs, "doc_id", "left_anti")
-
-    SP.retract_span_state(spark, posting_path, sketch_path, spans_path, tombs, k=10)
-
-    cols = ["doc_id", "span_start", "span_end", "span_tokens"]
-    got = spark.read.parquet(spans_path).select(*cols)
-    want = D.repeated_span_intervals(survivors, k=10)
-    assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
-    merged_sketch = (
-        spark.read.parquet(sketch_path)
-        .groupBy("gh")
-        .agg(F.sum("n_docs").cast("long").alias("n_docs"))
-    )
-    want_sketch = D.span_gram_df(D.span_posting_index(survivors, k=10))
-    assert _sorted_rows(merged_sketch, ["gh", "n_docs"]) == _sorted_rows(
-        want_sketch, ["gh", "n_docs"]
-    )
-
-    # idempotence: re-running the SAME retraction converges to the
-    # same state (the crash-recovery contract)
-    SP.retract_span_state(spark, posting_path, sketch_path, spans_path, tombs, k=10)
-    got2 = spark.read.parquet(spans_path).select(*cols)
-    assert _sorted_rows(got2, cols) == _sorted_rows(want, cols)
-
-    # resume streaming on the corrected state
-    run_increment(batches[2])
-    after = survivors.unionByName(batches[2])
-    got3 = spark.read.parquet(spans_path).select(*cols)
-    want3 = D.repeated_span_intervals(after, k=10)
-    assert _sorted_rows(got3, cols) == _sorted_rows(want3, cols)
-
-
-def test_streaming_span_state_survives_full_deletion(spark, tmp_path):
-    """Degenerate delete: tombstoning EVERY streamed doc leaves states
-    holding only _SUCCESS markers (no parquet data files) — the
-    has_parquet guards must route every reader through the no-state
-    path, and a subsequent batch must rebuild cleanly (prefix
-    equivalence = recompute on the new batch alone)."""
-    from updating_datasets_data_engineering_spark.operators import dedup as D
-
-    src = str(tmp_path / "fd_src")
-    posting_path = str(tmp_path / "fd_posting")
-    sketch_path = str(tmp_path / "fd_sketch")
-    spans_path = str(tmp_path / "fd_spans")
-    ckpt = str(tmp_path / "fd_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    b1 = docs.where(F.col("doc_id") % 2 == 0)
-    b2 = docs.where(F.col("doc_id") % 2 == 1)
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_span_index_each_batch(
-                    posting_path, sketch_path, spans_path, k=10
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    run_increment(b1)
-    SP.retract_span_state(
-        spark, posting_path, sketch_path, spans_path, b1.select("doc_id"), k=10
-    )
-    assert spark.read.parquet(spans_path).count() == 0
-    run_increment(b2)
-    cols = ["doc_id", "span_start", "span_end", "span_tokens"]
-    got = spark.read.parquet(spans_path).select(*cols)
-    want = D.repeated_span_intervals(b2, k=10)
-    assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
-
-
-def test_retract_span_state_replay_after_partial_crash(spark, tmp_path):
-    """ADVICE r7 (medium): the crash contract between the three store
-    swaps.  retract_span_state promises convergence under replay with
-    the same tombstones after a crash at ANY point; the r7 code order
-    (sketch before posting) had a window — crash after the sketch swap
-    but before the posting swap — where the replay read the
-    already-decremented sketch against the still-tombstoned posting
-    and double-subtracted df.  The fixed order is view → posting →
-    sketch.  This test reconstructs each crash state explicitly from
-    before/after snapshots and asserts the replay converges to the
-    completed-run stores at every window."""
-    import shutil
-
-    from updating_datasets_data_engineering_spark.operators import dedup as D
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") < 400)
-    )
-    posting_path = str(tmp_path / "posting")
-    sketch_path = str(tmp_path / "sketch")
-    spans_path = str(tmp_path / "spans")
-
-    def write_state():
-        post = D.span_posting_index(docs, k=10).withColumn(
-            "_batch_id", F.lit(0).cast("long")
-        )
-        post.write.mode("overwrite").partitionBy("_batch_id").parquet(posting_path)
-        D.span_gram_df(post.select("doc_id", "pos", "gh")).withColumn(
-            "_batch_id", F.lit(0).cast("long")
-        ).write.mode("overwrite").partitionBy("_batch_id").parquet(sketch_path)
-        D.repeated_span_intervals(docs, k=10).write.mode("overwrite").parquet(
-            spans_path
-        )
-
-    def snap(tag):
-        d = tmp_path / tag
-        for p in (posting_path, sketch_path, spans_path):
-            shutil.copytree(p, d / os.path.basename(p))
-        return d
-
-    def restore(store_path, snap_dir):
-        shutil.rmtree(store_path, ignore_errors=True)
-        shutil.copytree(snap_dir / os.path.basename(store_path), store_path)
-
-    def read_all():
-        cols = ["doc_id", "span_start", "span_end", "span_tokens"]
-        spans = _sorted_rows(spark.read.parquet(spans_path).select(*cols), cols)
-        post = _sorted_rows(
-            spark.read.parquet(posting_path).select("doc_id", "pos", "gh"),
-            ["doc_id", "pos", "gh"],
-        )
-        sk = _sorted_rows(
-            spark.read.parquet(sketch_path)
-            .groupBy("gh")
-            .agg(F.sum("n_docs").cast("long").alias("n_docs")),
-            ["gh", "n_docs"],
-        )
-        return spans, post, sk
-
-    write_state()
-    tombs = docs.where(F.col("doc_id") % 5 == 2).select("doc_id")
-    old = snap("pre")
-    SP.retract_span_state(spark, posting_path, sketch_path, spans_path, tombs, k=10)
-    expected = read_all()
-    new = snap("post")
-
-    # crash window A: only the VIEW swap landed
-    restore(spans_path, new)
-    restore(posting_path, old)
-    restore(sketch_path, old)
-    SP.retract_span_state(spark, posting_path, sketch_path, spans_path, tombs, k=10)
-    assert read_all() == expected
-
-    # crash window B: view + POSTING landed, sketch still old — the
-    # exact r7 double-subtract window
-    restore(spans_path, new)
-    restore(posting_path, new)
-    restore(sketch_path, old)
-    SP.retract_span_state(spark, posting_path, sketch_path, spans_path, tombs, k=10)
-    assert read_all() == expected
-
-    # full-deletion crash: posting deleted, sketch orphaned — the
-    # replay must sweep the orphan and converge to no-state
-    restore(spans_path, new)
-    restore(sketch_path, old)
-    shutil.rmtree(posting_path, ignore_errors=True)
-    SP.retract_span_state(
-        spark, posting_path, sketch_path, spans_path, docs.select("doc_id"), k=10
-    )
-    from updating_datasets_data_engineering_spark import fs
-
-    assert not fs.has_parquet(spark, posting_path)
-    assert not fs.has_parquet(spark, sketch_path)
-
-
-def test_streaming_containment_index_maintenance(spark, tmp_path):
-    """Streaming twin of dedup_containment_incremental (VERDICT r7
-    item 8): after ANY prefix of batches the pairs view equals the
-    batch ``containment_pairs`` over the streamed prefix.  max_df is
-    chosen small enough that later batches push shingles OVER the df
-    cap, exercising the eviction re-verify leg (existing pairs must
-    lose the evicted shingles' shared counts — the non-monotone case
-    the span family doesn't have)."""
-    from updating_datasets_data_engineering_spark.operators import dedup as D
-
-    src = str(tmp_path / "c_src")
-    posting_path = str(tmp_path / "c_posting")
-    df_path = str(tmp_path / "c_df")
-    sizes_path = str(tmp_path / "c_sizes")
-    pairs_path = str(tmp_path / "c_pairs")
-    ckpt = str(tmp_path / "c_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    batches = [docs.where(F.col("doc_id") % 3 == i) for i in range(3)]
-    threshold, max_df = 0.5, 8
-
-    def run_increment(batch_df):
-        batch_df.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(batch_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                SP.maintain_containment_index_each_batch(
-                    posting_path, df_path, sizes_path, pairs_path,
-                    threshold=threshold, max_df=max_df,
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .outputMode("update")
-            .start()
-        )
-        q.awaitTermination()
-
-    cols = ["id_a", "id_b", "containment"]
-    prefix = None
-    crossings = 0
-    for i, b in enumerate(batches):
-        prev_prefix = prefix
-        prefix = b if prefix is None else prefix.unionByName(b)
-        if prev_prefix is not None:
-            # count shingles whose df crosses the cap with this batch —
-            # the eviction leg must have real work at least once
-            old_df = D.containment_df(D.containment_posting(prev_prefix))
-            new_df = D.containment_df(D.containment_posting(prefix))
-            crossings += (
-                old_df.alias("o")
-                .join(new_df.alias("n"), "sh")
-                .where(
-                    (F.col("o.df") >= 2) & (F.col("o.df") <= max_df)
-                    & (F.col("n.df") > max_df)
-                )
-                .count()
-            )
-        run_increment(b)
-        got = spark.read.parquet(pairs_path).select(*cols)
-        want = D.containment_pairs(prefix, threshold=threshold, max_df=max_df)
-        assert _sorted_rows(got, cols) == _sorted_rows(want, cols), f"prefix {i}"
-    assert crossings > 0, "fixture must exercise the df-cap eviction leg"
 
 
 def test_streaming_bm25_index_maintenance(spark, tmp_path):
@@ -2078,3 +1341,30 @@ def test_append_finalized_matches_upsert_and_replays(spark, tmp_path):
     assert _sorted_rows(
         spark.read.parquet(app_path).drop("_batch_id"), cols
     ) == before
+
+
+def test_every_stream_maintainer_is_graded():
+    """A ``maintain_*_each_batch`` maintainer earns its place through a
+    registered query under ``queries/`` (which its oracle grades); one
+    that only tests reach is dead weight.  Every maintainer defined in
+    ``streaming/pipeline.py`` must be called from a ``queries`` module."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(SP.__file__).resolve().parent.parent
+    tree = ast.parse((pkg / "streaming" / "pipeline.py").read_text())
+    maintainers = {
+        node.name
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+        and node.name.startswith("maintain_")
+        and node.name.endswith("_each_batch")
+    }
+    assert maintainers
+    called = {
+        getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+        for path in (pkg / "queries").rglob("*.py")
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+    }
+    assert sorted(maintainers - called) == []

@@ -88,11 +88,6 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     return bool(fs.rename(s, d))
 
 
-def mkdirs(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs_and_path(spark, path)
-    return bool(fs.mkdirs(p))
-
-
 def list_files(
     spark: SparkSession, path: str, suffix: str | None = None
 ) -> list[tuple[str, int]]:

@@ -4,8 +4,7 @@ boilerplate-span detection, and strip application.
 The span-granular family (alignment-quantized exact-substring dedup,
 Lee et al. 2021, public) shared by the batch queries
 (``registry.docs_boilerplate_strip`` / ``docs_cross_doc_dup_rate`` /
-``docs_boilerplate_incremental``) and the streaming index maintainer
-(``streaming.pipeline.maintain_boilerplate_each_batch``).
+``docs_boilerplate_incremental``).
 
 Scale notes (100 TB): every frame here keys on the SPAN text — a
 uniform high-cardinality hash key — so aggregates and anti joins are

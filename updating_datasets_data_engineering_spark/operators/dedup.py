@@ -162,10 +162,8 @@ def incremental_containment_pairs(
     containment pairs over archive ∪ delta RESTRICTED to pairs with at
     least one DELTA endpoint.  Archive–archive pairs are yesterday's
     output (inserts can only LOWER their measured containment via
-    max_df evictions — the documented lower-bound semantics — and the
-    eviction re-verify is the streaming maintainer's job, where the
-    pairs view is persisted; see
-    ``streaming.pipeline.maintain_containment_index_each_batch``).
+    max_df evictions — the documented lower-bound semantics; a full
+    :func:`containment_pairs` run re-verifies them).
 
     Why the restriction is exact, not approximate: a shingle newly
     entering the df window (archive df 1, delta brings ≥ 2) has ALL its
@@ -189,8 +187,7 @@ def incremental_containment_pairs(
     PRECONDITION (ADVICE r8): delta and archive id sets must be
     DISJOINT — re-inserting an id already in ``sizes_state`` is an
     upsert, which this insert-only path does not model (the caller
-    must retract first; the streaming maintainer's delete leg exists
-    for exactly that).  The delta×archive join below guards
+    must retract first, with :func:`retract_containment_pairs`).  The delta×archive join below guards
     ``d.id != a.id`` so an id collision cannot emit least/greatest
     self-pairs with containment 1.0, and the duplicated sizes row
     would otherwise silently inflate pair denominators — hence the

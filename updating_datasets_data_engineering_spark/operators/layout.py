@@ -242,8 +242,8 @@ def retract_zonemaps(
 # tests/test_scale_layout.py reads the actual footers), and quantile coding
 # keeps heavy-skew columns from degenerating the curve; zorder_shards above
 # is the SORTLESS path — map-side top-bit Morton sharding + an explicit
-# zonemap sketch — which is what the incremental and streaming maintainers
-# keep up to date without ever re-laying-out the archive.
+# zonemap sketch — which is what the incremental query keeps up to date
+# without ever re-laying-out the archive.
 # ---------------------------------------------------------------------------
 
 

@@ -125,9 +125,7 @@ def docs_boilerplate_strip(spark, sf_dir, min_docs: int = 2):
 
 
 def _strip_docs_against(docs, boiler):
-    """Shared strip application — see operators/curation.strip_against
-    (moved there so the streaming maintainer can reuse it without a
-    registry import)."""
+    """Shared strip application — see operators/curation.strip_against."""
     from ..operators import curation as CUR
 
     return CUR.strip_against(docs, boiler)

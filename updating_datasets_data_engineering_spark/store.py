@@ -6,13 +6,13 @@ made idempotent per micro-batch: *Structured Streaming* gives
 ``foreachBatch`` exactly-once output only when each batch's sink write
 is idempotent by batch id, and this module is where that holds.
 
-Layout.  A store is a parquet directory partitioned by ``_batch_id``
-(optionally under extra partition columns, ``by``).  Each micro-batch
-lands as its own tier ``_batch_id=N`` (:func:`append`), replacing only
-that tier, so a crash-replayed batch rewrites exactly its own tier and
-nothing else.  A store that has never held a row may be *flat*: one
-schema-bearing empty file, so it stays readable; the first append over
-it moves the store to the tiered layout.
+Layout.  A store is a parquet directory partitioned by ``_batch_id``.
+Each micro-batch lands as its own tier ``_batch_id=N`` (:func:`append`),
+replacing only that tier, so a crash-replayed batch rewrites exactly
+its own tier and nothing else; an empty batch still commits its tier.
+A store that has never held a row may be *flat*: one schema-bearing
+empty file, so it stays readable; the first append over it moves the
+store to the tiered layout.
 
 Reads.  Maintenance reads take the committed state only —
 ``_batch_id < batch_id`` (:func:`committed`) — so a replay never sees
@@ -54,28 +54,20 @@ BATCH_COL = "_batch_id"
 COMPACTED = -1
 
 
-def _tier_dirs(spark: SparkSession, path: str) -> dict[tuple, str]:
-    """``{(partition dirs above the tier..., tier id): tier dir}`` for
-    the store at ``path``, found by globbing ``_batch_id=*`` under zero
-    or more levels of ``key=value`` partition directories.  Named
-    subdirectories (another store nested under this root, a staging
-    dir) are not part of this store."""
+def _tier_dirs(spark: SparkSession, path: str) -> dict[int, str]:
+    """``{tier id: tier dir}`` for the store at ``path``, from one glob
+    of ``_batch_id=*``.  Named subdirectories (another store nested
+    under this root, a staging dir) are not part of this store."""
     root = fs.qualified(spark, path).rstrip("/")
-    out: dict[tuple, str] = {}
-    level = root
-    while True:
-        for d in fs.glob(spark, f"{level}/{BATCH_COL}=*"):
-            rel = d[len(root) + 1 :].split("/")
-            out[(*rel[:-1], int(rel[-1].split("=", 1)[1]))] = d
-        level += "/*=*"
-        if not fs.glob(spark, level):
-            return out
+    return {
+        int(d.rsplit("=", 1)[1]): d for d in fs.glob(spark, f"{root}/{BATCH_COL}=*")
+    }
 
 
 def tiers(spark: SparkSession, path: str) -> set[int]:
     """The ``_batch_id`` tier ids present in the store, from the
     directory listing alone."""
-    return {key[-1] for key in _tier_dirs(spark, path)}
+    return set(_tier_dirs(spark, path))
 
 
 def latest(spark: SparkSession, path: str, below: int) -> int | None:
@@ -87,33 +79,21 @@ def latest(spark: SparkSession, path: str, below: int) -> int | None:
 def read_tier(spark: SparkSession, path: str, tier: int) -> DataFrame:
     """One tier's rows, without the tier column (empty, with the
     store's schema, when the tier does not exist).  Only the tier's own
-    directories are read, so a root that also holds nested stores is
+    directory is read, so a root that also holds nested stores is
     never partition-discovered as a whole."""
-    dirs = [d for key, d in _tier_dirs(spark, path).items() if key[-1] == tier]
-    if not dirs:
+    d = _tier_dirs(spark, path).get(tier)
+    if d is None:
         return spark.read.parquet(path).limit(0).drop(BATCH_COL)
-    return spark.read.option("basePath", path).parquet(*dirs).drop(BATCH_COL)
+    return spark.read.option("basePath", path).parquet(d).drop(BATCH_COL)
 
 
-def prune(spark: SparkSession, path: str, keep) -> None:
-    """Delete superseded tiers.  ``keep`` is either the set of tier ids
-    to keep, or an int: the number of newest tiers to keep within each
-    ``by`` partition.  Best-effort by design — a crash before the prune
-    only leaves extra tiers, which readers ignore."""
-    dirs = _tier_dirs(spark, path)
-    if isinstance(keep, int):
-        groups: dict[tuple, list[int]] = {}
-        for key in dirs:
-            groups.setdefault(key[:-1], []).append(key[-1])
-        doomed = [
-            (*group, t)
-            for group, ids in groups.items()
-            for t in sorted(ids)[: max(len(ids) - keep, 0)]
-        ]
-    else:
-        doomed = [key for key in dirs if key[-1] not in keep]
-    for key in doomed:
-        fs.delete(spark, dirs[key])
+def prune(spark: SparkSession, path: str, keep: set[int]) -> None:
+    """Delete every tier whose id is not in ``keep``.  Best-effort by
+    design — a crash before the prune only leaves extra tiers, which
+    readers ignore."""
+    for tier, d in _tier_dirs(spark, path).items():
+        if tier not in keep:
+            fs.delete(spark, d)
 
 
 def committed(spark: SparkSession, path: str, batch_id: int, empty_schema) -> DataFrame:
@@ -121,7 +101,7 @@ def committed(spark: SparkSession, path: str, batch_id: int, empty_schema) -> Da
     compaction fold included — projected to ``empty_schema``'s columns;
     an empty frame of that schema when no tier is committed yet (no
     store, a flat empty one, or only the replayed batch's own tier)."""
-    if not any(key[-1] < batch_id for key in _tier_dirs(spark, path)):
+    if not any(tier < batch_id for tier in _tier_dirs(spark, path)):
         return spark.createDataFrame([], empty_schema)
     if isinstance(empty_schema, str):
         empty_schema = StructType.fromDDL(empty_schema)
@@ -132,16 +112,21 @@ def committed(spark: SparkSession, path: str, batch_id: int, empty_schema) -> Da
     )
 
 
-def append(df: DataFrame, path: str, batch_id: int, by: Sequence[str] = ()) -> None:
+def append(df: DataFrame, path: str, batch_id: int) -> None:
     """Write ``df`` as tier ``batch_id`` of the store.
 
     The tier is written to a staging directory beside the store, then
-    each of its partition directories is moved into place, replacing
-    the same directory of an earlier attempt — the dynamic partition
-    overwrite protocol, so a replay rewrites exactly its own tier.  No
-    Spark write targets the store path itself, so no write of a store
-    re-plans the cached plans that read it (see
-    :func:`write_concurrently`).
+    its directory is moved into place, replacing the same directory of
+    an earlier attempt — the dynamic partition overwrite protocol, so a
+    replay rewrites exactly its own tier.  No Spark write targets the
+    store path itself, so no write of a store re-plans the cached plans
+    that read it (see :func:`write_concurrently`).
+
+    An empty ``df`` still commits its tier, as one schema-bearing empty
+    file: otherwise :func:`tiers` and :func:`latest` would keep serving
+    the previous tier as this batch's result.  The partitioned write
+    creates no tier directory for an empty frame, so only then is the
+    empty file written (one metadata job, as in :func:`swap`).
 
     A store with no tier yet (missing, or flat after an empty swap)
     takes this write through :func:`swap` instead, with any rows the
@@ -153,20 +138,19 @@ def append(df: DataFrame, path: str, batch_id: int, by: Sequence[str] = ()) -> N
     if not _tier_dirs(spark, path):
         if fs.has_parquet(spark, path):
             tagged = spark.read.parquet(path).unionByName(tagged)
-        swap(spark, tagged, path, partition_by=(*by, BATCH_COL))
+        swap(spark, tagged, path, partition_by=(BATCH_COL,))
         return
     # overwrite mode clears a staging dir a crashed attempt left
     staging = f"{path.rstrip('/')}.tier-{batch_id}"
-    tagged.write.mode("overwrite").partitionBy(*by, BATCH_COL).parquet(staging)
-    src_root = fs.qualified(spark, staging).rstrip("/")
-    dst_root = fs.qualified(spark, path).rstrip("/")
-    for src in fs.glob(spark, src_root + "/*" * len(by) + f"/{BATCH_COL}={batch_id}"):
-        dst = dst_root + src[len(src_root):]
-        fs.delete(spark, dst)
-        if by:
-            fs.mkdirs(spark, dst[: dst.rindex("/")])
-        if not fs.rename(spark, src, dst):
-            raise IOError(f"could not move tier {src} into {dst}")
+    tagged.write.mode("overwrite").partitionBy(BATCH_COL).parquet(staging)
+    tier = f"/{BATCH_COL}={batch_id}"
+    src = fs.qualified(spark, staging).rstrip("/") + tier
+    dst = fs.qualified(spark, path).rstrip("/") + tier
+    if not fs.exists(spark, src):
+        df.limit(0).coalesce(1).write.parquet(src)
+    fs.delete(spark, dst)
+    if not fs.rename(spark, src, dst):
+        raise IOError(f"could not move tier {src} into {dst}")
     fs.delete(spark, staging)
 
 
@@ -213,13 +197,12 @@ def write_concurrently(*writes: Callable[[], None]) -> None:
     The rule.  The writes of a group target disjoint paths, but their
     PLANS read the paths a sibling writes: a view swapped over the
     committed state of stores whose new tiers are appended beside it
-    (k-anonymity, boilerplate, bm25, tf-idf, spans, containment,
-    histogram), or appends over cached reads of the stores their
+    (bm25, tf-idf), or appends over cached reads of the stores their
     siblings append to (sig-edges, triangles).  When a Spark write of a
     path P finishes, ``CacheManager.recacheByPath(P)`` drops every
     cached plan that reads P and registers it again unbuilt, while a
-    sibling job may be planning over, or building, that very cache; the
-    containment view then lost its batch's new pairs.  So no store
+    sibling job may be planning over, or building, that very cache; a
+    view swapped that way once lost its batch's new rows.  So no store
     write here is a Spark write to a store path: :func:`append` and
     :func:`swap` write a staging path no plan reads and move it in by
     renames.

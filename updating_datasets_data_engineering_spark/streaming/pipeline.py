@@ -61,16 +61,6 @@ def _retract_rows(spark, path: str, tomb: DataFrame, id_col: str) -> None:
     )
 
 
-def _upsert_view(spark, path: str, rows: DataFrame, replaced: DataFrame) -> DataFrame:
-    """The stored view with the keys in ``replaced`` (its columns are
-    the key) swapped for ``rows`` — just ``rows`` before the view's
-    first swap."""
-    if not fs.has_parquet(spark, path):
-        return rows
-    prev = spark.read.parquet(path)
-    return prev.join(replaced, replaced.columns, "left_anti").unionByName(rows)
-
-
 def _frozen_centroids(spark, delta: DataFrame, path: str, n_cells: int, id_col: str, vec_col: str):
     """The coarse quantizer, frozen from the first batch's ``n_cells``
     smallest ids (deterministic under crash replay): cell assignment
@@ -418,148 +408,6 @@ def streaming_interval_join(
     ).select(l[key].alias(key), left_ts, right_ts)
 
 
-def maintain_minhash_index_each_batch(
-    docs_path: str,
-    index_path: str,
-    pairs_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    band_size: int = 4,
-    threshold: float = 0.4,
-    ngram: int | None = 3,
-    op_col: str | None = None,
-    delete_op: str = "delete",
-    labels_path: str | None = None,
-):
-    """foreachBatch function: STREAMING dedup-index maintenance — the
-    streaming twin of ``dedup.incremental_minhash_pairs`` (VERDICT r3
-    item 1 extended to the streaming surface).
-
-    Each micro-batch of documents:
-
-      1. probes the persisted band index (batches < this one) for
-         near-dup pairs against everything already archived — only the
-         batch is shingled/minhashed; the archive is scanned solely to
-         verify candidate pairs;
-      2. appends the new pairs to the pair log;
-      3. appends the batch's band rows to the index and the raw docs
-         to the archive — the day-N+1 state.
-
-    All three writes are ``_batch_id``-partitioned dynamic-partition
-    overwrites, so a crash-replayed batch overwrites its own partition
-    instead of duplicating (idempotent, same guarantee class as the
-    checkpointed upsert), and reading ``_batch_id < batch_id`` both
-    excludes half-written state and makes the replay see exactly the
-    pre-batch archive.  The accumulated pair log over any prefix of
-    batches equals the full-corpus recompute on that prefix —
-    asserted against ``minhash_lsh_pairs`` in tests/test_streaming.py.
-
-    CDC extensions (VERDICT r4 item 4):
-
-      * ``op_col`` — rows whose op equals ``delete_op`` are tombstones:
-        the doc's rows are REMOVED from the archive, the band index,
-        and the pair log (broadcast anti-joins through the crash-safe
-        stage-and-swap, so the index can no longer diverge from the
-        corpus under GDPR-style deletes), and its cluster is re-closed
-        from the surviving pair log (``dedup.retract_from_components``
-        — a bridge delete correctly SPLITS its cluster).
-      * ``labels_path`` — maintain the cluster-label fixpoint as
-        per-batch state alongside the index: inserts close the new
-        pairs into the store via ``dedup.incremental_components``,
-        deletes retract via ``retract_from_components``.  With both
-        options on, the foreachBatch is the reference's complete daily
-        loop (archive ∪ delta ⊖ deletes, scripts/spark_merge_dfs.py)
-        applied to the LLM dedup tier.
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators import dedup as D
-
-    def _apply(batch_docs: DataFrame, batch_id: int) -> None:
-        spark = batch_docs.sparkSession
-        for p in (docs_path, index_path, pairs_path, labels_path):
-            if p is not None:
-                fs.recover_swap(spark, p)
-        tomb, delta = _split_tombstones(batch_docs, op_col, delete_op, id_col, text_col)
-        # scoped release (ADVICE r4): drop only this batch's tracked
-        # persists, even on failure — see upsert_each_batch
-        with caching.scope():
-            if tomb is not None and fs.has_parquet(spark, docs_path) and not tomb.isEmpty():
-                # labels retract FIRST — it replays the touched
-                # components' original pairs, so it needs the pair log
-                # before the tombstones prune it.  Deletion rewrites
-                # touch every tier, so they are whole-store swaps (at
-                # real scale, a rewrite of only the tiers holding the
-                # deleted ids).
-                if labels_path is not None and fs.has_parquet(spark, labels_path):
-                    labels = spark.read.parquet(labels_path)
-                    plog = spark.read.parquet(pairs_path).select("id_a", "id_b")
-                    ST.swap(spark, D.retract_from_components(labels, plog, tomb), labels_path)
-                _retract_rows(spark, docs_path, tomb, id_col)
-                _retract_rows(spark, index_path, tomb, "id")
-                plog = spark.read.parquet(pairs_path)
-                pruned = plog.join(
-                    F.broadcast(tomb.select(F.col(id_col).alias("id_a"))),
-                    "id_a",
-                    "left_anti",
-                ).join(
-                    F.broadcast(tomb.select(F.col(id_col).alias("id_b"))),
-                    "id_b",
-                    "left_anti",
-                )
-                ST.swap(spark, pruned, pairs_path, partition_by=(ST.BATCH_COL,))
-            if delta.isEmpty():
-                return
-            # id type derived from the batch schema (same id-type
-            # divergence guard as the containment maintainer)
-            id_t = delta.schema[id_col].dataType.simpleString()
-            archive = ST.committed(spark, docs_path, batch_id, delta.schema)
-            index = ST.committed(
-                spark, index_path, batch_id, f"id {id_t}, band_no int, band_key string"
-            )
-            pairs = D.incremental_minhash_pairs(
-                archive,
-                delta,
-                id_col=id_col,
-                text_col=text_col,
-                num_hashes=num_hashes,
-                band_size=band_size,
-                threshold=threshold,
-                ngram=ngram,
-                archive_index=index,
-            )
-            band_index = D.minhash_band_index(
-                D.minhash_features(delta, id_col, text_col, ngram),
-                num_hashes,
-                band_size,
-            )
-            # three independent appends on disjoint paths; the labels
-            # fold below reads the pairs tier BACK and so stays after
-            # the barrier
-            ST.write_concurrently(
-                lambda: ST.append(pairs, pairs_path, batch_id),
-                lambda: ST.append(band_index, index_path, batch_id),
-                lambda: ST.append(delta, docs_path, batch_id),
-            )
-            if labels_path is not None:
-                # the day's pairs are read BACK from the written tier —
-                # re-executing the lazy plan after the index append
-                # would probe the delta against its own bands (the
-                # ordering hazard pinned in test_maintenance_ops)
-                day_pairs = ST.read_tier(spark, pairs_path, batch_id).select("id_a", "id_b")
-                prev = (
-                    spark.read.parquet(labels_path)
-                    if fs.has_parquet(spark, labels_path)
-                    else spark.createDataFrame([], f"id {id_t}, cluster_id {id_t}")
-                )
-                updated = D.incremental_components(prev, day_pairs)
-                new_store = prev.join(updated, "id", "left_anti").unionByName(updated)
-                ST.swap(spark, new_store, labels_path)
-
-    return _apply
-
-
 def maintain_ann_index_each_batch(
     vectors_path: str,
     cells_path: str,
@@ -571,10 +419,9 @@ def maintain_ann_index_each_batch(
     delete_op: str = "delete",
 ):
     """foreachBatch function: STREAMING IVF/ANN index maintenance — the
-    streaming twin of ``registry.knn_ann_ivf_incremental`` (VERDICT r5
-    item 6: the LSH band and boilerplate span indexes had streaming
-    maintainers with compaction + deletes; the ANN cell state is the
-    same archive ∪ delta loop and now gets the same discipline).
+    streaming twin of ``registry.knn_ann_ivf_incremental``: the ANN
+    cell state is the archive ∪ delta loop, with compaction and
+    deletes.
 
     Persisted state:
 
@@ -644,7 +491,7 @@ def maintain_semantic_index_each_batch(
     flags — the streaming leg that completes the semantic tier's
     lifecycle (batch ``registry.dedup_semantic`` / incremental
     ``dedup_semantic_incremental`` / retract ``dedup_semantic_retract``
-    / streaming, the containment-family shape), composed from the SAME
+    / streaming), composed from the SAME
     two operators the graded queries use: inserts run
     ``similarity.semantic_dedup_delta`` against the stored state,
     deletes run ``similarity.semantic_dedup_retract`` before them.
@@ -795,283 +642,6 @@ def maintain_semantic_index_each_batch(
     return _apply
 
 
-def maintain_k_anonymity_each_batch(
-    events_path: str,
-    view_path: str,
-    k: int = 5,
-    counts_path: str | None = None,
-):
-    """foreachBatch function: STREAMING k-anonymity view maintenance —
-    the streaming twin of ``registry.events_k_anonymity``.
-
-    Monotonicity is what makes this incremental: class sizes only GROW
-    under inserts, so an event's released granularity only REFINES
-    (month → day → hour) — it never coarsens, and suppression can only
-    end.  A batch can therefore change the level of exactly (a) its own
-    events and (b) archived events whose hour-class gained members this
-    batch or whose day/month-class crossed the k threshold.  The
-    maintainer re-classifies batch ∪ affected and upserts those rows
-    into the view.
-
-    Class sizes come from a PERSISTED MERGEABLE COUNT SKETCH (ADVICE
-    r6): counts are additive under inserts, so per-batch class sizes
-    are sketch ⊕ batch — one aggregate over a table bounded by distinct
-    (event_type, hour) classes, never a re-aggregation of the event
-    history.  The per-batch archive work is therefore (a) merging the
-    sketch and (b) a key-column projection of the archive to SELECT the
-    affected rows (semi join on the batch's month keys); the event
-    history is never re-counted.
-
-    State: the keyed event archive (``_batch_id``-partitioned
-    idempotent appends; the quasi-identifier keys are stored so the
-    archive is never re-derived from timestamps), the hour-class count
-    sketch (same idempotent-append discipline; day/month counts
-    re-aggregate from it by the ladder property), and the materialized
-    (event_id, anon_level, class_size) view, swapped crash-safely.
-    After ANY prefix of batches the view equals the batch query on
-    everything streamed so far (asserted in tests/test_streaming.py).
-    Deletes are out of scope by design: retraction breaks the
-    monotonicity this maintainer exploits — a tombstoned corpus needs
-    the batch recompute (cheap: it is one corpus pass).
-    """
-    from pyspark.sql import functions as F
-
-    def _keys(df: DataFrame) -> DataFrame:
-        return df.select(
-            "event_id",
-            F.concat_ws(
-                "|", F.col("event_type"),
-                F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH"),
-            ).alias("qh"),
-            F.concat_ws(
-                "|", F.col("event_type"),
-                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd"),
-            ).alias("qd"),
-            F.concat_ws(
-                "|", F.col("event_type"),
-                F.date_format(F.date_trunc("month", "ts"), "yyyy-MM"),
-            ).alias("qm"),
-        )
-
-    def _classify(keyed: DataFrame, counts: DataFrame) -> DataFrame:
-        # `counts` is the merged hour-class sketch (qh, qd, qm, n);
-        # coarser class sizes re-aggregate from it (ladder property)
-        ch = counts.groupBy("qh").agg(F.sum("n").cast("long").alias("nh"))
-        cd = counts.groupBy("qd").agg(F.sum("n").cast("long").alias("nd"))
-        cm = counts.groupBy("qm").agg(F.sum("n").cast("long").alias("nm"))
-        j = keyed.join(ch, "qh").join(cd, "qd").join(cm, "qm")
-        level = (
-            F.when(F.col("nh") >= k, F.lit("hour"))
-            .when(F.col("nd") >= k, F.lit("day"))
-            .when(F.col("nm") >= k, F.lit("month"))
-        )
-        size = (
-            F.when(F.col("nh") >= k, F.col("nh"))
-            .when(F.col("nd") >= k, F.col("nd"))
-            .when(F.col("nm") >= k, F.col("nm"))
-        )
-        return j.select(
-            "event_id", level.alias("anon_level"), size.alias("class_size")
-        )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cpath = counts_path or (view_path.rstrip("/") + "_counts")
-        for p in (events_path, view_path):
-            fs.recover_swap(spark, p)
-        if batch_df.isEmpty():
-            return
-        with caching.scope():
-            b_keyed = caching.tracked_persist(_keys(batch_df))
-            b_counts = b_keyed.groupBy("qh", "qd", "qm").agg(
-                F.count(F.lit(1)).cast("long").alias("n")
-            )
-            prev_counts = ST.committed(spark, cpath, batch_id, b_counts.schema)
-            # sketch ⊕ batch: class sizes WITHOUT re-counting history
-            counts = caching.tracked_persist(
-                prev_counts.unionByName(b_counts)
-                .groupBy("qh", "qd", "qm")
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
-            archive = ST.committed(spark, events_path, batch_id, b_keyed.schema)
-            # affected archive rows: any event sharing a MONTH class with
-            # the batch (month ⊇ day ⊇ hour by the ladder property, so
-            # the month key over-approximates every class whose count —
-            # and therefore any member's level — could have changed)
-            touched_m = b_keyed.select("qm").distinct()
-            affected = archive.join(F.broadcast(touched_m), "qm", "left_semi")
-            out = _classify(affected.unionByName(b_keyed), counts)
-            merged = _upsert_view(spark, view_path, out, out.select("event_id"))
-            # view swap + two state appends: independent jobs on
-            # disjoint paths — run concurrently
-            ST.write_concurrently(
-                lambda: ST.swap(spark, merged, view_path),
-                lambda: ST.append(b_keyed, events_path, batch_id),
-                lambda: ST.append(b_counts, cpath, batch_id),
-            )
-
-    return _apply
-
-
-def maintain_zonemap_each_batch(
-    zonemap_path: str,
-    bounds_path: str,
-    x_col: str = "x",
-    y_col: str = "y",
-    bits: int = 8,
-    shard_bits: int = 6,
-):
-    """foreachBatch function: STREAMING Z-order zonemap maintenance —
-    the streaming twin of ``registry.events_zorder_incremental``,
-    completing the maintenance family (LSH bands, boilerplate spans,
-    sig edges, ANN cells, histogram, and now layout metadata all share
-    the same state ⊕ delta discipline).
-
-    Quantization bounds FREEZE from the first batch (layout metadata —
-    the same first-batch-freeze the ANN maintainer applies to its
-    centroids); later batches quantize against them, with out-of-range
-    values clamping to edge bins (pruning stays correct, re-layout
-    recalibrates).  The zonemap itself is ``_batch_id``-partitioned
-    per-batch sketches — idempotent under crash replay — and readers
-    merge with ``layout.merge_zonemaps`` (counts add, boxes union), so
-    the live zonemap equals the frozen-bounds full recompute after any
-    prefix of batches (asserted in tests/test_streaming.py).
-
-    Delete scope: this maintainer is INSERT-ONLY, like the append
-    stream it consumes.  Tombstones go through
-    ``layout.retract_zonemaps`` on the merged view (counts subtract,
-    boxes keep, staleness flag trips re-layout) — see its docstring for
-    the full contract; a re-layout resets both boxes and the deleted
-    counter.
-    """
-    from ..operators import layout as L
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        for p in (zonemap_path, bounds_path):
-            fs.recover_swap(spark, p)
-        if batch_df.isEmpty():
-            return
-        with caching.scope():
-            if not fs.has_parquet(spark, bounds_path):
-                ST.swap(spark, L.zorder_bounds(batch_df, x_col, y_col), bounds_path)
-            bounds = spark.read.parquet(bounds_path)
-            zm = L.zorder_shards(
-                batch_df, x_col, y_col, bits=bits, shard_bits=shard_bits,
-                bounds=bounds,
-            )
-            ST.append(zm, zonemap_path, batch_id)
-
-    return _apply
-
-
-def read_live_zonemap(spark: SparkSession, zonemap_path: str) -> DataFrame:
-    """Merge the per-batch zonemap sketches into the live zonemap."""
-    from ..operators import layout as L
-
-    raw = spark.read.parquet(zonemap_path).drop("_batch_id")
-    empty = raw.limit(0)
-    return L.merge_zonemaps(raw, empty)
-
-
-def maintain_boilerplate_each_batch(
-    docs_path: str,
-    span_index_path: str,
-    clean_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-):
-    """foreachBatch function: STREAMING incremental view maintenance of
-    the boilerplate-stripped corpus — the streaming twin of
-    ``registry.docs_boilerplate_incremental``.
-
-    Persisted state: the archive docs (``docs_path``), the (doc_id, i,
-    span) chunk index (``span_index_path``) — both ``_batch_id``-
-    partitioned idempotent appends — and the stripped-corpus store
-    (``clean_path``), a materialized view upserted through the
-    crash-safe stage-and-swap.
-
-    Each micro-batch:
-
-      1. chunks ONLY the batch (map-side explode of the small side);
-      2. derives archive span counts from the index (< this batch) —
-         the archive text is never re-tokenized;
-      3. finds spans the batch pushes ACROSS the >= ``min_docs``
-         threshold and the archive docs containing them (the only
-         archive rows whose strip result can change — the boilerplate
-         set is insertion-monotone);
-      4. re-strips batch ∪ affected docs against the combined set and
-         upserts those rows into the clean store;
-      5. appends the batch's chunks and docs to the state.
-
-    After ANY prefix of batches the clean store equals the full batch
-    recompute on the streamed prefix — asserted in tests/test_streaming.py.
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators import curation as CUR
-
-    def _apply(batch_docs: DataFrame, batch_id: int) -> None:
-        spark = batch_docs.sparkSession
-        for p in (docs_path, span_index_path, clean_path):
-            fs.recover_swap(spark, p)
-        delta = batch_docs.select(id_col, text_col)
-        if delta.isEmpty():
-            return
-        with caching.scope():
-            delta = caching.tracked_persist(delta)
-            delta_chunks = caching.tracked_persist(
-                CUR.chunk_frame(delta, id_col, text_col)
-            )
-            # chunk_frame aliases id_col -> "doc_id" but keeps the
-            # source TYPE, so the empty state derives it too (same
-            # id-type divergence guard as the containment maintainer)
-            id_t = delta.schema[id_col].dataType.simpleString()
-            index = ST.committed(
-                spark, span_index_path, batch_id, f"doc_id {id_t}, i int, span string"
-            )
-            archive = ST.committed(spark, docs_path, batch_id, delta.schema)
-            arch_counts = index.groupBy("span").agg(
-                F.countDistinct("doc_id").alias("_na")
-            )
-            delta_counts = delta_chunks.groupBy("span").agg(
-                F.countDistinct("doc_id").alias("_ndl")
-            )
-            combined = arch_counts.join(delta_counts, "span", "full_outer").select(
-                "span",
-                F.coalesce(F.col("_na"), F.lit(0)).alias("_na"),
-                F.coalesce(F.col("_ndl"), F.lit(0)).alias("_ndl"),
-            )
-            boiler = combined.where(
-                F.col("_na") + F.col("_ndl") >= min_docs
-            ).select("span")
-            crossing = combined.where(
-                (F.col("_na") < min_docs)
-                & (F.col("_ndl") > 0)
-                & (F.col("_na") + F.col("_ndl") >= min_docs)
-            ).select("span")
-            affected = (
-                index.join(crossing, "span", "left_semi").select("doc_id").distinct()
-            )
-            touched = delta.unionByName(
-                archive.join(
-                    affected.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
-                )
-            )
-            restripped = CUR.strip_against(touched, boiler, id_col, text_col)
-            store = _upsert_view(spark, clean_path, restripped, restripped.select("doc_id"))
-            # swap + two appends: independent jobs on disjoint paths —
-            # run concurrently
-            ST.write_concurrently(
-                lambda: ST.swap(spark, store, clean_path),
-                lambda: ST.append(delta_chunks, span_index_path, batch_id),
-                lambda: ST.append(delta, docs_path, batch_id),
-            )
-
-    return _apply
-
-
 def maintain_bm25_index_each_batch(
     postings_path: str,
     doclen_path: str,
@@ -1084,8 +654,7 @@ def maintain_bm25_index_each_batch(
     """foreachBatch function: STREAMING maintenance of the BM25
     postings index and its served top-k ranking view — the streaming
     leg that completes ranked retrieval's lifecycle (batch /
-    incremental / retract / streaming, the containment-family shape;
-    batch and state layout: ``queries.indexes.docs_bm25_search`` /
+    incremental / retract / streaming; batch and state layout: ``queries.indexes.docs_bm25_search`` /
     ``_bm25_state``).
 
     Persisted state, all ``_batch_id``-partitioned idempotent appends
@@ -1155,9 +724,9 @@ def maintain_bm25_index_each_batch(
             )
             # gate EACH store separately: a first-batch crash between
             # any two of the four appends must replay cleanly, not
-            # wedge on a missing later path.  id type derived from the
-            # batch schema (the containment maintainer's id-type
-            # divergence guard).
+            # wedge on a missing later path.  The id type is derived
+            # from the batch schema, so state and delta ids never
+            # diverge in type.
             id_t = delta.schema[id_col].dataType.simpleString()
             post_state = ST.committed(
                 spark, postings_path, batch_id, f"doc_id {id_t}, term string, tf long"
@@ -1304,372 +873,6 @@ def maintain_tfidf_keywords_each_batch(
     return _apply
 
 
-def maintain_span_index_each_batch(
-    posting_path: str,
-    sketch_path: str,
-    spans_path: str,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """foreachBatch function: STREAMING maintenance of the positional-
-    gram posting state, the per-gram document-frequency sketch, and the
-    materialized repeated-span view — the streaming twin of
-    ``registry.docs_repeated_spans_incremental`` (and the state feeder
-    for novelty scoring: the sketch this maintains is exactly what
-    ``dedup.novel_gram_fraction`` probes).
-
-    Persisted state:
-
-      * ``posting_path`` — (doc_id, pos, gh) rows, ``_batch_id``-
-        partitioned idempotent appends (crash-replayed batches are
-        invisible to readers filtering ``_batch_id < batch_id``);
-      * ``sketch_path`` — PER-BATCH (gh, n_docs) partials, same
-        partitioning.  The merge is an exact sum, not an estimate: the
-        corpus is append-only and a document arrives in exactly one
-        micro-batch, so per-batch distinct-doc counts are disjoint and
-        additive.  Both states compact between runs with
-        ``maintenance.compact_batch_index``;
-      * ``spans_path`` — the materialized duplicated-span view,
-        upserted through the crash-safe stage-and-swap.
-
-    Each micro-batch calls :func:`dedup.incremental_repeated_spans`
-    against the state (work ∝ batch grams + touched-doc posting rows —
-    the archive is never re-tokenized or re-aggregated) and replaces
-    the view rows of exactly the docs that probe re-derives: batch docs
-    plus archive docs holding a gram the batch newly made cross-
-    document.  Duplication is insertion-monotone, so untouched docs'
-    stored intervals stay exact.  After ANY prefix of batches the view
-    equals the full batch recompute on the streamed prefix — asserted
-    in tests/test_streaming.py.
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators import dedup as D
-
-    def _apply(batch_docs: DataFrame, batch_id: int) -> None:
-        spark = batch_docs.sparkSession
-        for p in (posting_path, sketch_path, spans_path):
-            fs.recover_swap(spark, p)
-        delta = batch_docs.select(id_col, text_col)
-        if delta.isEmpty():
-            return
-        with caching.scope():
-            delta = caching.tracked_persist(delta)
-            d_post = caching.tracked_persist(
-                D.span_posting_index(delta, k, id_col, text_col)
-            )
-            # span_posting_index aliases id_col -> "doc_id" but keeps
-            # the source TYPE; derive it for the empty state
-            id_t = delta.schema[id_col].dataType.simpleString()
-            posting_state = ST.committed(
-                spark, posting_path, batch_id, f"doc_id {id_t}, pos int, gh string"
-            )
-            gram_state = (
-                ST.committed(spark, sketch_path, batch_id, "gh string, n_docs long")
-                .groupBy("gh")
-                .agg(F.sum("n_docs").cast("long").alias("n_docs"))
-            )
-            intervals = caching.tracked_persist(
-                D.incremental_repeated_spans(
-                    delta, posting_state, gram_state, k, id_col, text_col
-                )
-            )
-            touched_ids = intervals.select("doc_id").distinct()
-            store = _upsert_view(spark, spans_path, intervals, touched_ids)
-            # swap + two appends: independent jobs on disjoint paths —
-            # run concurrently
-            ST.write_concurrently(
-                lambda: ST.swap(spark, store, spans_path),
-                lambda: ST.append(d_post, posting_path, batch_id),
-                lambda: ST.append(D.span_gram_df(d_post), sketch_path, batch_id),
-            )
-
-    return _apply
-
-
-def maintain_containment_index_each_batch(
-    posting_path: str,
-    df_path: str,
-    sizes_path: str,
-    pairs_path: str,
-    threshold: float = 0.8,
-    ngram: int = 3,
-    max_df: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """foreachBatch function: STREAMING maintenance of the containment
-    dedup state (unfiltered shingle posting + per-shingle df sketch +
-    per-doc sizes) and the materialized containment-pairs view — the
-    streaming twin of ``registry.dedup_containment_incremental``
-    (VERDICT r7 item 8).
-
-    The view contract after ANY prefix of batches: pairs_path equals
-    ``dedup.containment_pairs`` over the full streamed prefix.  Unlike
-    the span family, insertion is NOT monotone here — a batch that
-    pushes a shingle's merged df above ``max_df`` EVICTS it from the
-    df window, lowering the shared counts of EXISTING archive–archive
-    pairs (the prefix-filter lower-bound semantics tightening as
-    boilerplate emerges).  Each micro-batch therefore does two things:
-
-      1. NEW pairs with a batch endpoint via
-         :func:`dedup.incremental_containment_pairs` (exact by the
-         delta-endpoint argument there), upserted by pair key;
-      2. EVICTION re-verify: shingles whose merged df crosses above
-         ``max_df`` this batch (old df in [2, max_df], new df >
-         max_df) can only LOWER existing pairs — the affected set is
-         view pairs whose BOTH endpoints hold a common evicted
-         shingle; those pairs' containment is recomputed exactly
-         under the new window (a pruned state read: the affected
-         docs' posting rows + a df-sketch slice over their shingle
-         keys) and the pair is updated or dropped.
-
-    Both legs are bounded: evicted shingles ⊆ the batch's shingle
-    keys, each with ≤ max_df archive holders at eviction time, so the
-    affected-pair probe fans out ≤ max_df² per evicted shingle.
-
-    State appends are ``_batch_id``-partitioned dynamic overwrites
-    (crash-replayed batches rewrite their own partition, invisible to
-    readers filtering ``_batch_id < batch_id``); per-batch df partials
-    are additive because a doc arrives in exactly one micro-batch.
-    The view moves by the shared crash-safe stage-and-swap, and the
-    new-pair union is guarded by a pair-key anti-join so a replay
-    after the view swap stays idempotent.
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators import dedup as D
-
-    def _apply(batch_docs: DataFrame, batch_id: int) -> None:
-        spark = batch_docs.sparkSession
-        for p in (posting_path, df_path, sizes_path, pairs_path):
-            fs.recover_swap(spark, p)
-        delta = batch_docs.select(id_col, text_col)
-        if delta.isEmpty():
-            return
-        with caching.scope():
-            delta = caching.tracked_persist(delta)
-            d_shex = caching.tracked_persist(
-                D.containment_posting(delta, id_col, text_col, ngram)
-            )
-            d_df = caching.tracked_persist(D.containment_df(d_shex))
-            # id type derived from the batch schema (ADVICE r8: a
-            # hardcoded `id long` fails or silently casts a string-id
-            # corpus on the first micro-batch — the same id-type
-            # divergence class fixed in banded_srp_index)
-            id_t = batch_docs.schema[id_col].dataType.simpleString()
-            posting_state = ST.committed(spark, posting_path, batch_id, f"sh string, id {id_t}")
-            df_state = (
-                ST.committed(spark, df_path, batch_id, "sh string, df long")
-                .groupBy("sh")
-                .agg(F.sum("df").cast("long").alias("df"))
-            )
-            sizes_state = ST.committed(spark, sizes_path, batch_id, f"id {id_t}, sz long")
-            new_pairs = caching.tracked_persist(
-                D.incremental_containment_pairs(
-                    delta, posting_state, df_state, sizes_state,
-                    id_col, text_col, threshold, ngram, max_df,
-                )
-            )
-            if fs.has_parquet(spark, pairs_path):
-                view = spark.read.parquet(pairs_path)
-                # eviction re-verify (leg 2) — evicted shingles are
-                # necessarily among the batch's keys, so the df merge
-                # is a delta-key-sized slice
-                state_slice = df_state.join(d_df.select("sh"), "sh", "left_semi")
-                merged = d_df.alias("d").join(
-                    state_slice.alias("a"), "sh", "left_outer"
-                ).select(
-                    "sh",
-                    F.coalesce(F.col("a.df"), F.lit(0)).alias("old_df"),
-                    (F.coalesce(F.col("a.df"), F.lit(0)) + F.col("d.df")).alias(
-                        "new_df"
-                    ),
-                )
-                evicted = merged.where(
-                    (F.col("old_df") >= 2)
-                    & (F.col("old_df") <= max_df)
-                    & (F.col("new_df") > max_df)
-                ).select("sh")
-                holders = posting_state.join(evicted, "sh", "left_semi")
-                aff = (
-                    view.alias("p")
-                    .join(holders.alias("h1"), F.col("p.id_a") == F.col("h1.id"))
-                    .join(
-                        holders.alias("h2"),
-                        (F.col("p.id_b") == F.col("h2.id"))
-                        & (F.col("h1.sh") == F.col("h2.sh")),
-                    )
-                    .select("p.id_a", "p.id_b")
-                    .distinct()
-                )
-                aff = caching.tracked_persist(aff)
-                ids = (
-                    aff.select(F.col("id_a").alias("id"))
-                    .unionByName(aff.select(F.col("id_b").alias("id")))
-                    .distinct()
-                )
-                post_aff = caching.tracked_persist(
-                    posting_state.join(ids, "id", "left_semi")
-                )
-                # current kept window over exactly the shingles the
-                # affected docs hold: state df + batch df, sliced
-                keys = post_aff.select("sh").distinct()
-                cur_df = (
-                    df_state.join(keys, "sh", "left_semi")
-                    .unionByName(d_df.join(keys, "sh", "left_semi"))
-                    .groupBy("sh")
-                    .agg(F.sum("df").cast("long").alias("df"))
-                )
-                kept_now = cur_df.where(
-                    (F.col("df") >= 2) & (F.col("df") <= max_df)
-                ).select("sh")
-                kept_post = post_aff.join(kept_now, "sh", "left_semi")
-                shared = (
-                    aff.alias("p")
-                    .join(kept_post.alias("x"), F.col("p.id_a") == F.col("x.id"))
-                    .join(
-                        kept_post.alias("y"),
-                        (F.col("p.id_b") == F.col("y.id"))
-                        & (F.col("x.sh") == F.col("y.sh")),
-                    )
-                    .groupBy("p.id_a", "p.id_b")
-                    .agg(F.count(F.lit(1)).cast("long").alias("shared"))
-                )
-                cont = F.round(
-                    F.col("shared").cast("double")
-                    / F.least(F.col("sa.sz"), F.col("sb.sz")),
-                    6,
-                )
-                survived = (
-                    shared.join(
-                        sizes_state.alias("sa"), F.col("id_a") == F.col("sa.id")
-                    )
-                    .join(sizes_state.alias("sb"), F.col("id_b") == F.col("sb.id"))
-                    .select("id_a", "id_b", cont.alias("containment"))
-                    .where(F.col("containment") >= threshold)
-                )
-                view = view.join(aff, ["id_a", "id_b"], "left_anti").unionByName(
-                    survived
-                )
-                store = view.join(
-                    new_pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-                ).unionByName(new_pairs)
-            else:
-                store = new_pairs
-            # swap + three appends: independent jobs on disjoint paths —
-            # run concurrently
-            ST.write_concurrently(
-                lambda: ST.swap(spark, store, pairs_path),
-                lambda: ST.append(d_shex, posting_path, batch_id),
-                lambda: ST.append(d_df, df_path, batch_id),
-                lambda: ST.append(D.containment_sizes(d_shex), sizes_path, batch_id),
-            )
-
-    return _apply
-
-
-def retract_span_state(
-    spark,
-    posting_path: str,
-    sketch_path: str,
-    spans_path: str,
-    tombstones: DataFrame,
-    k: int = 10,
-) -> None:
-    """Between-runs DELETE maintenance for the streaming span state —
-    the lifecycle leg :func:`maintain_span_index_each_batch` scopes out
-    (micro-batches are insert-only; deletes are batch-windowed, same
-    schedule contract as ``maintenance.compact_batch_index``).
-
-    Applies ``tombstones`` (column ``doc_id``) to all three stores:
-    the span VIEW drops the tombstoned docs' rows and upserts the
-    touched survivors (including interval splits and clears —
-    ``dedup.retract_repeated_spans`` semantics); the df SKETCH is
-    re-derived from the post-delete posting (one aggregate — this is
-    deliberately NOT a delta-sized negative-correction partial: a
-    correction appended twice double-subtracts, while a sketch that is
-    a pure function of the posting makes the whole operation
-    idempotent); the POSTING drops the tombstoned rows.  Both rewritten
-    states land re-tagged to the compaction watermark — a retraction
-    doubles as a ``compact_batch_index`` pass, and future batches keep
-    appending their own partitions above it.
-
-    Crash contract: each store moves by one atomic ``fs`` swap, in the
-    order view → POSTING → sketch (ADVICE r7: sketch-before-posting had
-    a window where a replay read the already-decremented sketch against
-    the still-tombstoned posting and double-subtracted df, wrongly
-    revoking grams with a surviving df ≥ 2 holder and corrupting the
-    view).  With the posting swapped first and the sketch re-derived
-    from the ON-DISK post-swap posting, a replay with the SAME
-    tombstone list after a crash at ANY point converges: before the
-    posting swap every input is identical (the view rewrite is a pure
-    function of old state); after it the removal set is empty — the
-    view rewrite is the identity and the sketch recompute is a pure
-    function of the already-clean posting.  The crash-window replay is
-    exercised store-by-store in
-    ``tests/test_streaming.py::test_retract_span_state_replay_after_partial_crash``.
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators import dedup as D
-    from ..operators.dedup import _retract_span_parts
-
-    for p in (posting_path, sketch_path, spans_path):
-        fs.recover_swap(spark, p)
-    if not fs.has_parquet(spark, posting_path):
-        # the posting is the root of the state: with it gone (no-state,
-        # or a crash after the full-deletion branch removed it), a
-        # sketch left behind is an orphan — drop it so the replay
-        # converges to the same no-state the completed run reaches
-        fs.delete(spark, sketch_path)
-        return
-    tomb_ids = tombstones.select("doc_id")
-    posting = spark.read.parquet(posting_path)
-    watermark = posting.agg(F.max("_batch_id")).collect()[0][0]
-    posting = posting.select("doc_id", "pos", "gh")
-    gram_state = (
-        spark.read.parquet(sketch_path)
-        .groupBy("gh")
-        .agg(F.sum("n_docs").cast("long").alias("n_docs"))
-    )
-    with caching.scope():
-        touched, intervals = _retract_span_parts(tomb_ids, posting, gram_state, k)
-        touched = caching.tracked_persist(touched)
-        if fs.has_parquet(spark, spans_path):
-            prev = spark.read.parquet(spans_path)
-            view = (
-                prev.join(tomb_ids, "doc_id", "left_anti")
-                .join(touched, "doc_id", "left_anti")
-                .unionByName(intervals)
-            )
-            ST.swap(spark, view, spans_path)
-        posting_new = caching.tracked_persist(
-            posting.join(tomb_ids, "doc_id", "left_anti")
-        )
-        if posting_new.isEmpty():
-            # full deletion: an empty PARTITIONED write leaves a dir
-            # with no data files (unreadable schema) — the engine's
-            # no-state representation is NO directory, which every
-            # reader already guards with fs.has_parquet.  Posting goes
-            # FIRST: a crash between the two deletes then replays into
-            # the early has_parquet return, which sweeps the orphan
-            # sketch (idempotent); sketch-first would leave a replay
-            # reading a missing sketch against a live posting.
-            for p in (posting_path, sketch_path):
-                fs.delete(spark, p)
-            return
-        ST.swap_tier(spark, posting_new, posting_path, watermark)
-        # sketch LAST, re-derived from the on-disk post-swap posting —
-        # a pure function of the clean posting, so a crash-replay at
-        # any point recomputes the identical sketch (ADVICE r7)
-        sketch_new = D.span_gram_df(
-            spark.read.parquet(posting_path).select("doc_id", "pos", "gh")
-        )
-        ST.swap_tier(spark, sketch_new, sketch_path, watermark)
-
-
 def _batch_is_empty(batch_df: DataFrame) -> bool:
     """Empty-batch guard, memoized on the DataFrame object.
 
@@ -1690,88 +893,6 @@ def _batch_is_empty(batch_df: DataFrame) -> bool:
             pass
     return cached
 
-
-def run_index_maintenance_available_now(
-    stream_docs: DataFrame,
-    docs_path: str,
-    index_path: str,
-    pairs_path: str,
-    checkpoint_dir: str,
-    **params,
-) -> None:
-    """Run-to-completion streaming index maintenance (availableNow +
-    checkpoint, same contract as :func:`run_available_now`)."""
-    query = (
-        stream_docs.writeStream.foreachBatch(
-            maintain_minhash_index_each_batch(
-                docs_path, index_path, pairs_path, **params
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .outputMode("update")
-        .start()
-    )
-    query.awaitTermination()
-
-
-def maintain_value_histogram_each_batch(
-    hist_path: str,
-    quantiles_path: str,
-    value_col: str = "value",
-    width: float = 1.0,
-    qs: Sequence[float] = (0.5, 0.9, 0.99),
-    keys: Sequence[str] = (),
-):
-    """foreachBatch function: STREAMING maintenance of the mergeable
-    equi-width histogram sketch and its quantile dashboard — the
-    streaming twin of ``registry.incremental_value_quantiles`` (the
-    same symmetry maintain_boilerplate_each_batch has with
-    ``docs_boilerplate_incremental``).
-
-    Persisted state: per-batch histogram partitions at ``hist_path``
-    (``_batch_id``-partitioned idempotent appends — crash-replay of a
-    half-written batch is invisible because reads filter
-    ``_batch_id < batch_id``), and the quantile view at
-    ``quantiles_path``, a materialized one-row-per-q dashboard swapped
-    crash-safely via ``fs``.
-
-    Each micro-batch aggregates ONLY the batch into (bin, cnt) — one
-    hash-aggregate on a bounded key — merges it with the state read
-    from ``hist_path``, rewrites the tiny quantile view, then appends
-    the batch's bins.  Batch work is O(batch + bins); the raw archive
-    rows are never rescanned.  Per-batch partitions accumulate exactly
-    like the LSH band index's — ``operators.maintenance.compact_batch_index``
-    collapses them on the same schedule."""
-    from pyspark.sql import functions as F
-
-    from ..operators import incremental as INC
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        for p in (hist_path, quantiles_path):
-            fs.recover_swap(spark, p)
-        if batch_df.isEmpty():
-            return
-        with caching.scope():
-            batch_hist = caching.tracked_persist(
-                INC.histogram_state(batch_df, value_col, width, keys=keys)
-            )
-            state = (
-                ST.committed(spark, hist_path, batch_id, batch_hist.schema)
-                .groupBy(*keys, "bin")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-            merged = INC.combine_histograms(state, batch_hist, keys=keys)
-            view = INC.quantiles_from_histogram(merged, width, qs, keys=keys)
-            # view swap + state append: independent jobs on disjoint
-            # paths over the persisted batch_hist — run concurrently
-            ST.write_concurrently(
-                lambda: ST.swap(spark, view, quantiles_path),
-                lambda: ST.append(batch_hist, hist_path, batch_id),
-            )
-
-    return _apply
 
 def maintain_sig_edges_each_batch(
     active_path: str,
