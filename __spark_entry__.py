@@ -16,6 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from updating_datasets_data_engineering_spark import registry  # noqa: E402
+from updating_datasets_data_engineering_spark.queries.parity import (  # noqa: E402
+    shot_team_summary_bucketed,
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -30,7 +33,7 @@ def entry(spark: SparkSession) -> DataFrame:
     at 100 TB.  ``shot_team_summary`` (same oracle) stays registered as
     the layout-free parity twin.
     """
-    return registry.shot_team_summary_bucketed(spark, "/root/testdata/sf0.001")
+    return shot_team_summary_bucketed(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

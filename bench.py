@@ -20,228 +20,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from updating_datasets_data_engineering_spark.registry import queries  # noqa: E402
+from updating_datasets_data_engineering_spark.registry import SPECS, queries  # noqa: E402
 from updating_datasets_data_engineering_spark.session import get_spark  # noqa: E402
 
-# Headline set: one per operator family; the all-pairs near-dup and the
-# LSH pair-explosion queries are exercised through their scale-path
-# variants (ANN / exact dedup) to keep bench representative of the
-# 100 TB design, not of O(n^2) verification baselines.
-HEADLINE = [
-    "shot_parse",
-    "shot_ingest_json",
-    "shot_team_summary",
-    "shot_team_summary_bucketed",
-    "merge_upsert_delta_wins",
-    "merge_upsert_anti_join",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_regional_revenue",
-    "q4_order_priority",
-    "q6_revenue_change",
-    "q7_volume_shipping",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_quantity",
-    "q19_disjunctive_bands",
-    "q22_idle_customers",
-    "parts_by_brand",
-    "rollup_revenue",
-    "q13_custdist",
-    "q18_large_orders",
-    "cube_order_stats",
-    "above_avg_customers",
-    "price_quantiles",
-    "orders_by_month",
-    "events_pivot",
-    "events_unpivot",
-    "grouping_sets_revenue",
-    "events_props_json",
-    "events_type_stats_salted",
-    "incremental_events_summary",
-    "incremental_avg_distinct",
-    "events_asof_join",
-    "events_asof_forward",
-    "events_range_join",
-    "events_time_rollup",
-    "events_moving_avg",
-    "events_range_frame",
-    "events_gaps",
-    "scalar_function_census",
-    "word_counts",
-    "window_top_customers",
-    "window_running_total",
-    "customers_without_orders",
-    "distinct_counts",
-    "events_hourly",
-    "events_sessionize",
-    "text_metrics",
-    "text_sentiment",
-    "doc_chunks",
-    "docs_sample_stratified",
-    "docs_quality_filter",
-    "docs_pack_sequences",
-    "docs_quality_deciles",
-    "docs_repetition",
-    "docs_contamination",
-    "text_redact",
-    "text_langid",
-    "doc_fingerprints",
-    "dedup_exact",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_incremental",
-    "dedup_incremental_simhash",
-    "knn_bruteforce",
-    "knn_ann_srp",
-    "knn_ann_ivf",
-    "knn_ann_ivf_incremental",
-    "embedding_near_dup_ann",
-    "embedding_near_dup_t90",
-    "multimodal_features",
-    # r4 tail additions: TPC-H shape closures + new text ops
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_priority_counts",
-    "q16_supplier_counts",
-    "q20_dominant_suppliers",
-    "q21_waiting_suppliers",
-    "docs_repeated_spans",
-    "docs_tfidf_keywords",
-    # r5 (VERDICT r4 item 3): every registered spec except the
-    # quarantined O(n^2) all-pairs baseline (embedding_near_dup) gets a
-    # timing signal — a regression in cluster propagation or the merge
-    # variants was previously invisible to BENCH.
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_clusters_incremental",
-    "docs_deduplicated",
-    "shot_time_typed",
-    "merge_dedup_reference",
-    "merge_upsert_with_deletes",
-    "merge_schema_drift",
-    "streaming_dedup_archive",
-    "nation_key_set_ops",
-    "orders_with_big_items",
-    "nation_balance_full_outer",
-    "nation_segments",
-    "sql_passthrough_revenue",
-    # r5 additions: skew-guarded banding + label retraction
-    "dedup_minhash_lsh_salted",
-    "dedup_labels_after_delete",
-    "merge_scd2_customers",
-    "snapshot_diff_orders",
-    "events_concurrency",
-    "events_trend",
-    "dedup_fuzzy_titles",
-    "dedup_semantic",
-    "events_funnel",
-    # r5 continuation: cohort/sequence analytics + corpus curation
-    "events_retention_cohorts",
-    "events_markov_transitions",
-    "events_anomaly_hours",
-    "embedding_norm_outliers",
-    "docs_mixture_rebalance",
-    "docs_shuffle_shards",
-    "orders_profile",
-    "window_function_census",
-    "events_value_histogram",
-    "events_user_count_approx",
-    "merge_scd2_asof",
-    "embedding_quantize",
-    "docs_split_assign",
-    # r5 blocks 4-5: cross-document curation + LM quality scoring
-    "docs_source_cap",
-    "docs_boilerplate_strip",
-    "docs_cross_doc_dup_rate",
-    "docs_epoch_plan",
-    "events_sliding_active_users",
-    "docs_dataset_card",
-    "docs_unigram_logprob",
-    "sources_overlap_matrix",
-    # r5 block 6: behavioral segmentation & co-occurrence
-    "events_rfm_segments",
-    "users_cooccurrence",
-    # r5 block 6b: curation-tier incremental maintenance (persisted
-    # index probes — must bench BELOW their batch counterparts)
-    "docs_boilerplate_incremental",
-    "docs_delta_quality_scored",
-    # r5 block 8: graph tier + probe/skyline shapes
-    "users_pagerank",
-    "dedup_delta_bloom_probe",
-    "orders_skyline",
-    "users_triangles",
-    "incremental_value_quantiles",
-    # r5 block 9: model-based curation
-    "docs_classifier_score",
-    "docs_importance_resample",
-    "docs_bigram_logprob",
-    "users_sig_edges_incremental",
-    "sources_jsd_divergence",
-    # r6: vocab-independent JSD projection (VERDICT r5 item 5) +
-    # privacy-curation gate
-    "sources_jsd_hashed",
-    "events_k_anonymity",
-    "events_zorder_layout",
-    "events_zorder_incremental",
-    "docs_split_leakage_safe",
-    "users_communities",
-    "users_pagerank_personalized",
-    "incremental_type_quantiles",
-    "docs_weighted_sample",
-    "docs_weighted_sample_per_source",
-    # r7: zonemap delete maintenance + incremental semantic dedup +
-    # asymmetric containment dedup
-    "events_zonemap_retract",
-    "dedup_semantic_incremental",
-    "dedup_containment",
-    "docs_repeated_spans_unaligned",
-    "docs_repeated_spans_incremental",
-    "docs_novelty_scored",
-    "docs_repeated_spans_retract",
-    # r8: containment-tier incremental + delete maintenance
-    "dedup_containment_incremental",
-    "dedup_containment_retract",
-    # r9: incremental TF-IDF (persisted df state) + re-crawl CDC diff
-    "docs_tfidf_incremental",
-    "docs_snapshot_diff",
-    # r9 continuation: BM25 lifecycle + semantic retract/streaming
-    "docs_bm25_search",
-    "docs_bm25_incremental",
-    "docs_bm25_retract",
-    "docs_bm25_streaming",
-    "dedup_semantic_retract",
-    "dedup_semantic_streaming",
-    "docs_hybrid_search",
-    # r10 births: ANN-probed hybrid retrieval, archive round-trip,
-    # TF-IDF retract, incremental triangles
-    "docs_hybrid_search_ann",
-    "archive_roundtrip_orders",
-    "docs_tfidf_retract",
-    "users_triangles_incremental",
-    "users_sig_edges_streaming",
-    "knn_ann_streaming",
-    "docs_tfidf_streaming",
-    # r11 births: streaming triangle maintenance + the watermarked
-    # windowed aggregation graded end to end
-    "users_triangles_streaming",
-    "events_hourly_streaming",
-    "users_sig_edges_retract",
-    "users_triangles_retract",
-    # r12 births: the session-window streaming leg + the salted
-    # pair-aggregation co-occurrence variant
-    "events_sessions_streaming",
-    "users_cooccurrence_salted",
-]
-
-# Every registered spec must be benched except the explicit quarantine —
-# asserted by tests/test_bench_coverage.py so HEADLINE can never silently
-# go stale again (this round it missed six births until the artifact
-# count gave it away).
+# Every registered spec is benched except the quarantine, in SPECS
+# order.
 BENCH_QUARANTINE = {"embedding_near_dup"}  # O(n^2) all-pairs recall oracle
+HEADLINE = [s.name for s in SPECS if s.name not in BENCH_QUARANTINE]
 
 # Deterministic compact-line subset (VERDICT r13 item 2): the final
 # one-line JSON the driver captures used to carry each run's SLOWEST
@@ -500,6 +285,36 @@ def shuffle_totals(spark) -> tuple[int, int]:
     return r, w
 
 
+def compact_line(total, floor_probe_s, timings, out_file, sf) -> str:
+    """The LAST stdout line, sized for the driver, which records only
+    the last ~2000 chars of stdout and parses a JSON line out of it
+    (with 130 queries the full line was ~3.9k chars, so BENCH_r03/r04
+    recorded parsed=null): same metric/value/unit/sf, the query count,
+    the full-detail pointer, and the COMPACT_SET timings (see the
+    list's comment) at 2 decimals.  On a subset run
+    (SPARK_GRAFT_BENCH_QUERIES) only the timed names can appear; on
+    overflow of the 1800-char ceiling (10% under the capture) names
+    are trimmed deterministically from the list's tail."""
+    compact: dict = {
+        "metric": "headline_queries_total_runtime",
+        "value": total,
+        "unit": "sec",
+        "floor_probe_s": floor_probe_s,
+        "queries": {},
+        "n_queries": len(timings),
+        "detail": out_file,
+        "sf": sf,
+    }
+    for name in COMPACT_SET:
+        if name not in timings:
+            continue
+        compact["queries"][name] = round(timings[name], 2)
+        if len(json.dumps(compact, separators=(",", ":"))) > 1800:
+            del compact["queries"][name]
+            break
+    return json.dumps(compact, separators=(",", ":"))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -670,39 +485,7 @@ def main() -> None:
     print(json.dumps(payload, separators=(",", ":")))
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), out_file), "w") as f:
         json.dump(payload, f, indent=1)
-    # The driver records only the last ~2000 chars of stdout and parses a
-    # JSON line out of it; with 130 queries the full line is ~3.9k chars,
-    # so BENCH_r03/r04 recorded parsed=null.  Emit a LAST line that fits
-    # the capture window: same metric/value/unit/sf, `queries` trimmed to
-    # the slowest entries that keep the line under 1900 chars, plus the
-    # query count and the full-detail pointer.
-    # r14 (VERDICT r13 item 2): the compact subset is the FIXED
-    # COMPACT_SET, not each run's slowest — see the list's comment.  On
-    # a subset run (SPARK_GRAFT_BENCH_QUERIES) only the timed names can
-    # appear; on overflow, trim deterministically from the list's tail.
-    compact: dict = {
-        "metric": "headline_queries_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "floor_probe_s": floor_probe_s,
-        "queries": {},
-        "n_queries": len(timings),
-        "detail": out_file,
-        "sf": payload["sf"],
-    }
-    for name in COMPACT_SET:
-        if name not in timings:
-            continue
-        compact["queries"][name] = timings[name]
-        # 1900-char ceiling (was 1800): the driver captures ~2000 chars
-        # of stdout tail; the full 55-name fixed set serializes ~1790
-        # at real value widths, and the extra headroom keeps the set
-        # un-trimmed (hence identical) across rounds even if every
-        # value gains a digit.
-        if len(json.dumps(compact, separators=(",", ":"))) > 1900:
-            del compact["queries"][name]
-            break
-    print(json.dumps(compact, separators=(",", ":")))
+    print(compact_line(total, floor_probe_s, timings, out_file, payload["sf"]))
 
 
 if __name__ == "__main__":

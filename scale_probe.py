@@ -189,14 +189,16 @@ def main() -> None:
 
     spark = get_spark("scale-probe", shuffle_partitions=32)
 
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import curation as QC
+    from updating_datasets_data_engineering_spark.queries import graph as QG
 
     def _reg(fn, docs):
         """Run a registry documents-query against the replicated frame
-        (the patch only matters during lazy plan construction)."""
+        (the patch only matters during lazy plan construction; it goes
+        on the defining module, whose globals the builder reads)."""
         import unittest.mock as mock
 
-        with mock.patch.object(R, "_td", lambda s, d: docs):
+        with mock.patch.object(sys.modules[fn.__module__], "_td", lambda s, d: docs):
             return fn(spark, "")
 
     ops = {
@@ -209,20 +211,20 @@ def main() -> None:
         # r5 blocks 4-5: the chunk-explode family (span aggregate + anti
         # join + per-doc reassembly) and the term-explode LM scorer —
         # per-replica word rewriting keeps span/vocab structure linear
-        "docs_boilerplate_strip": lambda docs, emb: _reg(R.docs_boilerplate_strip, docs),
-        "docs_unigram_logprob": lambda docs, emb: _reg(R.docs_unigram_logprob, docs),
+        "docs_boilerplate_strip": lambda docs, emb: _reg(QC.docs_boilerplate_strip, docs),
+        "docs_unigram_logprob": lambda docs, emb: _reg(QC.docs_unigram_logprob, docs),
         # r5 block 9: the model-based curation pair — classifier is the
         # map-only floor (explode + one aggregate, zero joins); DSIR
         # adds the vocab term-key join, the heaviest LM-scoring shape
-        "docs_classifier_score": lambda docs, emb: _reg(R.docs_classifier_score, docs),
+        "docs_classifier_score": lambda docs, emb: _reg(QG.docs_classifier_score, docs),
         "docs_importance_resample": lambda docs, emb: _reg(
-            R.docs_importance_resample, docs
+            QG.docs_importance_resample, docs
         ),
         # r5 block 10: order-2 LM (bigram + prefix joins) and the
         # sources×vocab JSD grid — both should track vocab growth
-        "docs_bigram_logprob": lambda docs, emb: _reg(R.docs_bigram_logprob, docs),
+        "docs_bigram_logprob": lambda docs, emb: _reg(QG.docs_bigram_logprob, docs),
         "sources_jsd_divergence": lambda docs, emb: _reg(
-            R.sources_jsd_divergence, docs
+            QG.sources_jsd_divergence, docs
         ),
     }
 

@@ -1,7 +1,7 @@
-"""The bench's HEADLINE list is hand-ordered (display grouping), which
-makes it hand-maintained — and in the round-9 continuation it silently
-missed six newborn specs until the artifact's query count exposed it.
-Pin the invariant: every registered spec is benched except the explicit
+"""The bench's HEADLINE list was once hand-maintained, and in the
+round-9 continuation it silently missed six newborn specs until the
+artifact's query count exposed it; it is now derived from SPECS.  Pin
+the invariant: every registered spec is benched except the explicit
 quarantine, and every benched name exists."""
 
 from __future__ import annotations
@@ -38,23 +38,18 @@ def test_sf1_and_exp_subsets_are_registered():
 
 def test_compact_set_is_registered_unique_and_fits():
     """COMPACT_SET (VERDICT r13 item 2) is the deterministic final-line
-    subset: every name registered, no dupes, and the serialized line
-    fits the driver's ~1900-char capture window at representative value
-    widths — so in practice no name is ever trimmed and consecutive
-    rounds' compact lines carry the SAME query set."""
+    subset: every name registered, no dupes, and bench's own compact
+    line fits the 1800-char ceiling (10% under the driver's ~2000-char
+    capture window) at representative value widths with no name
+    trimmed — so consecutive rounds' compact lines carry the SAME
+    query set."""
     import json
 
     names = {s.name for s in SPECS}
     assert set(bench.COMPACT_SET) <= names
     assert len(bench.COMPACT_SET) == len(set(bench.COMPACT_SET))
-    payload = {
-        "metric": "headline_queries_total_runtime",
-        "value": 999.999,
-        "unit": "sec",
-        "floor_probe_s": 9.999,
-        "queries": {n: 99.999 for n in bench.COMPACT_SET},
-        "n_queries": 999,
-        "detail": "BENCH_FULL.json",
-        "sf": 0.1,
-    }
-    assert len(json.dumps(payload, separators=(",", ":"))) <= 1900
+    line = bench.compact_line(
+        999.999, 9.999, {n: 99.99 for n in bench.COMPACT_SET}, "BENCH_FULL.json", 0.1
+    )
+    assert list(json.loads(line)["queries"]) == bench.COMPACT_SET
+    assert len(line) <= 1800

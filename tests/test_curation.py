@@ -14,8 +14,25 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from updating_datasets_data_engineering_spark import registry
 from updating_datasets_data_engineering_spark.queries import _base as QB
+from updating_datasets_data_engineering_spark.queries.cohorts import (
+    docs_split_assign,
+    docs_split_leakage_safe,
+)
+from updating_datasets_data_engineering_spark.queries.curation import (
+    docs_boilerplate_incremental,
+    docs_boilerplate_strip,
+    docs_cross_doc_dup_rate,
+    docs_source_cap,
+    events_sliding_active_users,
+)
+from updating_datasets_data_engineering_spark.queries.graph import (
+    docs_classifier_score,
+    docs_importance_resample,
+    sources_jsd_divergence,
+    sources_jsd_hashed,
+)
+from updating_datasets_data_engineering_spark.queries.layout import events_k_anonymity
 from updating_datasets_data_engineering_spark.functions import text as TXT
 
 
@@ -38,7 +55,7 @@ def test_source_cap_selective_window_equals_plain(spark, sf_dir, monkeypatch):
     rows = [(i, "big") for i in range(40)] + [(100 + i, "small") for i in range(3)]
     docs = spark.createDataFrame(rows, "doc_id long, source string")
     monkeypatch.setattr(QB, "load_table", lambda s, d, n: docs)
-    got = registry.docs_source_cap(spark, sf_dir, cap=20)
+    got = docs_source_cap(spark, sf_dir, cap=20)
     want = _plain_cap(docs, 20)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
@@ -51,7 +68,7 @@ def test_source_cap_selective_window_equals_plain(spark, sf_dir, monkeypatch):
 def test_source_cap_plan_broadcasts_counts(spark, sf_dir):
     """The per-source count frame must broadcast back (tiny at any
     corpus size) — no sort-merge join of the corpus against it."""
-    plan = registry.docs_source_cap(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = docs_source_cap(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
 
@@ -71,7 +88,7 @@ def test_boilerplate_strip_known_block(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(QB, "load_table", lambda s, d, n: docs)
     got = {
         r["doc_id"]: r
-        for r in registry.docs_boilerplate_strip(spark, sf_dir).collect()
+        for r in docs_boilerplate_strip(spark, sf_dir).collect()
     }
     assert got[1]["n_blocks"] == 2 and got[1]["n_removed"] == 1
     assert got[1]["clean_text"] == f"{uniq} tail words"
@@ -95,7 +112,7 @@ def test_cross_doc_dup_rate_counts_only_cross_doc(spark, sf_dir, monkeypatch):
         "doc_id long, text string",
     )
     monkeypatch.setattr(QB, "load_table", lambda s, d, n: docs)
-    got = {r["doc_id"]: r for r in registry.docs_cross_doc_dup_rate(spark, sf_dir).collect()}
+    got = {r["doc_id"]: r for r in docs_cross_doc_dup_rate(spark, sf_dir).collect()}
     assert got[1]["n_blocks"] == 3 and got[1]["n_shared"] == 1
     assert got[2]["n_blocks"] == 2 and got[2]["n_shared"] == 1
     assert not got[1]["mostly_dup"] and got[2]["mostly_dup"]
@@ -116,7 +133,7 @@ def test_sliding_windows_hand_counted(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(QB, "load_table", lambda s, d, n: ev)
     got = {
         r["win_start_sec"]: r["active_users"]
-        for r in registry.events_sliding_active_users(spark, sf_dir).collect()
+        for r in events_sliding_active_users(spark, sf_dir).collect()
     }
     base = 1704067200  # 2024-01-01 00:00:00 UTC
     want = {
@@ -170,7 +187,7 @@ def test_boilerplate_strip_conserves_tokens(spark, sf_dir, texts):
     import unittest.mock as mock
 
     with mock.patch.object(QB, "load_table", lambda s, d, n: docs):
-        out = {r["doc_id"]: r for r in registry.docs_boilerplate_strip(spark, sf_dir).collect()}
+        out = {r["doc_id"]: r for r in docs_boilerplate_strip(spark, sf_dir).collect()}
     for i, t in enumerate(texts):
         toks = [w for w in t.lower().split() if w]
         r = out[i]
@@ -195,7 +212,7 @@ def test_dup_rate_bounds_and_block_counts(spark, sf_dir, texts):
     import unittest.mock as mock
 
     with mock.patch.object(QB, "load_table", lambda s, d, n: docs):
-        rows = registry.docs_cross_doc_dup_rate(spark, sf_dir).collect()
+        rows = docs_cross_doc_dup_rate(spark, sf_dir).collect()
     seen = set()
     for r in rows:
         seen.add(r["doc_id"])
@@ -212,8 +229,8 @@ def test_boilerplate_incremental_equals_full_on_touched(spark, sf_dir):
     restricted to touched docs (delta ∪ archive docs gaining a newly
     crossed boilerplate span) — and the touched set must include every
     archive doc whose strip result changed."""
-    incr = registry.docs_boilerplate_incremental(spark, sf_dir)
-    full = registry.docs_boilerplate_strip(spark, sf_dir)
+    incr = docs_boilerplate_incremental(spark, sf_dir)
+    full = docs_boilerplate_strip(spark, sf_dir)
     touched_ids = [r["doc_id"] for r in incr.select("doc_id").collect()]
     full_touched = full.where(F.col("doc_id").isin(touched_ids))
     assert incr.exceptAll(full_touched).count() == 0
@@ -232,7 +249,7 @@ def test_boilerplate_incremental_scans_index_not_rechunks(spark, sf_dir):
     and touched-doc re-strip)."""
     from updating_datasets_data_engineering_spark.plans.audit import formatted_plan
 
-    df = registry.docs_boilerplate_incremental(spark, sf_dir)
+    df = docs_boilerplate_incremental(spark, sf_dir)
     plan = formatted_plan(df)
     assert "graft_idx_span_chunks" in plan, "persisted index parquet must be scanned"
 
@@ -241,11 +258,11 @@ def test_classifier_score_deterministic_and_mean_of_token_weights(spark, sf_dir)
     """Block 9: the hashed-linear classifier score must be the mean of
     the per-token frozen weights (re-derived independently here) and
     identical across two runs (frozen weights = no rand())."""
-    out = registry.docs_classifier_score(spark, sf_dir)
+    out = docs_classifier_score(spark, sf_dir)
     one = out.orderBy("doc_id").limit(5).collect()
-    again = registry.docs_classifier_score(spark, sf_dir).orderBy("doc_id").limit(5).collect()
+    again = docs_classifier_score(spark, sf_dir).orderBy("doc_id").limit(5).collect()
     assert [tuple(r) for r in one] == [tuple(r) for r in again]
-    docs = registry._td(spark, sf_dir).orderBy("doc_id").limit(5).collect()
+    docs = QB._td(spark, sf_dir).orderBy("doc_id").limit(5).collect()
     import hashlib
 
     for row, doc in zip(one, docs):
@@ -265,8 +282,8 @@ def test_dsir_targets_score_higher(spark, sf_dir):
     higher mean importance weight than the rest of the corpus — the
     defining property of importance resampling toward a target
     distribution."""
-    out = registry.docs_importance_resample(spark, sf_dir)
-    docs = registry._td(spark, sf_dir).select("doc_id", "source")
+    out = docs_importance_resample(spark, sf_dir)
+    docs = QB._td(spark, sf_dir).select("doc_id", "source")
     j = out.join(docs, "doc_id")
     means = {
         r.is_target: r.m
@@ -288,10 +305,10 @@ def test_jsd_hashed_rank_agreement(spark, sf_dir):
     Floor-asserted: >= 3 of the exact top-5 appear in the hashed top-5,
     and the single most-divergent source agrees."""
     exact = {
-        r.source: r.jsd for r in registry.sources_jsd_divergence(spark, sf_dir).collect()
+        r.source: r.jsd for r in sources_jsd_divergence(spark, sf_dir).collect()
     }
     hashed = {
-        r.source: r.jsd for r in registry.sources_jsd_hashed(spark, sf_dir).collect()
+        r.source: r.jsd for r in sources_jsd_hashed(spark, sf_dir).collect()
     }
     assert set(exact) == set(hashed)
     top_e = sorted(exact, key=exact.get, reverse=True)[:5]
@@ -388,8 +405,8 @@ def test_k_anonymity_null_keys_surface_not_vanish(spark):
 
 
 def test_events_k_anonymity_every_row_classified(spark, sf_dir):
-    out = registry.events_k_anonymity(spark, sf_dir)
-    n = registry._t(spark, sf_dir, "events").count()
+    out = events_k_anonymity(spark, sf_dir)
+    n = QB._t(spark, sf_dir, "events").count()
     assert out.count() == n
     # the ladder must be monotone: finer level implies bigger-or-equal
     # class sizes as it coarsens, so class_size >= k wherever classified
@@ -403,7 +420,7 @@ def test_leakage_safe_split_keeps_near_dups_together(spark, sf_dir):
     contamination it permits)."""
     from updating_datasets_data_engineering_spark.operators import dedup as D
 
-    docs = registry._td(spark, sf_dir)
+    docs = QB._td(spark, sf_dir)
     pairs = D.minhash_lsh_pairs(
         docs, num_hashes=16, band_size=4, threshold=0.4, ngram=3
     ).select("id_a", "id_b")
@@ -419,15 +436,15 @@ def test_leakage_safe_split_keeps_near_dups_together(spark, sf_dir):
             .count()
         )
 
-    naive = straddlers(registry.docs_split_assign(spark, sf_dir))
-    safe = straddlers(registry.docs_split_leakage_safe(spark, sf_dir))
+    naive = straddlers(docs_split_assign(spark, sf_dir))
+    safe = straddlers(docs_split_leakage_safe(spark, sf_dir))
     assert safe == 0, f"{safe} near-dup pairs straddle splits"
     assert naive > 0, "fixture should exhibit naive-split leakage"
     # split proportions stay roughly 90/5/5 (anchoring moves whole
     # clusters, not the marginal distribution)
     dist = {
         r.split: r.n
-        for r in registry.docs_split_leakage_safe(spark, sf_dir)
+        for r in docs_split_leakage_safe(spark, sf_dir)
         .groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     n = sum(dist.values())

@@ -220,14 +220,18 @@ def test_graph_queries_scan_persisted_edge_index(spark, sf_dir):
     checked with checkpoint=False because a localCheckpoint renders as
     an opaque 'Scan ExistingRDD' in explain() (same workaround as the
     incremental-dedup plan test's materialize=False)."""
-    from updating_datasets_data_engineering_spark import registry
     from updating_datasets_data_engineering_spark.plans.audit import formatted_plan
+    from updating_datasets_data_engineering_spark.queries.graph import (
+        _significant_edges,
+        users_triangles,
+    )
+    from updating_datasets_data_engineering_spark.queries.indexes import _persisted_index
 
-    edges = registry._persisted_index(
-        spark, sf_dir, "sig_edges", lambda: registry._significant_edges(spark, sf_dir)
+    edges = _persisted_index(
+        spark, sf_dir, "sig_edges", lambda: _significant_edges(spark, sf_dir)
     )
     plans = [
-        formatted_plan(registry.users_triangles(spark, sf_dir)),
+        formatted_plan(users_triangles(spark, sf_dir)),
         formatted_plan(G.pagerank(edges, checkpoint=False)),
     ]
     for plan in plans:
@@ -240,10 +244,12 @@ def test_sig_edges_incremental_scans_state_not_archive_pairs(spark, sf_dir):
     pair-count / user-count / hour states; the per-hour self-join may
     appear only for the delta day (the archive's quadratic term is
     never re-executed)."""
-    from updating_datasets_data_engineering_spark import registry
     from updating_datasets_data_engineering_spark.plans.audit import formatted_plan
+    from updating_datasets_data_engineering_spark.queries.graph import (
+        users_sig_edges_incremental,
+    )
 
-    plan = formatted_plan(registry.users_sig_edges_incremental(spark, sf_dir))
+    plan = formatted_plan(users_sig_edges_incremental(spark, sf_dir))
     # r6: per-user state became per-(user, month) for the epoch-local lift
     for kind in ("graph_pair_counts", "graph_user_month_counts", "graph_hours"):
         assert f"graft_idx_{kind}" in plan, f"{kind} state must be scanned"
@@ -356,7 +362,7 @@ def test_users_cooccurrence_guard_preserves_oracle(spark, sf_dir):
     """The registry query's result must be invariant to the guard
     setting — run it with a cap low enough to trip on the fixture and
     compare with the bare plan (the oracle gates the bare plan)."""
-    from updating_datasets_data_engineering_spark.registry import users_cooccurrence
+    from updating_datasets_data_engineering_spark.queries.graph import users_cooccurrence
 
     bare = users_cooccurrence(spark, sf_dir, bucket_cap=None)
     tripped = users_cooccurrence(spark, sf_dir, bucket_cap=3, n_salts=4)
@@ -373,8 +379,8 @@ def test_sig_edges_epoch_local_lift_scale_invariant(spark, monkeypatch, tmp_path
     2*110/(4*5) = 11 and call it significant purely because history
     grew — the densification measured at sf1.0 (11.0M edges vs 1.18M
     calibrated, users_triangles 555 s vs 15.8 s)."""
-    from updating_datasets_data_engineering_spark import registry as R
     from updating_datasets_data_engineering_spark.queries import _base as QB
+    from updating_datasets_data_engineering_spark.queries import graph as R
 
     rows = []
     # January: 10 hourly windows 00..09 on day 1; user 1 in 4, user 2 in
@@ -539,7 +545,6 @@ def test_sig_edges_retract_both_directions_live(spark):
 
     from pyspark.sql import functions as F
 
-    from updating_datasets_data_engineering_spark import registry as R
     from updating_datasets_data_engineering_spark.queries import _base as QB
     from updating_datasets_data_engineering_spark.queries import graph as GQ
     from updating_datasets_data_engineering_spark.tables import load_table
@@ -553,7 +558,7 @@ def test_sig_edges_retract_both_directions_live(spark):
         F.col("event_id") % 50 != 0
     )
     with mock.patch.object(QB, "load_table", lambda s, d, name: survivors):
-        want = R._significant_edges(spark, "")
+        want = GQ._significant_edges(spark, "")
     cols = ["user_a", "user_b", "shared_windows", "lift"]
     got_rows = sorted(map(tuple, got.select(*cols).collect()))
     want_rows = sorted(map(tuple, want.select(*cols).collect()))

@@ -239,7 +239,7 @@ def test_persisted_index_warehouse_root_shared_across_sessions(
     cleared — the in-process stand-in for a new SparkSession in another
     process) pointed at the same root REUSES the stored state instead
     of rebuilding."""
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import indexes as R
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path))
     calls = {"n": 0}
@@ -283,7 +283,7 @@ def test_persisted_index_warehouse_build_promotes_atomically(
     sibling must not be trusted or block the rebuild."""
     import os
 
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import indexes as R
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path))
     sf_key = os.path.basename(sf_dir.rstrip("/"))
@@ -314,7 +314,7 @@ def test_persisted_index_warehouse_build_promotes_atomically(
 def test_persisted_index_default_stays_process_local(spark, sf_dir, monkeypatch):
     """Unset root keeps the r5 behavior: tempfile state, memoized per
     process, rebuilt (deterministically) by other processes."""
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import indexes as R
 
     monkeypatch.delenv("SPARK_GRAFT_INDEX_ROOT", raising=False)
     df = R._persisted_index(

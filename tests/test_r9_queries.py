@@ -7,8 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from updating_datasets_data_engineering_spark.registry import (
-    docs_snapshot_diff,
+from updating_datasets_data_engineering_spark.queries.curation import docs_snapshot_diff
+from updating_datasets_data_engineering_spark.queries.indexes import (
     docs_tfidf_incremental,
     docs_tfidf_keywords,
 )
@@ -72,7 +72,7 @@ def test_bm25_incremental_equals_batch_rebuild(spark, sf_dir):
     must reproduce the batch ranking row-for-row, and the delta must
     actually be represented in the output (the equality is not
     vacuous on an archive-only ranking)."""
-    from updating_datasets_data_engineering_spark.registry import (
+    from updating_datasets_data_engineering_spark.queries.indexes import (
         docs_bm25_incremental,
         docs_bm25_search,
     )
@@ -97,7 +97,7 @@ def test_bm25_query_terms_are_top_df(spark, sf_dir):
 
     from updating_datasets_data_engineering_spark.functions import text as TXT
     from updating_datasets_data_engineering_spark.queries.indexes import _BM25_NQ
-    from updating_datasets_data_engineering_spark.registry import docs_bm25_search
+    from updating_datasets_data_engineering_spark.queries.indexes import docs_bm25_search
     from updating_datasets_data_engineering_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -132,7 +132,7 @@ def test_semantic_retract_flips_and_freezes(spark, sf_dir):
     from updating_datasets_data_engineering_spark.queries.indexes import (
         _persisted_index,
     )
-    from updating_datasets_data_engineering_spark.registry import (
+    from updating_datasets_data_engineering_spark.queries.indexes import (
         dedup_semantic_retract,
     )
     from updating_datasets_data_engineering_spark.tables import load_table
@@ -184,7 +184,7 @@ def test_bm25_retract_equals_survivor_rebuild(spark, sf_dir):
         _bm25_rank,
         _BM25_NQ,
     )
-    from updating_datasets_data_engineering_spark.registry import docs_bm25_retract
+    from updating_datasets_data_engineering_spark.queries.indexes import docs_bm25_retract
     from updating_datasets_data_engineering_spark.tables import load_table
 
     out = sorted(tuple(r) for r in docs_bm25_retract(spark, sf_dir).collect())
@@ -232,7 +232,7 @@ def test_hybrid_search_fuses_both_legs(spark, sf_dir):
         _HYBRID_QN,
         _RRF_K,
     )
-    from updating_datasets_data_engineering_spark.registry import docs_hybrid_search
+    from updating_datasets_data_engineering_spark.queries.indexes import docs_hybrid_search
 
     rows = docs_hybrid_search(spark, sf_dir).collect()
     by_q = {}

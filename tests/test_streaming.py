@@ -40,7 +40,7 @@ def test_streaming_matches_batch(spark, sf_dir, record_files, tmp_path):
 
     stream = SP.read_json_record_stream(spark, record_files)
     enriched = SP.streaming_enriched_shots(stream)
-    SP.run_available_now(enriched, archive, ckpt)
+    SP.run_available_now(enriched, SP.upsert_each_batch(archive), ckpt)
 
     got = spark.read.parquet(archive)
     # batch twin: same combinators, batch source.  dropDuplicates keeps
@@ -74,7 +74,9 @@ def test_second_run_is_noop(spark, record_files, tmp_path):
     ckpt = str(tmp_path / "ckpt2")
     for _ in range(2):  # second run: checkpoint says nothing new
         stream = SP.read_json_record_stream(spark, record_files)
-        SP.run_available_now(SP.streaming_enriched_shots(stream), archive, ckpt)
+        SP.run_available_now(
+            SP.streaming_enriched_shots(stream), SP.upsert_each_batch(archive), ckpt
+        )
         count = spark.read.parquet(archive).count()
     assert spark.read.parquet(archive).count() == count
 
@@ -269,7 +271,9 @@ def test_streaming_cdc_tombstones_match_batch(spark, tmp_path):
         batch_df.write.mode("append").parquet(src)
         stream = spark.readStream.schema(batch_df.schema).parquet(src)
         SP.run_available_now(
-            stream, archive, ckpt, key=("k",), op_col="op", tiebreak=("ts",)
+            stream,
+            SP.upsert_each_batch(archive, key=("k",), op_col="op", tiebreak=("ts",)),
+            ckpt,
         )
 
     run_increment(delta1)
@@ -305,7 +309,7 @@ def test_streaming_progress_recorder(spark, record_files, tmp_path):
         stream = SP.read_json_record_stream(spark, record_files)
         enriched = SP.streaming_enriched_shots(stream)
         SP.run_available_now(
-            enriched, str(tmp_path / "archive"), str(tmp_path / "ckpt")
+            enriched, SP.upsert_each_batch(str(tmp_path / "archive")), str(tmp_path / "ckpt")
         )
         n_source = spark.read.text(record_files).count()
         rec.wait_for_rows(n_source)
@@ -322,7 +326,9 @@ def test_streaming_sliding_active_users_equals_batch(spark, sf_dir, tmp_path):
     """The watermarked sliding-window distinct (collect_set state) on a
     file stream must equal the batch registry query on the same rows —
     exact equality, not HLL closeness."""
-    from updating_datasets_data_engineering_spark import registry
+    from updating_datasets_data_engineering_spark.queries.curation import (
+        events_sliding_active_users,
+    )
 
     events = load_table(spark, sf_dir, "events")
     src = str(tmp_path / "sliding_src")
@@ -338,7 +344,7 @@ def test_streaming_sliding_active_users_equals_batch(spark, sf_dir, tmp_path):
     )
     q.awaitTermination()
     got = spark.sql("SELECT * FROM sliding_test")
-    expected = registry.events_sliding_active_users(spark, sf_dir)
+    expected = events_sliding_active_users(spark, sf_dir)
     cols = ["win_start_sec", "active_users"]
     assert _sorted_rows(got.select(*cols), cols) == _sorted_rows(
         expected.select(*cols), cols
@@ -355,7 +361,7 @@ def test_streaming_sig_edges_maintenance(spark, tmp_path):
     anti-join."""
     import unittest.mock as mock
 
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import graph as R
 
     src = str(tmp_path / "se_src")
     active_path = str(tmp_path / "se_active")
@@ -405,7 +411,7 @@ def test_streaming_triangles_maintenance(spark, tmp_path):
     correction over the served-edge diff."""
     import unittest.mock as mock
 
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import graph as R
     from updating_datasets_data_engineering_spark.operators import graph as G
 
     src = str(tmp_path / "ts_src")
@@ -463,7 +469,7 @@ def test_streaming_triangles_when_every_edge_drops_out(spark, tmp_path):
     import datetime as dt
     import unittest.mock as mock
 
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import graph as R
     from updating_datasets_data_engineering_spark.operators import graph as G
 
     paths = {k: str(tmp_path / k) for k in ("active", "pairs", "occ", "edges_snap", "tri")}
@@ -526,7 +532,7 @@ def test_streaming_triangles_multimonth(spark, tmp_path):
       leaves the served table byte-identical."""
     import unittest.mock as mock
 
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import graph as R
     from updating_datasets_data_engineering_spark.operators import graph as G
 
     src = str(tmp_path / "te_src")
@@ -666,7 +672,7 @@ def test_sig_edges_state_compaction(spark, tmp_path):
     row-preserving via compact_batch_index."""
     import unittest.mock as mock
 
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import graph as R
     from updating_datasets_data_engineering_spark.operators import maintenance as MNT
 
     src = str(tmp_path / "sec_src")
@@ -738,7 +744,7 @@ def test_sig_edges_resume_after_crashed_compaction_swap(spark, tmp_path):
     ``.old`` for good."""
     import unittest.mock as mock
 
-    from updating_datasets_data_engineering_spark import registry as R
+    from updating_datasets_data_engineering_spark.queries import graph as R
     from updating_datasets_data_engineering_spark.operators import maintenance as MNT
 
     src = str(tmp_path / "scs_src")

@@ -3,7 +3,7 @@ boilerplate-span detection, and strip application.
 
 The span-granular family (alignment-quantized exact-substring dedup,
 Lee et al. 2021, public) shared by the batch queries
-(``registry.docs_boilerplate_strip`` / ``docs_cross_doc_dup_rate`` /
+(``queries.curation.docs_boilerplate_strip`` / ``docs_cross_doc_dup_rate`` /
 ``docs_boilerplate_incremental``).
 
 Scale notes (100 TB): every frame here keys on the SPAN text — a
@@ -28,17 +28,6 @@ def chunk_frame(
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(TXT.fixed_chunks(F.col(text_col), n)).alias("i", "span"),
-    )
-
-
-def boilerplate_spans(chunks: DataFrame, min_docs: int = 2) -> DataFrame:
-    """Spans occurring in >= ``min_docs`` distinct documents — ONE
-    hash-aggregate on the uniform span key."""
-    return (
-        chunks.groupBy("span")
-        .agg(F.countDistinct("doc_id").alias("_nd"))
-        .where(F.col("_nd") >= min_docs)
-        .select("span")
     )
 
 

@@ -6,7 +6,7 @@ link graph before deciding crawl/keep priority (Common Crawl publishes
 host- and domain-level rank files computed this way; CCNet/RefinedWeb
 consume them as quality priors).  The fixture has no hyperlink table,
 so the rank runs on the user co-occurrence graph (same bipartite
-projection `registry.users_cooccurrence` gates) — the operator is the
+projection `queries.graph.users_cooccurrence` gates) — the operator is the
 graph-agnostic part; swap the edge list for a host graph at 100 TB.
 
 Scale notes

@@ -522,7 +522,7 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= {k}
 
 
 def repetition_sql(top_frac_flag: float = 0.05) -> str:
-    """Replays registry.docs_repetition: non-distinct word bigrams,
+    """Replays queries.indexes.docs_repetition: non-distinct word bigrams,
     per-doc top-bigram fraction / duplicate fractions (Gopher-style
     repetition filters, Rae et al. 2021)."""
     return f"""
@@ -558,7 +558,7 @@ FROM bg b JOIN agg a USING (doc_id)
 
 
 def contamination_sql(modulus: int = 17, min_shared: int = 5, n: int = 3) -> str:
-    """Replays registry.docs_contamination: distinct word n-gram
+    """Replays queries.indexes.docs_contamination: distinct word n-gram
     overlap between candidate docs and the held-out benchmark slice
     (doc_id % modulus = 0) — the public decontamination recipe (n-gram
     collision against eval sets, Brown et al. 2020 App. C)."""
@@ -591,7 +591,7 @@ PII_TEXT_EXPR = (
 
 
 def redact_sql() -> str:
-    """Replays registry.text_redact: deterministic PII-bearing strings
+    """Replays queries.indexes.text_redact: deterministic PII-bearing strings
     synthesized from events, then email/long-digit-run redaction.
     Patterns are RE2-and-Java-regex compatible (no backrefs)."""
     return f"""

@@ -1,7 +1,7 @@
 """Cross-document curation: source caps, boilerplate, LM scoring, JSD.
 
-Split from registry.py (VERDICT r6 item 7); bodies unchanged, see git history
-for provenance.  registry.py re-exports every name here.
+Split from registry.py (VERDICT r6 item 7); see git history for
+provenance.  Import the builders from here; ``registry`` is the catalogue.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from .. import caching
 from .. import oracles_ext as OE
 from ..operators import analytics as A
+from ..operators import curation as CUR
 from ..operators import dedup as D
 from ..operators import ingest as I
 from ..operators import merge as M
@@ -121,13 +122,6 @@ def docs_boilerplate_strip(spark, sf_dir, min_docs: int = 2):
         .where(F.col("_nd") >= min_docs)
         .select("span")
     )
-    return _strip_docs_against(docs, boiler)
-
-
-def _strip_docs_against(docs, boiler):
-    """Shared strip application — see operators/curation.strip_against."""
-    from ..operators import curation as CUR
-
     return CUR.strip_against(docs, boiler)
 
 
@@ -572,7 +566,7 @@ def docs_boilerplate_incremental(spark, sf_dir):
         index.join(crossing, "span", "left_semi").select("doc_id").distinct()
     )
     touched = delta.unionByName(archive.join(affected, "doc_id", "left_semi"))
-    return _strip_docs_against(touched, boiler)
+    return CUR.strip_against(touched, boiler)
 
 
 _ORACLE_BOILERPLATE_INCR = f"""

@@ -1,7 +1,7 @@
 """User-graph tier: co-occurrence, significant edges, PageRank, triangles.
 
-Split from registry.py (VERDICT r6 item 7); bodies unchanged, see git history
-for provenance.  registry.py re-exports every name here.
+Split from registry.py (VERDICT r6 item 7); see git history for
+provenance.  Import the builders from here; ``registry`` is the catalogue.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """The ordered QuerySpec registry (driver grades SPECS[:50]).
 
-Split from registry.py (VERDICT r6 item 7); bodies unchanged, see git history
-for provenance.  registry.py re-exports every name here.
+Split from registry.py (VERDICT r6 item 7); see git history for
+provenance.  Import the builders from here; ``registry`` is the catalogue.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ from ..operators import merge as M
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..sources import shot_synth as SS
+from ..session import AQE_CACHE_CONF, scoped_confs
 from ..tables import load_table
 from ._base import (
     Callable,
@@ -877,28 +878,6 @@ def _released(fn: Callable[[SparkSession, str], DataFrame]):
     return wrapped
 
 
-# Specs whose builder RUNS a structured stream (foreachBatch
-# maintainers execute inside the build call).  These stay on Spark's
-# default cached-plan compilation: the r13 isolated A/Bs (COVERAGE.md,
-# "the AQE-cache config, isolated and reverted (round 13)") measured
-# canChangeCachedPlanOutputPartitioning=true neutral-to-harmful on this
-# tier (+1–3 s at sf0.1, up to +3.0 s on users_triangles_streaming —
-# AQE-coalesced cache builds fight the maintainers' explicit
-# hour-repartition pins and concentrate the quadratic pair joins).
-_STREAMING_SPECS = frozenset(
-    {
-        "streaming_dedup_archive",
-        "docs_bm25_streaming",
-        "docs_tfidf_streaming",
-        "dedup_semantic_streaming",
-        "knn_ann_streaming",
-        "users_sig_edges_streaming",
-        "users_triangles_streaming",
-        "events_hourly_streaming",
-        "events_sessions_streaming",
-    }
-)
-
 # The AQE-cache conf is consulted at ``.persist()`` time (Spark's
 # CacheManager compiles the InMemoryRelation's physical plan when the
 # cache is REGISTERED, choosing then whether to keep AQE), and every
@@ -910,9 +889,6 @@ _STREAMING_SPECS = frozenset(
 # bytes, and the scoped builds' full-registry run (BENCH_FULL.json)
 # brought them back: users_pagerank 2.14→0.14 MB, docs_hybrid_search
 # 5.19→3.10, dedup_containment 26.29→18.53.
-_AQE_CACHE_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-
-
 def _aqe_cached_builds(fn: Callable[[SparkSession, str], DataFrame]):
     """Compile this query's cached plans WITH AQE (VERDICT r13 item 1).
 
@@ -924,36 +900,21 @@ def _aqe_cached_builds(fn: Callable[[SparkSession, str], DataFrame]):
     counters pinned (users_pagerank 0.16→2.14 MB, docs_hybrid_search
     3.44→5.19, dedup_containment 20.3→26.3: the round-start table in
     OPTIMIZATION_r14.md; the module comment above cites the bytes
-    after this wrapper).  The conf is
-    runtime-settable, so it is scoped per query build: batch specs get
-    AQE cache compilation, the streaming specs (where the same A/B
-    protocol measured it harmful) keep Spark's default."""
+    after this wrapper).  The conf is runtime-settable, so it is scoped
+    per query build.  A stream the build runs keeps Spark's default in
+    its ``foreachBatch`` (``streaming.pipeline.run_available_now``
+    unsets the conf around the stream's start), where the same A/B
+    protocol measured it harmful."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # restore exactly what was there: an unset conf is unset again,
-        # not pinned to its default
-        prev = spark.conf.get(_AQE_CACHE_CONF, None)
-        spark.conf.set(_AQE_CACHE_CONF, "true")
-        try:
+        with scoped_confs(spark, {AQE_CACHE_CONF: "true"}):
             return fn(spark, sf_dir)
-        finally:
-            if prev is None:
-                spark.conf.unset(_AQE_CACHE_CONF)
-            else:
-                spark.conf.set(_AQE_CACHE_CONF, prev)
 
     return wrapped
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        s.name: (
-            _released(s.fn)
-            if s.name in _STREAMING_SPECS
-            else _aqe_cached_builds(_released(s.fn))
-        )
-        for s in SPECS
-    }
+    return {s.name: _aqe_cached_builds(_released(s.fn)) for s in SPECS}
 
 
 def oracle_sql() -> dict[str, str]:

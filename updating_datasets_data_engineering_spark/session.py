@@ -16,8 +16,44 @@ every conf below is chosen for a real multi-executor cluster at ~100 TB:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# Whether cached plans compile with AQE.  Never set on the session:
+# queries.specs._aqe_cached_builds sets it to true around each spec's
+# build, and streaming.pipeline.run_available_now unsets it around a
+# stream's start, so foreachBatch caches compile at Spark's default.
+# The r13 isolated interleaved A/Bs (COVERAGE.md, "the AQE-cache
+# config, isolated and reverted (round 13)") measured it
+# neutral-to-harmful on the streaming tier (up to +3.0 s on
+# users_triangles_streaming, where AQE-coalesced cache builds fight the
+# explicit hour repartition pins), while the persisted-state batch rows
+# need it (OPTIMIZATION_r14.md).
+AQE_CACHE_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str | None]) -> Iterator[None]:
+    """Set runtime ``confs`` for the block (a ``None`` value unsets its
+    key), then restore exactly what was there: a conf that was unset is
+    unset again, not pinned to its default."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        _put(spark, k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            _put(spark, k, v)
+
+
+def _put(spark: SparkSession, key: str, value: str | None) -> None:
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
 
 
 def get_spark(
@@ -42,18 +78,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # canChangeCachedPlanOutputPartitioning is not set on the
-        # session: queries.specs._aqe_cached_builds sets it to true
-        # around each batch spec's build and restores it afterwards;
-        # the streaming specs build without it.  The r13 isolated
-        # interleaved A/Bs (COVERAGE.md, "the AQE-cache config,
-        # isolated and reverted (round 13)") measured it
-        # neutral-to-harmful on the streaming tier — up to +3.0 s on
-        # users_triangles_streaming, where AQE-coalesced cache builds
-        # fight the explicit hour repartition pins — while the
-        # persisted-state batch rows need it (OPTIMIZATION_r14.md).
-        # The 1.8-vs-7.2 s wedge-build quirk the config once addressed
-        # is fixed in code (no single-consumer persists on that path).
+        # AQE_CACHE_CONF is not set here (see its comment).  The
+        # 1.8-vs-7.2 s wedge-build quirk the config once addressed is
+        # fixed in code (no single-consumer persists on that path).
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -68,7 +95,5 @@ def prep_session(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # canChangeCachedPlanOutputPartitioning deliberately NOT set — see
-    # get_spark: the r13 isolated A/Bs measured it neutral-to-harmful
-    # with the broadcast/repartition pins in place
+    # AQE_CACHE_CONF deliberately NOT set (see its comment)
     return spark

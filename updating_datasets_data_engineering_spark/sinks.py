@@ -123,8 +123,8 @@ def write_kafka(df: DataFrame, brokers: str, topic: str, key_col: str | None = N
     producer.produce loop, kafka_streaming_service_not_used.py:47-50).
     Expects a ``value`` column (string/binary); optional key.  Not
     executable in this container (no broker) — the option surface is
-    the contract; the streaming variant is ``df.writeStream`` with the
-    same options plus a checkpoint."""
+    the contract; a stream writes the same format and options, plus a
+    checkpoint."""
     cols = [F.col("value").cast("string").alias("value")]
     if key_col:
         cols.insert(0, F.col(key_col).cast("string").alias("key"))

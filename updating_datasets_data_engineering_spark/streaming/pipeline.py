@@ -34,6 +34,7 @@ from .. import caching, fs
 from .. import store as ST
 from ..operators import ingest as I
 from ..operators import merge as M
+from ..session import AQE_CACHE_CONF, scoped_confs
 
 
 def _split_tombstones(batch: DataFrame, op_col, delete_op, id_col: str, value_col: str):
@@ -88,7 +89,7 @@ def read_json_record_stream(
     reader = spark.readStream.format("text")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(source_dir).withColumnRenamed("value", "value")
+    return reader.load(source_dir)
 
 
 def streaming_enriched_shots(records: DataFrame, watermark_delay: str = "1 day") -> DataFrame:
@@ -208,18 +209,23 @@ def append_finalized_each_batch(served_path: str):
 
 def run_available_now(
     stream_df: DataFrame,
-    archive_path: str,
+    fn,
     checkpoint_dir: str,
-    key: Sequence[str] = M.SHOT_KEY,
-    op_col: str | None = None,
-    delete_op: str = "delete",
-    tiebreak: Sequence[str] | None = None,
+    output_mode: str = "update",
     state_partitions: int | None = None,
-) -> None:
-    """Run-to-completion streaming upsert: process everything available,
-    checkpoint offsets, stop — the durable-offset equivalent of the
-    reference's daily batch-and-delete-topic cycle.  ``op_col`` enables
-    CDC tombstone semantics (see :func:`upsert_each_batch`).
+):
+    """Run-to-completion stream: hand every micro-batch of everything
+    available to the ``foreachBatch`` function ``fn``, checkpoint
+    offsets, stop — the durable-offset equivalent of the reference's
+    daily batch-and-delete-topic cycle.  Returns the finished query
+    (its ``recentProgress`` holds the per-batch state-operator
+    metrics).  This is the package's one stream start.
+
+    The stream's session is cloned at ``start()``, with the confs it
+    has then.  Its ``foreachBatch`` caches compile at Spark's default
+    for ``session.AQE_CACHE_CONF`` (see its comment): the conf is unset
+    for the start and restored afterwards, so a spec build that set it
+    keeps it for the work around the stream.
 
     ``state_partitions`` sizes the stateful operator's state store (a
     streaming query pins ``spark.sql.shuffle.partitions`` into its
@@ -231,24 +237,19 @@ def run_available_now(
     the cluster's default shuffle width; it only applies while this
     query runs (saved/restored around the stream, so concurrent batch
     work keeps the session default)."""
-    spark = stream_df.sparkSession
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    confs = {AQE_CACHE_CONF: None}
     if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    with scoped_confs(stream_df.sparkSession, confs):
         query = (
-            stream_df.writeStream.foreachBatch(
-                upsert_each_batch(archive_path, key, op_col, delete_op, tiebreak)
-            )
+            stream_df.writeStream.foreachBatch(fn)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
-            .outputMode("update")
+            .outputMode(output_mode)
             .start()
         )
         query.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
+    return query
 
 
 def running_user_totals(events: DataFrame, timeout_minutes: int | None = None) -> DataFrame:
@@ -356,7 +357,7 @@ def streaming_sliding_active_users(
     events: DataFrame, watermark_delay: str = "2 hours"
 ) -> DataFrame:
     """Watermarked SLIDING-window distinct-user counts — the streaming
-    twin of registry.events_sliding_active_users (1-hour window,
+    twin of queries.curation.events_sliding_active_users (1-hour window,
     15-minute slide, exact distinct).
 
     Exactness trick: streaming aggregation does not support
@@ -419,7 +420,7 @@ def maintain_ann_index_each_batch(
     delete_op: str = "delete",
 ):
     """foreachBatch function: STREAMING IVF/ANN index maintenance — the
-    streaming twin of ``registry.knn_ann_ivf_incremental``: the ANN
+    streaming twin of ``queries.indexes.knn_ann_ivf_incremental``: the ANN
     cell state is the archive ∪ delta loop, with compaction and
     deletes.
 
@@ -489,7 +490,7 @@ def maintain_semantic_index_each_batch(
 ):
     """foreachBatch function: STREAMING maintenance of the SemDeDup
     flags — the streaming leg that completes the semantic tier's
-    lifecycle (batch ``registry.dedup_semantic`` / incremental
+    lifecycle (batch ``queries.indexes.dedup_semantic`` / incremental
     ``dedup_semantic_incremental`` / retract ``dedup_semantic_retract``
     / streaming), composed from the SAME
     two operators the graded queries use: inserts run
@@ -902,7 +903,7 @@ def maintain_sig_edges_each_batch(
     """foreachBatch function: STREAMING maintenance of the significant
     co-occurrence graph as PURE ADDITIVE PARTIALS — incremental view
     maintenance of a SELF-JOIN (the streaming twin of
-    ``registry.users_sig_edges_incremental``, without its disjoint-days
+    ``queries.graph.users_sig_edges_incremental``, without its disjoint-days
     assumption: micro-batches may split an hour window arbitrarily).
 
     r10 shape of this maintainer re-aggregated the ENTIRE persisted

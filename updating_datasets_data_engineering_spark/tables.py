@@ -64,10 +64,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def fan_out_if_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition a DataFrame whose scan would serialize a
     CPU-bound chain, using the cheap ``inputFiles`` metadata probe
