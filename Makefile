@@ -8,11 +8,13 @@
 #   make bench     - min-of-2 headline benchmark, one JSON line
 #   make bench-sf1 - 10x-scale benchmark (VERDICT r6 item 5): builds the
 #                    /tmp/graft_sf1 replication fixture if absent, runs the
-#                    SF1_HEADLINE subset (top cost + per-family anchors +
-#                    current-round additions) with the untimed state-build
-#                    pass, writes BENCH_SF1.json — re-run every round so
-#                    the scaling table never goes stale
-#   make test      - full pytest suite
+#                    full registry (HEADLINE: every spec but the quarantine)
+#                    with the untimed state-build pass, writes
+#                    BENCH_SF1.json — re-run every round so the scaling
+#                    table never goes stale
+#   make test      - full pytest suite, run to completion (the ROADMAP
+#                    Tier-1 command: a failure or a collection error does
+#                    not stop the run)
 
 SF_PARITY ?= /root/testdata/sf0.01
 SF_PLANS  ?= /root/testdata/sf0.01
@@ -48,4 +50,5 @@ bench-sf1:
 	SPARK_GRAFT_BENCH_QUERIES=@sf1 python bench.py
 
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider

@@ -100,133 +100,6 @@ COMPACT_SET = [
 ]
 
 
-# sf1 scale bench (VERDICT r7 item 3): the FULL registry — `@sf1` now
-# resolves to HEADLINE, so every non-quarantined spec has an sf1
-# number.  The old curated subset below survives as `@sf1sub` for quick
-# iteration (it is also the solo-probe anchor list for the exponent
-# fits).
-SF1_HEADLINE = [
-    "users_cooccurrence",
-    "streaming_dedup_archive",
-    "embedding_near_dup_ann",
-    "embedding_near_dup_t90",
-    "shot_team_summary",
-    "shot_team_summary_bucketed",
-    "orders_profile",
-    "dedup_semantic",
-    "dedup_clusters_incremental",
-    "shot_ingest_json",
-    "dedup_ngram_jaccard",
-    "docs_deduplicated",
-    "users_pagerank_personalized",
-    "users_pagerank",
-    "dedup_clusters",
-    "price_quantiles",
-    "docs_boilerplate_incremental",
-    "users_triangles",
-    "dedup_minhash_lsh_salted",
-    "q2_min_cost_supplier",
-    "dedup_simhash",
-    "q1_pricing_summary",
-    "dedup_incremental",
-    "users_sig_edges_incremental",
-    # current-round additions (keep this block fresh per round)
-    "docs_tfidf_incremental",
-    "docs_snapshot_diff",
-    "dedup_containment_incremental",
-    "dedup_containment_retract",
-    "events_zonemap_retract",
-    "dedup_semantic_incremental",
-    "dedup_containment",
-    "docs_repeated_spans_unaligned",
-    "docs_repeated_spans_incremental",
-    "docs_novelty_scored",
-    "docs_repeated_spans_retract",
-    "docs_bm25_search",
-    "docs_bm25_incremental",
-    "docs_bm25_retract",
-    "docs_bm25_streaming",
-    "dedup_semantic_retract",
-    "dedup_semantic_streaming",
-    "docs_hybrid_search",
-    # mid-registry anchors (VERDICT r6 "missing" 3: the middle of the
-    # registry had never run above sf0.1) — one per untested family
-    "events_k_anonymity",
-    "events_zorder_layout",
-    "events_zorder_incremental",
-    "docs_split_leakage_safe",
-    "sources_jsd_hashed",
-    "docs_contamination",
-    "events_sessionize",
-    "events_funnel",
-    "docs_tfidf_keywords",
-    "q9_product_profit",
-    "events_retention_cohorts",
-    "merge_scd2_customers",
-    "docs_pack_sequences",
-    "multimodal_features",
-    "incremental_value_quantiles",
-    # r11 births
-    "users_triangles_streaming",
-    "events_hourly_streaming",
-    "users_sig_edges_retract",
-    "users_triangles_retract",
-    # r12 births
-    "events_sessions_streaming",
-    "users_cooccurrence_salted",
-]
-
-
-# Exponent-fit probe set (VERDICT r7 item 1 / r8 item 3): the heavy
-# families, run identically at THREE scale points (sf0.1 k=1, sf0.3 k=3,
-# sf1 k=10) in dedicated same-size sessions so session crowding cancels
-# in the fit.  `fit_exponents.py 1:A 3:B 10:C` turns the three detail
-# files into per-query growth exponents.
-EXP_HEADLINE = [
-    "dedup_semantic",
-    "dedup_semantic_incremental",
-    "embedding_near_dup_ann",
-    "users_triangles",
-    "users_cooccurrence",
-    "users_sig_edges_incremental",
-    "users_pagerank",
-    "users_pagerank_personalized",
-    "users_communities",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_clusters_incremental",
-    "docs_deduplicated",
-    "dedup_containment",
-    "dedup_containment_incremental",
-    "dedup_containment_retract",
-    "docs_repeated_spans_unaligned",
-    "docs_repeated_spans_retract",
-    "streaming_dedup_archive",
-    "docs_tfidf_keywords",
-    "q1_pricing_summary",
-    # r9 continuation births (the two streaming-graded specs are the
-    # bench's most expensive rows — their growth curve is the evidence
-    # the fixed micro-batch overhead amortizes)
-    "docs_bm25_search",
-    "docs_bm25_incremental",
-    "docs_bm25_retract",
-    "docs_bm25_streaming",
-    "dedup_semantic_retract",
-    "dedup_semantic_streaming",
-    # r10 births: the new maintenance legs' growth curves (the
-    # streaming rows again carry fixed micro-batch overhead that the
-    # fit's floor adjustment + the flat incremental exponents explain)
-    "docs_hybrid_search_ann",
-    "archive_roundtrip_orders",
-    "docs_tfidf_retract",
-    "docs_tfidf_streaming",
-    "users_triangles_incremental",
-    "users_sig_edges_streaming",
-    "knn_ann_streaming",
-]
-
-
 def force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
@@ -327,10 +200,6 @@ def main() -> None:
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if subset == "@sf1":
         headline = HEADLINE  # full registry at scale (VERDICT r7 item 3)
-    elif subset == "@sf1sub":
-        headline = SF1_HEADLINE
-    elif subset == "@exp":
-        headline = EXP_HEADLINE
     else:
         headline = subset.split(",") if subset else HEADLINE
     out_file = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")

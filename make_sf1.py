@@ -8,8 +8,7 @@ customer/supplier→nation→region), and the per-replica perturbations
 keep the corpus structure linear:
 
   * documents: every word gets a per-replica prefix (replicas share no
-    shingles — duplicate pairs/clusters scale 10×, never 100×; the same
-    discipline scale_probe.replicate uses);
+    shingles — duplicate pairs/clusters scale 10×, never 100×);
   * embeddings: per-replica circular shift (replicas sit far apart in
     cosine);
   * events: user_id/event_id offsets AND a one-YEAR time shift per

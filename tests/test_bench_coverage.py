@@ -30,12 +30,6 @@ def test_quarantine_is_registered_and_minimal():
     assert bench.BENCH_QUARANTINE == {"embedding_near_dup"}
 
 
-def test_sf1_and_exp_subsets_are_registered():
-    names = {s.name for s in SPECS}
-    assert set(bench.SF1_HEADLINE) <= names
-    assert set(bench.EXP_HEADLINE) <= names
-
-
 def test_compact_set_is_registered_unique_and_fits():
     """COMPACT_SET (VERDICT r13 item 2) is the deterministic final-line
     subset: every name registered, no dupes, and bench's own compact

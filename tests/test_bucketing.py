@@ -34,8 +34,11 @@ def no_broadcast(spark):
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables, no_broadcast):
     lt, rt = bucketed_tables
-    joined = B.bucketed_join(spark, lt, rt, on=["o_orderkey"]).groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n")
+    joined = (
+        spark.table(lt)
+        .join(spark.table(rt), on=["o_orderkey"])
+        .groupBy("o_orderstatus")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
     facts = analyze(joined)
     # join itself is exchange-free; only the final tiny aggregate shuffles
@@ -59,7 +62,7 @@ def test_unbucketed_join_shuffles_for_contrast(spark, sf_dir, no_broadcast):
 
 def test_bucketed_join_correct(spark, sf_dir, bucketed_tables):
     lt, rt = bucketed_tables
-    got = B.bucketed_join(spark, lt, rt, on=["o_orderkey"]).count()
+    got = spark.table(lt).join(spark.table(rt), on=["o_orderkey"]).count()
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     want = orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey).count()

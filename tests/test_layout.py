@@ -10,6 +10,25 @@ from updating_datasets_data_engineering_spark.operators import layout as L
 from updating_datasets_data_engineering_spark.tables import load_table
 
 
+def _pruning_fraction(zonemap, x_lo, x_hi, y_lo, y_hi):
+    """One-row frame (n_shards, n_touched, rows_total, rows_touched):
+    how much of the layout a 2-D range predicate must read, by zonemap
+    intersection — the skip metric a table format computes from file
+    stats."""
+    hit = (
+        (F.col("x_max") >= F.lit(x_lo))
+        & (F.col("x_min") <= F.lit(x_hi))
+        & (F.col("y_max") >= F.lit(y_lo))
+        & (F.col("y_min") <= F.lit(y_hi))
+    )
+    return zonemap.agg(
+        F.count(F.lit(1)).cast("long").alias("n_shards"),
+        F.sum(hit.cast("int")).cast("long").alias("n_touched"),
+        F.sum("n_rows").cast("long").alias("rows_total"),
+        F.sum(F.when(hit, F.col("n_rows")).otherwise(0)).cast("long").alias("rows_touched"),
+    )
+
+
 def test_zonemap_covers_all_rows(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         F.unix_millis("ts").alias("x"), F.col("value").alias("y")
@@ -45,7 +64,7 @@ def test_zorder_prunes_value_predicates_linear_layout_cannot(spark, sf_dir):
     y_hi = s.ymax
 
     zm = L.zorder_shards(ev, "x", "y")
-    z_stats = L.pruning_fraction(zm, x_lo, x_hi, y_lo, y_hi).first()
+    z_stats = _pruning_fraction(zm, x_lo, x_hi, y_lo, y_hi).first()
 
     # linear layout: 64 equal-width time shards (what partitioning by
     # date alone gives); same zonemap machinery
@@ -60,7 +79,7 @@ def test_zorder_prunes_value_predicates_linear_layout_cannot(spark, sf_dir):
         F.min("x").alias("x_min"), F.max("x").alias("x_max"),
         F.min("y").alias("y_min"), F.max("y").alias("y_max"),
     )
-    l_stats = L.pruning_fraction(linear, x_lo, x_hi, y_lo, y_hi).first()
+    l_stats = _pruning_fraction(linear, x_lo, x_hi, y_lo, y_hi).first()
 
     # both layouts must prune the time dimension...
     assert z_stats.rows_touched < z_stats.rows_total
@@ -121,7 +140,7 @@ def test_zonemap_retraction_contract(spark, sf_dir):
         assert (r["x_min"], r["x_max"], r["y_min"], r["y_max"]) == pre[r["shard"]]
     # pruning CORRECTNESS on the delete-heavy region: every shard that
     # still holds a live row in the probed box must be touched
-    probe = L.pruning_fraction(out.drop("n_deleted", "stale"), 0, 2**62, y90, 2**62).first()
+    probe = _pruning_fraction(out.drop("n_deleted", "stale"), 0, 2**62, y90, 2**62).first()
     live_rows_in_box = ev.where((F.col("y") >= y90) & F.lit(False)).count()  # all deleted
     assert probe.rows_touched >= live_rows_in_box  # over-approximation allowed, misses not
     # staleness: a shard made of >= 50% deleted rows trips; a shard

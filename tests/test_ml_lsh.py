@@ -1,47 +1,11 @@
-"""MLlib LSH variants must agree with the exact/md5 baselines."""
+"""Near-duplicate operators (LSH salt grid, fuzzy pairs, containment,
+repeated spans) must agree with their exact baselines."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from updating_datasets_data_engineering_spark.operators import dedup as D
-from updating_datasets_data_engineering_spark.operators import ml_lsh as ML
-from updating_datasets_data_engineering_spark.tables import load_table
-
-
-def test_ml_minhash_finds_exact_duplicates(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    # ground truth: pairs of byte-identical documents
-    dup_groups = D.dedup_exact(docs).where(F.col("n_copies") > 1)
-    exact_dup_pair_count = dup_groups.count()
-    found = ML.ml_minhash_pairs(docs, jaccard_distance_max=0.01)
-    # every exact-dup pair has Jaccard distance 0 -> must all be found
-    perfect = found.where(F.col("jaccard") >= 0.999999)
-    if exact_dup_pair_count > 0:
-        assert perfect.count() > 0
-    assert found.count() >= perfect.count()
-
-
-def test_ml_brp_pairs_consistent_with_l2(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings").limit(200)
-    pairs = ML.ml_brp_neighbors(emb, distance_max=5.0)
-    rows = pairs.limit(20).collect()
-    assert all(r["l2_dist"] <= 5.0 for r in rows)
-    # spot-check one distance against the engine's own l2 computation
-    if rows:
-        from updating_datasets_data_engineering_spark.functions import vectors as V
-
-        r = rows[0]
-        a = emb.where(F.col("vec_id") == r["id_a"]).select("embedding").alias("a")
-        b = emb.where(F.col("vec_id") == r["id_b"]).select(
-            F.col("embedding").alias("eb")
-        )
-        d = (
-            a.crossJoin(b)
-            .select(V.l2_distance(F.col("embedding"), F.col("eb")).alias("d"))
-            .collect()[0]["d"]
-        )
-        assert abs(d - r["l2_dist"]) < 1e-4
 
 
 def _pair_set(df):
@@ -316,7 +280,7 @@ def test_retract_spans_splits_intervals_and_silences_untouched(spark):
     output (no remaining spans); (c) survivors holding no revoked gram
     are yesterday's output and stay silent."""
     from updating_datasets_data_engineering_spark.operators.dedup import (
-        retract_repeated_spans,
+        _retract_span_parts,
         span_gram_df,
         span_posting_index,
     )
@@ -336,7 +300,7 @@ def test_retract_spans_splits_intervals_and_silences_untouched(spark):
     sketch = span_gram_df(posting)
     tombs = spark.createDataFrame([(3,), (5,)], ["doc_id"])
     got = {
-        tuple(r) for r in retract_repeated_spans(tombs, posting, sketch, k=5).collect()
+        tuple(r) for r in _retract_span_parts(tombs, posting, sketch, 5)[1].collect()
     }
     # doc 1: the fused [0,14] island splits into [0,4] + [10,14] once
     # doc 3's bridge gram is revoked; doc 4 is touched but span-less

@@ -93,76 +93,3 @@ def test_dynamic_partition_overwrite_rewrites_only_touched(spark, sf_dir, tmp_pa
     untouched_after = {p: m for p, m in after.items() if not p.startswith(touched_prefix)}
     assert untouched_before == untouched_after, "untouched partitions were rewritten"
     assert any(p.startswith(touched_prefix) for p in after)
-
-
-# ---------------------------------------------------------------------------
-# Z-order clustering (r5)
-# ---------------------------------------------------------------------------
-
-def _files_pruned_by_stats(path, col, lo, hi):
-    """Count parquet files whose footer min/max excludes [lo, hi] —
-    exactly the skipping decision a stats-aware reader makes."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    total = kept = 0
-    for f in os.listdir(path):
-        if not f.endswith(".parquet"):
-            continue
-        total += 1
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        schema_idx = {md.row_group(0).column(i).path_in_schema: i
-                      for i in range(md.row_group(0).num_columns)}
-        i = schema_idx[col]
-        fmin = min(md.row_group(g).column(i).statistics.min for g in range(md.num_row_groups))
-        fmax = max(md.row_group(g).column(i).statistics.max for g in range(md.num_row_groups))
-        if fmax >= lo and fmin <= hi:
-            kept += 1
-    return total, kept
-
-
-def test_zorder_prunes_on_every_dimension(spark, tmp_path):
-    """Linear sort on user_id: a value filter reads every file.
-    Z-order on (user_id, value): BOTH columns' footer stats prune."""
-    from updating_datasets_data_engineering_spark.operators.layout import zorder_write
-
-    ev = load_table(spark, "/root/testdata/sf0.01", "events").select(
-        "event_id", "user_id", "value"
-    )
-    linear = str(tmp_path / "linear")
-    zpath = str(tmp_path / "zorder")
-    (
-        ev.repartitionByRange(16, "user_id").sortWithinPartitions("user_id")
-        .write.mode("overwrite").parquet(linear)
-    )
-    zorder_write(ev, zpath, cols=["user_id", "value"], n_files=16)
-
-    # same rows either way
-    assert spark.read.parquet(zpath).count() == ev.count()
-
-    # narrow slice in each dimension (~1/8 of each range)
-    u_tot, u_kept_lin = _files_pruned_by_stats(linear, "user_id", 10.0, 25.0)
-    _, u_kept_z = _files_pruned_by_stats(zpath, "user_id", 10.0, 25.0)
-    v_tot, v_kept_lin = _files_pruned_by_stats(linear, "value", 10.0, 20.0)
-    _, v_kept_z = _files_pruned_by_stats(zpath, "value", 10.0, 20.0)
-
-    assert u_tot == 16 and v_tot == 16
-    # the linear layout prunes user_id but reads ALL files for value
-    assert u_kept_lin <= 4
-    assert v_kept_lin == 16
-    # the z-order layout prunes BOTH dimensions materially
-    assert u_kept_z <= 8, f"z-order user_id kept {u_kept_z}/16"
-    assert v_kept_z <= 8, f"z-order value kept {v_kept_z}/16"
-
-
-def test_zorder_accepts_known_boundaries(spark, tmp_path):
-    from updating_datasets_data_engineering_spark.operators.layout import zorder_write
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select("user_id", "value")
-    p = str(tmp_path / "zb")
-    zorder_write(
-        ev, p, cols=["user_id", "value"], n_files=4, code_bits=2,
-        boundaries={"user_id": [50, 100, 150], "value": [10, 30, 60]},
-    )
-    assert spark.read.parquet(p).count() == ev.count()

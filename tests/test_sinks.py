@@ -42,54 +42,6 @@ def test_season_tgz_parity_roundtrip(spark, sf_dir, tmp_path):
     assert set(back.columns) == set(df.columns)
 
 
-def test_orc_archive_roundtrip_and_dynamic_overwrite(spark, sf_dir, tmp_path):
-    """ORC write/read parity + dynamic partition overwrite touches only
-    the written partition (same contract as the parquet archive)."""
-    df = _enriched(spark, sf_dir)
-    path = str(tmp_path / "archive_orc")
-    sinks.write_orc_archive(df, path, partition_by=("quarter",))
-    back = sinks.read_orc_archive(spark, path)
-    assert back.count() == df.count()
-    assert any(d.startswith("quarter=") for d in os.listdir(path))
-
-    from pyspark.sql import functions as F
-
-    one_q = back.select("quarter").where(F.col("quarter").isNotNull()).first()[0]
-    before_other = back.where(F.col("quarter") != one_q).count()
-    patch = df.where(F.col("quarter") == one_q).limit(5)
-    sinks.write_orc_archive(patch, path, partition_by=("quarter",))
-    after = sinks.read_orc_archive(spark, path)
-    # untouched partitions intact; the overwritten one now holds 5 rows
-    assert after.where(F.col("quarter") != one_q).count() == before_other
-    assert after.where(F.col("quarter") == one_q).count() == 5
-
-
-def test_jsonl_roundtrip_schema_given(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    path = str(tmp_path / "docs_jsonl")
-    sinks.write_jsonl_delta(docs, path)
-    back = sinks.read_jsonl_delta(spark, path, schema=docs.schema)
-    assert back.schema == docs.schema
-    assert sorted(r.doc_id for r in back.select("doc_id").collect()) == sorted(
-        r.doc_id for r in docs.select("doc_id").collect()
-    )
-
-
-def test_parquet_merged_schema_evolution(spark, sf_dir, tmp_path):
-    """A later writer adds a column; mergeSchema surfaces it with nulls
-    for the older files."""
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    path = str(tmp_path / "evolved")
-    docs.limit(50).write.parquet(path)
-    docs.limit(30).withColumn("quality", F.lit(0.5)).write.mode("append").parquet(path)
-    back = sinks.read_parquet_merged_schema(spark, path)
-    assert "quality" in back.columns
-    assert back.count() == 80
-    assert back.where(F.col("quality").isNull()).count() == 50
-
-
 def test_jsonl_corrupt_record_handling(spark, tmp_path):
     """Operational contract for JSONL shards with broken lines:
     PERMISSIVE surfaces them in _corrupt_record (audit path),

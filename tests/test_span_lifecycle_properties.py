@@ -75,7 +75,7 @@ def test_retract_equals_restricted_survivor_recompute(spark, blocks_per_doc):
     sketch = D.span_gram_df(posting)
     tombs = docs.where(F.col("doc_id") % 4 == 1).select("doc_id")
     survivors = docs.join(tombs, "doc_id", "left_anti")
-    got = D.retract_repeated_spans(tombs, posting, sketch, k=K)
+    got = D._retract_span_parts(tombs, posting, sketch, K)[1]
 
     # independent restriction: survivors holding a revoked gram
     # (full df >= 2, surviving df < 2)

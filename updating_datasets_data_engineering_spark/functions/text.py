@@ -136,28 +136,6 @@ def minhash_signature_of(features: Column, k: int = 16) -> list[Column]:
     return [F.array_min(F.transform(features, _salted_hash_fn(f"{i}:"))) for i in range(k)]
 
 
-def minhash_signature(text: Column, k: int = 16) -> list[Column]:
-    """k-permutation MinHash signature columns over distinct words."""
-    return minhash_signature_of(distinct_words(text), k)
-
-
-def simhash32(text: Column) -> Column:
-    """32-bit SimHash over distinct tokens, md5-based so the oracle can
-    reproduce it.  Bit j is 1 iff sum over tokens of (2*bit_j(h(w))-1)
-    is positive."""
-    toks = distinct_words(text)
-    hashes = F.transform(toks, lambda w: F.conv(word_md5_prefix(w), 16, 10).cast("long"))
-
-    def bit_term(mask: int):
-        return lambda acc, h: acc + (h.bitwiseAND(F.lit(mask)) != 0).cast("long") * 2 - 1
-
-    out = F.lit(0).cast("long")
-    for j in range(32):
-        bit_sum = F.aggregate(hashes, F.lit(0).cast("long"), bit_term(1 << j))
-        out = out + F.when(bit_sum > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def bigrams(text: Column) -> Column:
     """NON-distinct word bigram list (space-joined), for repetition
     metrics — unlike :func:`shingles`, duplicates are the signal here

@@ -24,11 +24,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    d = F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2)
-    return F.sqrt(F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v))
-
-
 def srp_bucket(a: Column, planes: list[list[float]]) -> Column:
     """Signed-random-projection LSH bucket id: one bit per hyperplane
     (sign of the dot product), packed into a long.  ``planes`` is a

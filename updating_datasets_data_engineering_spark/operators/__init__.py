@@ -6,7 +6,6 @@ from . import (  # noqa: F401
     ingest,
     maintenance,
     merge,
-    ml_lsh,
     multimodal,
     similarity,
     skew,

@@ -14,7 +14,7 @@ from __future__ import annotations
 import posixpath
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .. import fs
 
@@ -59,11 +59,3 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: Sequence[str], how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — planned as a
-    zero-exchange SortMergeJoin over pre-bucketed scans."""
-    return spark.table(left_table).join(spark.table(right_table), on=list(on), how=how)

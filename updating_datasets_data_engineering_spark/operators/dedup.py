@@ -536,7 +536,7 @@ def incremental_repeated_spans(
     return _merge_islands(hits, k)
 
 
-def retract_repeated_spans(
+def retract_spans_summary(
     tombstones: DataFrame,
     posting_state: DataFrame,
     gram_df_state: DataFrame,
@@ -551,12 +551,16 @@ def retract_repeated_spans(
     a deleted doc) is what makes deletes harder than inserts here.
 
     ``tombstones`` carries the deleted doc ids (column ``doc_id``).
-    Returns the post-delete intervals for exactly the SURVIVOR docs the
-    deletion can change: docs holding ≥1 gram whose duplication the
-    tombstones revoke (old df ≥ 2, surviving df < 2).  A changed doc
-    absent from the output has no remaining duplicated span; survivors
-    holding no revoked gram keep yesterday's intervals, and the
-    tombstoned docs' own rows are dropped by the caller's upsert.
+    Returns one row per SURVIVOR doc the deletion can change — docs
+    holding ≥1 gram whose duplication the tombstones revoke (old df ≥ 2,
+    surviving df < 2): ``(doc_id, n_spans_after, dup_tokens_after)``,
+    zeros when every duplicated span vanished.  This is the shape the
+    upsert consumer needs (which docs to rewrite, INCLUDING the clears
+    an interval frame can't express: in real corpora most dup groups
+    are pairs, so deleting one member usually erases the survivor's
+    spans outright).  Survivors holding no revoked gram keep
+    yesterday's output, and the tombstoned docs' own rows are dropped
+    by the caller's upsert.
 
     Plan shape (work ∝ deleted rows + touched-doc posting rows —
     the archive is never re-tokenized or re-aggregated):
@@ -569,28 +573,7 @@ def retract_repeated_spans(
          those docs' full posting rows come back by one more semi-join.
       4. hits = touched rows whose gram SURVIVES as dup (stored df
          minus removal still ≥ 2), re-merged by the shared island fold.
-
-    State updates (both delta-shaped, for the caller to persist):
-    posting minus tombstoned rows; sketch with removed counts
-    subtracted and zero-count grams dropped.
     """
-    _, intervals = _retract_span_parts(tombstones, posting_state, gram_df_state, k)
-    return intervals
-
-
-def retract_spans_summary(
-    tombstones: DataFrame,
-    posting_state: DataFrame,
-    gram_df_state: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Affected-doc report for :func:`retract_repeated_spans` — one row
-    per survivor the deletion touches: ``(doc_id, n_spans_after,
-    dup_tokens_after)``, zeros when every duplicated span vanished.
-    This is the shape the upsert consumer needs (which docs to rewrite,
-    INCLUDING the clears the interval frame can't express: in real
-    corpora most dup groups are pairs, so deleting one member usually
-    erases the survivor's spans outright)."""
     touched, intervals = _retract_span_parts(
         tombstones, posting_state, gram_df_state, k
     )
@@ -613,7 +596,8 @@ def _retract_span_parts(
     gram_df_state: DataFrame,
     k: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """(touched survivor docs, their post-delete intervals)."""
+    """(touched survivor docs, their post-delete intervals); a touched
+    doc absent from the intervals has no duplicated span left."""
     tomb_ids = tombstones.select("doc_id")
     removed_post = posting_state.join(tomb_ids, "doc_id", "left_semi")
     removed_df = removed_post.groupBy("gh").agg(
@@ -1115,12 +1099,11 @@ def simhash_signatures(
 ) -> DataFrame:
     """Per-document 32-bit SimHash in ONE pass: explode distinct tokens,
     hash each token once, aggregate all 32 bit-sums in a single
-    hash-aggregate (the Column-expression variant in functions.text
-    re-hashes per bit — 32× the work; measured 6.7s -> 0.6s at sf0.1).
+    hash-aggregate (a per-row Column expression re-hashes per bit — 32×
+    the work; measured 6.7s -> 0.6s at sf0.1).
 
-    Semantics identical to functions.text.simhash32 (md5-prefix hash,
-    bit j set iff the signed bit-count is positive; tokenless docs get
-    signature 0).
+    md5-prefix token hash; bit j is set iff the signed bit-count is
+    positive; tokenless docs get signature 0.
     """
     toks = docs.select(
         F.col(id_col),

@@ -10,17 +10,12 @@ Supported aggregate states (insert-only deltas):
 
   * count / sum / min / max — directly algebraic, combined by +/least/
     greatest.
-  * avg — carried as (sum, count) state columns; finalized as sum/cnt
-    (an avg is NOT directly combinable — the round-1 gap).
+  * avg — carried as (sum, count) state columns; the reader divides
+    sum/cnt (an avg is NOT directly combinable — the round-1 gap).
   * approx_distinct — an HLL sketch per group (`hll_sketch_agg`),
-    combined with `hll_union`, finalized with `hll_sketch_estimate`.
+    combined with `hll_union`, read with `hll_sketch_estimate`.
     Sketch state is O(kB) per group regardless of cardinality — the
     100 TB answer for distinct-users dashboards.
-  * exact distinct — maintained through an auxiliary (key, value)
-    pair-state table (:func:`update_distinct_pairs`); distinct count =
-    row count of the state per key.  State is O(#distinct pairs), the
-    price of exactness; it is also the only variant that can absorb
-    retractions (delete a pair) without a rebuild.
 
 The combine is a tiny outer join on the group key — broadcastable when
 the delta touches few groups, so the big prev-state side never
@@ -148,24 +143,6 @@ def combine_states(
     return joined.select(*out_cols)
 
 
-def finalize_state(
-    state: DataFrame, key: Sequence[str], aggs: dict[str, tuple[str, str]]
-) -> DataFrame:
-    """Project the carried state to user-facing values: avg = sum/cnt,
-    approx_distinct = sketch estimate, everything else passes through."""
-    cols = [F.col(k) for k in key]
-    for out, (_, fn) in aggs.items():
-        if fn == "avg":
-            cols.append(
-                (F.col(f"{out}__sum") / F.nullif(F.col(f"{out}__cnt"), F.lit(0))).alias(out)
-            )
-        elif fn == "approx_distinct":
-            cols.append(F.hll_sketch_estimate(F.col(f"{out}__hll")).alias(out))
-        else:
-            cols.append(F.col(out))
-    return state.select(*cols)
-
-
 def incremental_update(
     prev: DataFrame,
     delta_rows: DataFrame,
@@ -176,37 +153,6 @@ def incremental_update(
     previous state.  Cost is O(|delta| + |touched groups|), not
     O(|archive|)."""
     return combine_states(prev, partial_agg(delta_rows, key, aggs), key, aggs)
-
-
-def update_distinct_pairs(
-    prev_pairs: DataFrame | None,
-    delta_rows: DataFrame,
-    key: Sequence[str],
-    col: str,
-) -> DataFrame:
-    """Exact-distinct auxiliary state: the set of observed (key, value)
-    pairs.  New pairs are appended anti-join-style so the existing state
-    is never rewritten wholesale.  Retraction = delete the pair.
-
-    Shuffle note: the delta (``new_pairs``) is the LEFT/stream side of
-    the left_anti join, and Spark can only broadcast the RIGHT side —
-    here the big state table — so at scale this plan shuffles both
-    sides (or broadcasts the state if it happens to be small).  To keep
-    the big side exchange-free, store ``prev_pairs`` bucketed on
-    ``[*key, col]`` (operators.bucketing): the SMJ then only shuffles
-    the small delta.  See also ``incremental_avg_distinct`` in the
-    registry for the single-pass pair-state formulation that avoids the
-    anti-join entirely."""
-    new_pairs = delta_rows.select(*key, col).dropDuplicates([*key, col])
-    if prev_pairs is None:
-        return new_pairs
-    novel = new_pairs.join(prev_pairs, on=[*key, col], how="left_anti")
-    return prev_pairs.unionByName(novel)
-
-
-def distinct_counts(pairs: DataFrame, key: Sequence[str], out: str) -> DataFrame:
-    """Distinct count per key from the exact pair state."""
-    return pairs.groupBy(*key).agg(F.count(F.lit(1)).alias(out))
 
 
 # ---------------------------------------------------------------------------

@@ -22,8 +22,6 @@ pruning needs — bounding boxes, not total order.)
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -111,31 +109,6 @@ def zorder_shards(
             F.min(y_col).alias("y_min"),
             F.max(y_col).alias("y_max"),
         )
-    )
-
-
-def pruning_fraction(
-    zonemap: DataFrame,
-    x_lo,
-    x_hi,
-    y_lo,
-    y_hi,
-) -> DataFrame:
-    """One-row frame (n_shards, n_touched, rows_total, rows_touched):
-    how much of the layout a 2-D range predicate must read, by zonemap
-    intersection — the skip metric a lakehouse table format computes
-    from file stats.  Runs on the sketch-sized zonemap only."""
-    hit = (
-        (F.col("x_max") >= F.lit(x_lo))
-        & (F.col("x_min") <= F.lit(x_hi))
-        & (F.col("y_max") >= F.lit(y_lo))
-        & (F.col("y_min") <= F.lit(y_hi))
-    )
-    return zonemap.agg(
-        F.count(F.lit(1)).cast("long").alias("n_shards"),
-        F.sum(hit.cast("int")).cast("long").alias("n_touched"),
-        F.sum("n_rows").cast("long").alias("rows_total"),
-        F.sum(F.when(hit, F.col("n_rows")).otherwise(0)).cast("long").alias("rows_touched"),
     )
 
 
@@ -230,80 +203,4 @@ def retract_zonemaps(
             F.col("n_deleted")
             >= F.lit(stale_fraction) * (F.col("n_rows") + F.col("n_deleted")),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Quantile-coded Z-order FILE REWRITE (round-5 machinery, kept alongside the
-# zonemap sharding above; accidentally dropped in the round-6 module rewrite
-# and restored).  The two approaches are complementary: zorder_write pays a
-# range exchange + sort to produce n_files tightly-clustered parquet FILES
-# whose footer min/max stats prune on every z-ordered column (proof in
-# tests/test_scale_layout.py reads the actual footers), and quantile coding
-# keeps heavy-skew columns from degenerating the curve; zorder_shards above
-# is the SORTLESS path — map-side top-bit Morton sharding + an explicit
-# zonemap sketch — which is what the incremental query keeps up to date
-# without ever re-laying-out the archive.
-# ---------------------------------------------------------------------------
-
-
-def quantile_code(col, boundaries: Sequence[float]):
-    """Map a numeric column to its quantile-bucket index: the count of
-    boundaries at or below the value — Σ (v >= b_i), a flat sum of
-    boolean casts (monotone by construction, duplicate boundaries from
-    heavy skew merely skip codes)."""
-    code = F.lit(0).cast("long")
-    for b in boundaries:
-        code = code + (col.cast("double") >= F.lit(float(b))).cast("long")
-    return code
-
-
-def zorder_value(codes: Sequence, bits: int):
-    """Interleave the bits of non-negative int code columns into one
-    Morton value: dimension d contributes bit i at position
-    ``i * n_dims + d`` — adjacent z-values differ little in every
-    dimension at once."""
-    n = len(codes)
-    z = F.lit(0).cast("long")
-    for d, col in enumerate(codes):
-        for i in range(bits):
-            bit = F.shiftright(col, i).bitwiseAND(F.lit(1).cast("long"))
-            z = z.bitwiseOR(F.shiftleft(bit, i * n + d))
-    return z
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    code_bits: int = 6,
-    n_files: int = 16,
-    boundaries: dict[str, Sequence[float]] | None = None,
-    relative_error: float = 0.01,
-) -> None:
-    """Rewrite ``df`` as ``n_files`` parquet files clustered on the
-    Z-curve over ``cols``: quantile-code each column to ``code_bits``
-    bits, range-partition + sort by the interleaved value, so every
-    file covers a small hyper-rectangle in QUANTILE space and min/max
-    footer stats prune scans filtered on ANY of the z-ordered columns.
-
-    ``boundaries`` (col -> ascending cut points) skips the sketch pass
-    — at production scale the table statistics already know them.
-    """
-    cols = list(cols)
-    n_buckets = 1 << code_bits
-    if boundaries is None:
-        probs = [i / n_buckets for i in range(1, n_buckets)]
-        boundaries = {
-            c: df.stat.approxQuantile(c, probs, relative_error) for c in cols
-        }
-    codes = [quantile_code(F.col(c), boundaries[c]) for c in cols]
-    z = zorder_value(codes, code_bits)
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
     )

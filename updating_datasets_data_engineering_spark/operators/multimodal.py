@@ -109,56 +109,3 @@ def extract_features(docs_with_payload: DataFrame) -> DataFrame:
 def multimodal_features(docs: DataFrame) -> DataFrame:
     """documents -> binary payload -> Arrow-batched features."""
     return extract_features(attach_binary_payload(docs))
-
-
-RESIZED_SCHEMA = "doc_id LONG, payload BINARY, n_bytes LONG"
-
-
-def resize(docs_with_payload: DataFrame, target_bytes: int = 256) -> DataFrame:
-    """STAND-IN resize kernel: deterministic byte truncation/padding in
-    place of a real image resample (no codecs in this container).  The
-    Spark contract is the real part: map-only ``mapInPandas``, binary
-    in -> binary out, payload never shuffles."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            resized = pdf["payload"].map(
-                lambda p: bytes(p)[:target_bytes].ljust(target_bytes, b"\0")
-            )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": resized, "n_bytes": resized.map(len)}
-            )
-
-    return docs_with_payload.select("doc_id", "payload").mapInPandas(
-        batches, schema=RESIZED_SCHEMA
-    )
-
-
-FRAME_SCHEMA = "doc_id LONG, frame_no INT, frame BINARY, frame_sha256 STRING"
-
-
-def frame_sample(docs_with_payload: DataFrame, n_frames: int = 4) -> DataFrame:
-    """STAND-IN frame sampler: split the payload into ``n_frames``
-    equal byte slices (a real pipeline would seek keyframes with
-    ffmpeg).  One input row fans out to n rows — the Arrow batch
-    shape (explode inside mapInPandas) is the contract under test."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"doc_id": [], "frame_no": [], "frame": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload)
-                step = max(len(data) // n_frames, 1)
-                for i in range(n_frames):
-                    out["doc_id"].append(doc_id)
-                    out["frame_no"].append(i)
-                    out["frame"].append(data[i * step : (i + 1) * step])
-            yield pd.DataFrame(out)
-
-    # Python only slices (the stand-in for ffmpeg keyframe seeks); the
-    # per-frame digest is a JVM built-in applied after the Arrow stage
-    return (
-        docs_with_payload.select("doc_id", "payload")
-        .mapInPandas(batches, schema="doc_id LONG, frame_no INT, frame BINARY")
-        .withColumn("frame_sha256", F.sha2(F.col("frame"), 256))
-    )

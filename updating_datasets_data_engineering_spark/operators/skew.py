@@ -77,29 +77,6 @@ def salted_agg(
     return partial.groupBy(*key).agg(*final_exprs)
 
 
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: Sequence[str],
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: salt the skewed side's key, replicate the
-    small side once per salt value, join on (key, salt).
-
-    The hot key's rows spread over ``n_salts`` reducers instead of one;
-    the small side grows n_salts× (fine — it is small by contract).
-    This is the static fallback for when AQE's runtime skew-join split
-    can't apply (e.g. the skewed side feeds a co-partitioned window).
-    """
-    keys = list(on)
-    left = skewed.withColumn("_salt", F.pmod(F.hash(F.monotonically_increasing_id()), n_salts))
-    salts = F.explode(F.array(*[F.lit(i) for i in range(n_salts)])).alias("_salt")
-    right = small.select("*", salts)
-    joined = left.join(right, keys + ["_salt"], how)
-    return joined.drop("_salt")
-
-
 def guarded_self_pairs(
     df: DataFrame,
     window_cols: Sequence[str],

@@ -6,30 +6,11 @@ provenance.  Import the builders from here; ``registry`` is the catalogue.
 
 from __future__ import annotations
 
-# noqa: F401 — shared prelude; not every module uses every import
-from dataclasses import dataclass
-from typing import Callable, Optional
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import caching
 from .. import oracles_ext as OE
-from ..operators import analytics as A
 from ..operators import dedup as D
-from ..operators import ingest as I
-from ..operators import merge as M
-from ..operators import multimodal as MM
-from ..operators import similarity as SIM
-from ..sources import shot_synth as SS
-from ..tables import load_table
-from ._base import (
-    D,
-    F,
-    OE,
-    _t,
-    _td,
-)
+from ._base import _t, _td
 
 
 # ---------------------------------------------------------------------------

@@ -17,7 +17,6 @@ demand exactly one file.
 from __future__ import annotations
 
 import glob
-import gzip
 import os
 import shutil
 import tarfile
@@ -72,50 +71,6 @@ def export_season_tgz(df: DataFrame, out_tgz: str, member_name: str = "shots.csv
         tar.add(tmp_csv, arcname=member_name)
     shutil.rmtree(os.path.dirname(tmp_csv), ignore_errors=True)
     return out_tgz
-
-
-def write_orc_archive(
-    df: DataFrame, path: str, partition_by: tuple[str, ...] = (), mode: str = "overwrite"
-) -> None:
-    """ORC variant of the partitioned archive (same dynamic-overwrite
-    semantics) — ORC ships in Spark core, so an ORC-standardized
-    warehouse needs no extra packages; stats-based row-group skipping
-    works the same as parquet's."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def read_orc_archive(spark, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def write_jsonl_delta(df: DataFrame, path: str, compression: str | None = "gzip") -> None:
-    """JSON-lines delta sink — the interchange shape for downstream
-    tokenizer/training jobs that read text shards, one doc per line."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
-
-
-def read_jsonl_delta(spark, path: str, schema=None) -> DataFrame:
-    """Schema-given JSON-lines read: at scale, ALWAYS pass the schema —
-    schema inference is a full extra pass over the data."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.json(path)
-
-
-def read_parquet_merged_schema(spark, path: str) -> DataFrame:
-    """Schema-evolution read: union the schemas of all files under
-    ``path`` (columns added by later writers surface as nulls in older
-    files).  mergeSchema costs a footer read per file — bounded, but
-    only worth paying on evolved tables, hence opt-in here rather than
-    session-wide."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 def write_kafka(df: DataFrame, brokers: str, topic: str, key_col: str | None = None) -> None:

@@ -2,14 +2,12 @@
 per-batch progress (rows, durations, state-store size) for every query
 on the session.
 
-The batch side gets single-pass metrics from ``operators/observability``
-(Observation riding the action); streams get them here — the listener
-receives the engine's own per-microbatch progress events, so input-rate
-/ latency / state-growth monitoring costs nothing extra and needs no
-second pass over the stream.  This is the run-side evidence a
-production pipeline pages on: rows per batch, batch duration, and
-whether state (the watermarked dedup's key store) is growing without
-bound.
+The listener receives the engine's own per-microbatch progress
+events, so input-rate / latency / state-growth monitoring costs nothing
+extra and needs no second pass over the stream.  This is the run-side
+evidence a production pipeline pages on: rows per batch, batch
+duration, and whether state (the watermarked dedup's key store) is
+growing without bound.
 """
 
 from __future__ import annotations

@@ -303,8 +303,8 @@ def streaming_hourly_counts(
     ``size(collect_set(user_id))`` — streaming aggregation does not
     support ``countDistinct``, so the per-window state is the user-id
     set itself, bounded by active users per window and evicted with
-    the window (the same exactness trade
-    ``streaming_sliding_active_users`` documents)."""
+    the window.  At very high user cardinality ``approx_count_distinct``
+    swaps in a KB-sized HLL state per window instead."""
     from pyspark.sql import functions as F
 
     aggs = [
@@ -351,62 +351,6 @@ def streaming_session_counts(
             "sum_value",
         )
     )
-
-
-def streaming_sliding_active_users(
-    events: DataFrame, watermark_delay: str = "2 hours"
-) -> DataFrame:
-    """Watermarked SLIDING-window distinct-user counts — the streaming
-    twin of queries.curation.events_sliding_active_users (1-hour window,
-    15-minute slide, exact distinct).
-
-    Exactness trick: streaming aggregation does not support
-    ``countDistinct``, but it does support ``collect_set`` — so the
-    per-window state is the user-id set itself (``size(collect_set)``),
-    bounded by active users per window, evicted when the watermark
-    passes the window end.  At very high user cardinality you'd swap
-    ``approx_count_distinct`` in for a KB-sized HLL state per window
-    (the trade events_user_count_approx already documents); this
-    variant keeps the exact semantics so the batch-equivalence test
-    can assert equality, not closeness."""
-    from pyspark.sql import functions as F
-
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"))
-        .agg(F.size(F.collect_set("user_id")).cast("long").alias("active_users"))
-        .select(
-            F.unix_timestamp(F.col("win.start")).alias("win_start_sec"),
-            "active_users",
-        )
-    )
-
-
-def streaming_interval_join(
-    left_stream: DataFrame,
-    right_stream: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "l_ts",
-    right_ts: str = "r_ts",
-    lookback_seconds: int = 3600,
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: each left event pairs
-    with right events of the same key in ``(l_ts - lookback, l_ts]``.
-    Both sides carry watermarks so the join state is bounded — Spark
-    evicts right rows older than the watermark minus the interval
-    bound; without the time-range condition a stream-stream join would
-    have to buffer both sides forever."""
-    from pyspark.sql import functions as F
-
-    l = left_stream.withWatermark(left_ts, watermark_delay)
-    r = right_stream.withWatermark(right_ts, watermark_delay)
-    return l.join(
-        r,
-        (l[key] == r[key])
-        & (F.col(right_ts) <= F.col(left_ts))
-        & (F.col(right_ts) > F.col(left_ts) - F.expr(f"INTERVAL {lookback_seconds} SECONDS")),
-    ).select(l[key].alias(key), left_ts, right_ts)
 
 
 def maintain_ann_index_each_batch(
@@ -1150,9 +1094,10 @@ def maintain_triangles_each_batch(
     enumeration still runs only on the first batch / nightly build).
 
     Crash safety: the snapshot and the triangle table are written as
-    ``_batch_id``-partitioned SNAPSHOT TIERS via dynamic partition
-    overwrite — a replayed batch rewrites exactly its own tier and
-    reads the latest tier strictly below its id, so a crash between
+    ``_batch_id``-partitioned SNAPSHOT TIERS by ``store.append``, which
+    stages each tier and renames it in — a replayed batch replaces
+    exactly its own tier and reads the latest tier strictly below its
+    id, so a crash between
     the two writes can never double-apply a correction (the swap-pair
     ordering hazard a shared-directory swap would have).  Superseded
     tiers are pruned after the new tier commits; the prune is
@@ -1199,10 +1144,12 @@ def maintain_triangles_each_batch(
                     ST.read_tier(spark, edges_snap_path, prev).select("user_a", "user_b")
                 )
                 tri_old = ST.read_tier(spark, tri_path, prev)
-                # e_old is the previous batch's served view — within
-                # churn of n_edges, far under the 10M ceiling's headroom
+                # the gate covers both legs: the delete leg broadcasts
+                # e_old, which outgrows e_new when a batch shrinks the
+                # view.  The count materializes e_old's cache, which
+                # both diff anti-joins then read.
                 tri_new = G.apply_triangle_delta(
-                    tri_old, e_old, e_new, edge_count=n_edges
+                    tri_old, e_old, e_new, edge_count=max(n_edges, e_old.count())
                 )
             # tri_new is NOT persisted: its single consumer is the tier
             # write, and a .persist() here compiles the wedge/correction
